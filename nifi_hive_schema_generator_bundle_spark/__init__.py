@@ -11,7 +11,7 @@ from .catalog import ddl_per_group, infer_and_register, infer_ddl, register_tabl
 from .operators.infer import (
     infer_schema_df,
     infer_schema_exact,
-    infer_schema_native,
+    route_and_infer,
 )
 from .operators.routing import is_valid_json, split_valid
 from .plans.lattice import (

@@ -42,17 +42,13 @@ def _session(args):
 
 def cmd_infer(args) -> int:
     from .catalog import register_table
-    from .operators.infer import infer_schema_exact, infer_schema_native
+    from .operators.infer import infer_schema_exact
     from .plans.render import render_hive_ddl
 
     spark = _session(args)
     # infer ONCE, then render and (optionally) register from the same
     # schema — rendering and registration are driver-side string work
-    schema = (
-        infer_schema_native(spark, args.input)
-        if args.native
-        else infer_schema_exact(spark, args.input)
-    )
+    schema = infer_schema_exact(spark, args.input)
     print(
         render_hive_ddl(
             schema, args.table, args.location, drop_if_exists=args.drop_if_exists
@@ -1024,7 +1020,6 @@ def main(argv: list[str] | None = None) -> int:
     pi.add_argument("input")
     pi.add_argument("--table", required=True)
     pi.add_argument("--location", required=True)
-    pi.add_argument("--native", action="store_true", help="Spark-native inference (default: reference-exact)")
     pi.add_argument("--register", action="store_true", help="also execute the DDL against the session catalog")
     pi.add_argument("--drop-if-exists", action="store_true")
     pi.set_defaults(fn=cmd_infer)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
-from .operators.infer import infer_schema_df, infer_schema_native
+from .operators.infer import infer_schema_by_key, infer_schema_df, route_and_infer
 from .plans.render import render_hive_ddl, render_spark_ddl
 
 __all__ = ["infer_ddl", "register_table", "infer_and_register", "ddl_per_group", "write_bucketed"]
@@ -31,22 +31,11 @@ def infer_ddl(
     table: str,
     location: str,
     *,
-    exact: bool = True,
     drop_if_exists: bool = False,
 ) -> str:
     """The minimum end-to-end slice (SURVEY §7): NDJSON path → reference
-    lattice schema → reference-format DDL string.
-
-    ``exact=True`` uses the reference-parity fold (first-seen field order,
-    exact conflict rules); ``exact=False`` uses Spark's native inference
-    (name-sorted fields, same end types) — the default at 100 TB.
-    """
-    if exact:
-        from .operators.infer import infer_schema_exact
-
-        schema = infer_schema_exact(spark, path)
-    else:
-        schema = infer_schema_native(spark, path)
+    lattice schema → reference-format DDL string."""
+    schema = infer_schema_df(spark.read.text(path), "value")
     return render_hive_ddl(
         schema, table, location, drop_if_exists=drop_if_exists
     )
@@ -82,25 +71,21 @@ def infer_and_register(
     location: str | None = None,
 ) -> dict:
     """Full pipeline (SURVEY §3 'Spark lifecycle'): scan → route → infer →
-    render → register. Returns counts plus both DDL dialects."""
-    from .operators.routing import split_valid
+    render → register. Returns counts plus both DDL dialects.
 
-    lines = spark.read.text(path)
-    good, bad = split_valid(lines, "value")
-    good = good.cache()
-    schema = infer_schema_df(good, "value")
+    Routing counts and the schema come from one aggregate over one scan
+    (``route_and_infer``); registration is driver-side DDL."""
+    good, bad, schema = route_and_infer(spark.read.text(path), "value")
     loc = location or path
     hive_ddl = render_hive_ddl(schema, table, loc)
     spark_ddl = register_table(spark, schema, table, loc)
-    result = {
+    return {
         "table": table,
-        "good_count": good.count(),
-        "bad_count": bad.count(),
+        "good_count": good,
+        "bad_count": bad,
         "hive_ddl": hive_ddl,
         "spark_ddl": spark_ddl,
     }
-    good.unpersist()
-    return result
 
 
 def ddl_per_group(
@@ -112,13 +97,11 @@ def ddl_per_group(
     """One DDL per distinct routing value — the EL ``${destination.table.
     name}`` pattern distributed.
 
-    Single pass, zero shuffle: each partition folds a key → partial-schema
-    dict (``infer_schema_by_key``); the driver merges ≤ partitions × keys
-    serialized trees. The earlier per-table ``filter`` loop re-scanned the
-    input once per distinct table — O(T) scans vs this one.
+    Single pass: one ``groupBy(table).agg`` job (``infer_schema_by_key``)
+    whose shuffle carries ≤ partitions × tables partial schemas. The
+    earlier per-table ``filter`` loop re-scanned the input once per
+    distinct table — O(T) scans vs this one.
     """
-    from .operators.infer import infer_schema_by_key
-
     schemas = infer_schema_by_key(df, json_col, table_col)
     # a NULL routing value cannot name a table — those rows are the
     # caller's quarantine problem (split_valid upstream), not a DDL group

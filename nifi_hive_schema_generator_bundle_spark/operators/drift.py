@@ -4,15 +4,16 @@ The reference infers ONE schema per flowfile (CreateHQL.scala:12-20);
 a production pipeline wants the per-source/per-day view: which fields
 does this partition add, miss, or type-conflict relative to the corpus?
 ``schema_drift_report`` reuses the engine's keyed reference-lattice
-inference (operators.infer.infer_schema_by_key — one scan, zero
-shuffle, per-partition keyed fold) and diffs every group's top-level
-fields against the merge of all groups.
+inference (operators.infer.infer_schema_by_key — one scan, one
+``groupBy`` aggregate whose shuffle carries only per-partition partial
+schemas) and diffs every group's top-level fields against the merge of
+all groups.
 
 Type classes are the lattice universe at the top level: STRUCT (JSON
 object), ARRAY, STRING (every scalar, every conflict — the demotion rule
 of CreateHQL.scala:63-64); JSON null absorbs (an all-null field renders
 STRING). The report is driver-built from the tiny per-group schema trees
-— the data path never shuffles, bodies never leave executors.
+— record bodies never leave executors.
 """
 
 from __future__ import annotations

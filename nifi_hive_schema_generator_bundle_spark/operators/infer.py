@@ -1,156 +1,200 @@
 """Distributed schema inference (SURVEY §2 O5/O6/O7/O8).
 
-Two execution paths over the same lattice semantics:
+One implementation, one JVM aggregate: ``schema_of_variant_agg`` over
+``try_parse_json`` of exactly the lines ``routing.is_valid_json`` accepts.
+Spark merges the per-record variant schemas associatively (partial
+aggregates per partition, one tiny final merge), and the returned schema
+string is parsed into the reference lattice (``plans.lattice``):
 
-* **native** (the 100 TB default): ``spark.read.option("primitivesAsString",
-  "true").json(...)`` — Spark's built-in distributed JSON inference is the
-  same shape as the reference fold (per-record infer + associative
-  ``compatibleType`` merge with a ``StringType`` conflict fallback), runs
-  entirely JVM-side, and scales linearly with executors. The result is
-  post-canonicalized into the lattice universe (NullType→String handled by
-  ``finalize_type`` at render time; Spark sorts struct fields by name —
-  order differences are accepted per SURVEY §1.4 rule 6).
+* ``OBJECT<…>`` → struct (key union; Spark emits keys name-sorted)
+* ``ARRAY<…>``  → array of the merged element
+* ``VOID`` (or a NULL aggregate) → lattice bottom
+* every scalar and every ``VARIANT`` conflict → STRING
 
-* **exact** (reference-parity): per-partition fold of the pure-Python
-  lattice merge via ``mapInPandas`` — each Arrow batch is collapsed to ONE
-  serialized partial schema row, so at most ``numPartitions`` tiny rows
-  cross the executor→driver boundary (combiner-style, **no shuffle**).
-  This preserves first-seen field order and the exact conflict rules.
-  It pays one Python parse per record, so it's the differential-testing /
-  golden-parity path, not the default at scale.
+The map is exact because STRING is the lattice top for everything but
+bottom: Spark only widens scalars among themselves or gives up to VARIANT
+on an object/array/scalar mix, and the lattice sends both to STRING.
 
-Both paths are single-scan; there is no whole-content buffering anywhere
-(the reference's ``IOUtils.toString`` double-read at
-HiveSchemaGenerator.scala:75,98,116 is fixed by design — SURVEY §4).
+The same ``select`` also counts valid and invalid lines, so a routed
+inference is one Spark job (``route_and_infer``). Struct fields come out
+name-sorted; correctness tests compare order-insensitively (SURVEY §1.4
+rule 6).
+
+There is no whole-content buffering anywhere (the reference's
+``IOUtils.toString`` double-read at HiveSchemaGenerator.scala:75,98,116 is
+fixed by design — SURVEY §4).
 """
 
 from __future__ import annotations
 
-import json
-from typing import Iterator
+import re
+from typing import Any, NamedTuple
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
-from ..plans.lattice import infer_raw, merge_raw, merge_types, type_from_dict
+from ..plans.lattice import merge_types, type_from_dict
+from .routing import is_valid_json
 
-__all__ = ["infer_schema_native", "infer_schema_exact", "infer_schema_df"]
+__all__ = [
+    "Inferred",
+    "infer_schema_by_key",
+    "infer_schema_df",
+    "infer_schema_exact",
+    "parse_variant_schema",
+    "route_and_infer",
+]
 
 
-def infer_schema_native(
-    spark: SparkSession, path: str, *, primitives_as_string: bool = True
-) -> StructType:
-    """Built-in distributed inference over NDJSON file(s) at ``path``.
+class Inferred(NamedTuple):
+    """Routing counts and the lattice schema from one aggregate."""
 
-    ``primitivesAsString=true`` maps every scalar to STRING, matching the
-    reference lattice's scalar rule; conflicts fall back to StringType in
-    Spark's ``compatibleType`` just like CreateHQL.scala:63-64.
+    good: int
+    bad: int
+    schema: DataType
+
+
+# --- Spark schema string → raw lattice shape -------------------------------
+
+_SCALAR = re.compile(r"[A-Z_0-9]+(\([0-9, ]*\))?")
+
+
+def parse_variant_schema(text: str | None) -> Any:
+    """Parse a ``schema_of_variant_agg`` string into a raw lattice shape
+    (``None | "s" | [elem] | {name: shape}``, see ``plans.lattice``).
+
+    Recursive descent, no textual rewriting: keys may come back
+    backtick-quoted with doubled backticks, may be empty or look like
+    type syntax (a key named ``OBJECT<``), and ``DECIMAL(p,s)`` contains
+    a comma, so only a real parser splits fields correctly.
     """
-    reader = spark.read.option("primitivesAsString", str(primitives_as_string).lower())
-    return reader.json(path).schema
+    if text is None:
+        return None
+    shape, end = _parse_type(text, 0)
+    if end != len(text):
+        raise ValueError(f"trailing input at {end} in {text!r}")
+    return shape
 
 
-def _fold_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Collapse every Arrow batch of JSON lines into one partial-schema row.
+def _expect(text: str, i: int, token: str) -> int:
+    if not text.startswith(token, i):
+        raise ValueError(f"expected {token!r} at {i} in {text!r}")
+    return i + len(token)
 
-    Folds in the raw-shape lattice (plain dict/list/str) — pyspark type
-    objects never appear in the per-record loop (~10× faster; see
-    lattice.infer_raw)."""
-    loads = json.loads
-    schema = _SENTINEL = object()
-    for pdf in batches:
-        for line in pdf.iloc[:, 0]:
-            if line is None or line == "":
-                continue
-            try:
-                t = infer_raw(loads(line))
-            except ValueError:
-                continue  # malformed rows are routed by operators.routing, not here
-            schema = t if schema is _SENTINEL else merge_raw(schema, t)
-    if schema is not _SENTINEL:
-        yield pd.DataFrame({"part": [json.dumps(schema)]})
+
+def _parse_type(text: str, i: int) -> tuple[Any, int]:
+    if text.startswith("OBJECT<", i):
+        i += len("OBJECT<")
+        fields: dict[str, Any] = {}
+        if text.startswith(">", i):
+            return fields, i + 1
+        while True:
+            name, i = _parse_name(text, i)
+            fields[name], i = _parse_type(text, _expect(text, i, ": "))
+            if not text.startswith(", ", i):
+                return fields, _expect(text, i, ">")
+            i += 2
+    if text.startswith("ARRAY<", i):
+        elem, i = _parse_type(text, i + len("ARRAY<"))
+        return [elem], _expect(text, i, ">")
+    m = _SCALAR.match(text, i)
+    if m is None:
+        raise ValueError(f"expected a type at {i} in {text!r}")
+    return (None if m.group() == "VOID" else "s"), m.end()
+
+
+def _parse_name(text: str, i: int) -> tuple[str, int]:
+    if not text.startswith("`", i):
+        end = text.index(":", i)  # unquoted names are plain identifiers
+        return text[i:end], end
+    parts = []
+    i += 1
+    while True:
+        end = text.index("`", i)
+        parts.append(text[i:end])
+        if not text.startswith("``", end):
+            return "".join(parts), end + 1
+        parts.append("`")
+        i = end + 2
+
+
+# --- the aggregate ----------------------------------------------------------
+
+def _shape_agg(value: Column, valid: Column) -> Column:
+    return F.schema_of_variant_agg(F.when(valid, F.try_parse_json(value)))
+
+
+def _collect_case_sensitive(df: DataFrame) -> list[Row]:
+    """``df.collect()`` with ``spark.sql.caseSensitive=true``.
+
+    Spark's variant-schema merge reads the conf when the job runs and,
+    case-insensitively, may fold ``a`` and ``A`` into one field depending
+    on row order; the reference keeps both. The caller's session conf is
+    shared with other threads, so the analyzed plan runs in a clone of
+    the session instead of flipping the caller's conf.
+    """
+    spark = df.sparkSession
+    child = spark._jsparkSession.cloneSession()
+    child.conf().set("spark.sql.caseSensitive", "true")
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        child, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, spark).collect()
+
+
+def route_and_infer(df: DataFrame, column: str = "value") -> Inferred:
+    """Valid count, invalid count and the lattice schema of ``column`` in
+    ONE Spark job (scan → partial aggregate per partition → final merge).
+
+    Lines are valid exactly when ``is_valid_json`` says so; only valid
+    lines reach the fold. The fold starts from the empty struct like
+    ``CreateHQL.scala:12``: no valid line gives the empty struct, and
+    top-level arrays demote to STRING (rendered ``"ERROR"``).
+    """
+    value = F.col(column).cast("string")
+    valid = is_valid_json(value)
+    (row,) = _collect_case_sensitive(
+        df.select(
+            F.count_if(valid), F.count_if(~valid), _shape_agg(value, valid)
+        )
+    )
+    parsed = type_from_dict(parse_variant_schema(row[2]))
+    return Inferred(row[0], row[1], merge_types(StructType([]), parsed))
 
 
 def infer_schema_df(df: DataFrame, column: str = "value") -> DataType:
-    """Reference-exact inference over a DataFrame's JSON-string column.
-
-    Plan shape: scan → mapInPandas (per-partition fold → 1 row each) →
-    driver merge of ≤ numPartitions partials. No shuffle, no collect of
-    data rows; the driver sees only serialized schema trees.
-    """
-    from ..functions.partitioning import ensure_min_partitions
-
-    partials = (
-        ensure_min_partitions(
-            df.select(F.col(column).cast("string").alias("value"))
-        )
-        .mapInPandas(_fold_batches, schema="part string")
-        .collect()
-    )
-    schema: DataType = StructType([])
-    for row in partials:
-        schema = merge_types(schema, type_from_dict(json.loads(row["part"])))
-    return schema
+    """Reference-lattice inference over a DataFrame's JSON-string column."""
+    return route_and_infer(df, column).schema
 
 
 def infer_schema_exact(spark: SparkSession, path: str) -> DataType:
-    """Reference-exact inference over NDJSON file(s): one text scan
-    (``spark.read.text`` splits lines for free) + the partial-fold plan."""
+    """Reference-lattice inference over NDJSON file(s): one text scan
+    (``spark.read.text`` splits lines for free) plus the aggregate."""
     return infer_schema_df(spark.read.text(path), "value")
-
-
-def _fold_batches_keyed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Keyed variant of ``_fold_batches``: one partial schema per
-    (partition, key) instead of per partition."""
-    loads = json.loads
-    schemas: dict = {}
-    for pdf in batches:
-        for key, line in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-            if line is None or line == "":
-                continue
-            try:
-                t = infer_raw(loads(line))
-            except ValueError:
-                continue
-            prev = schemas.get(key)
-            schemas[key] = t if key not in schemas else merge_raw(prev, t)
-    if schemas:
-        yield pd.DataFrame(
-            {
-                "key": list(schemas.keys()),
-                "part": [json.dumps(v) for v in schemas.values()],
-            }
-        )
 
 
 def infer_schema_by_key(
     df: DataFrame, json_col: str, key_col: str
 ) -> dict[str, DataType]:
-    """Reference-exact inference per routing key in ONE pass.
+    """Reference-lattice inference per routing key in ONE job:
+    ``groupBy(key).agg(schema_of_variant_agg(...))``. Each partition
+    pre-aggregates one partial schema per key, so the shuffle carries
+    ``partitions × keys`` tiny rows, never records.
 
-    Plan shape: scan → mapInPandas (per-partition dict of key → partial
-    schema, ≤ |keys| rows out per partition) → driver merge. No shuffle
-    at all — the per-key fold happens inside each partition and the
-    driver sees ``partitions × keys`` tiny serialized trees, never rows.
-    The key cardinality is assumed driver-small (it is a DDL list)."""
-    from ..functions.partitioning import ensure_min_partitions
-
-    partials = (
-        ensure_min_partitions(
-            df.select(
-                F.col(key_col).cast("string").alias("key"),
-                F.col(json_col).cast("string").alias("value"),
-            )
+    There is no empty-struct seed per key: a key whose rows are
+    top-level arrays keeps its ARRAY type, and a key with no valid line
+    is absent. A NULL key is kept as ``None``.
+    """
+    value = F.col(json_col).cast("string")
+    rows = _collect_case_sensitive(
+        df.groupBy(F.col(key_col).cast("string").alias("key")).agg(
+            _shape_agg(value, is_valid_json(value)).alias("shape")
         )
-        .mapInPandas(_fold_batches_keyed, schema="key string, part string")
-        .collect()
     )
     out: dict[str, DataType] = {}
-    for row in partials:
-        t = type_from_dict(json.loads(row["part"]))
-        out[row["key"]] = (
-            merge_types(out[row["key"]], t) if row["key"] in out else t
-        )
+    for key, text in rows:
+        shape = parse_variant_schema(text)
+        if shape is not None:
+            out[key] = type_from_dict(shape)
     return out

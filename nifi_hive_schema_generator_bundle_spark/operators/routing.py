@@ -42,9 +42,13 @@ class RoutedFrames(NamedTuple):
 
 def is_valid_json(col: Column | str) -> Column:
     """True iff the value parses as JSON *and* the first value is an object
-    or array (org.json parity — HiveSchemaGenerator.scala:80,85)."""
+    or array (org.json parity — HiveSchemaGenerator.scala:80,85).
+
+    The first-character check skips all JSON whitespace (space, tab, LF,
+    CR), as ``try_parse_json`` does; org.json's ``nextClean`` skips those
+    too."""
     c = F.col(col) if isinstance(col, str) else col
-    first = F.substring(F.ltrim(c), 1, 1)
+    first = F.regexp_extract(c, r"^[ \t\n\r]*(.)", 1)
     return (
         c.isNotNull()
         & F.try_parse_json(c).isNotNull()

@@ -2,7 +2,9 @@
 
 Re-expresses the reference's schema-inference semantics
 (``CreateHQL.scala:38-66`` — ``prepare`` + ``merge``) over
-:mod:`pyspark.sql.types` objects instead of a value-as-type JSON encoding.
+:mod:`pyspark.sql.types` objects, and over their raw shapes
+(``None | "s" | [elem] | {name: shape}``), instead of a value-as-type JSON
+encoding.
 
 The inferred type universe is deliberately tiny (SURVEY §1.3):
 
@@ -14,15 +16,20 @@ The inferred type universe is deliberately tiny (SURVEY §1.3):
 
 ``merge`` is commutative and associative, which is what makes the fold
 distributable: per-partition partial merges combine into a final schema
-with no shuffle (combiner-style aggregation).
+(combiner-style aggregation; ``operators.infer`` runs it as one Spark
+aggregate).
 
-Lattice rules (SURVEY §1.4; each has a unit test):
+Lattice rules (SURVEY §1.4; each has a unit test), written once, over
+raw shapes, in ``infer_raw``/``merge_raw``:
 
 1. ``merge(NULL, x) = x``; ``merge(x, NULL) = x``      (CreateHQL.scala:53-54)
 2. ``merge(ARRAY[a], ARRAY[b]) = ARRAY[merge(a, b)]``  (CreateHQL.scala:55)
 3. ``merge(OBJ a, OBJ b)`` = key-union; shared keys merged recursively
    (CreateHQL.scala:57-61)
 4. any other pair → ``STRING``                         (CreateHQL.scala:63-64)
+
+The typed forms (``infer_json_value``, ``merge_types``) are conversions
+over the raw ones through ``type_to_dict``/``type_from_dict``.
 
 Array normalization (``prepare``, CreateHQL.scala:38-48) happens at
 *inference* time here: a JSON array's elements are folded with ``merge``
@@ -31,8 +38,9 @@ starting from ``NullType`` — so ``[]`` infers ``ARRAY<NULL>`` (renders
 hit the conflict rule, exactly as the reference's catch-all does).
 
 Column order: the reference scrambles struct key order through a Scala
-hash map (CreateHQL.scala:58-61 — effectively unspecified). We canonicalize
-to *first-seen* order, documented as an improvement; correctness tests
+hash map (CreateHQL.scala:58-61 — effectively unspecified). The
+distributed engine (``operators.infer``) returns fields *name-sorted*;
+the single-threaded fold here keeps first-seen order. Correctness tests
 compare order-insensitively.
 """
 
@@ -66,27 +74,46 @@ __all__ = [
 BOTTOM: DataType = NullType()
 
 
-def infer_json_value(value: Any) -> DataType:
-    """Map one parsed JSON value to its lattice type.
-
-    Mirrors the per-record half of ``CreateHQL.merge`` + ``prepare``:
-    scalars → STRING, ``null`` → bottom, arrays collapse their elements
-    to a single representative via the merge fold, objects keep key order
-    (first-seen; ``json.loads`` preserves insertion order).
-    """
+def infer_raw(value: Any) -> Any:
+    """Map one parsed JSON value to its raw lattice shape: ``null`` →
+    bottom (``None``), scalar → ``"s"``, array → ``[merged elements]``,
+    object → ``{key: shape}`` in key order."""
     if value is None:
-        return NullType()
+        return None
     if isinstance(value, dict):
-        return StructType(
-            [StructField(k, infer_json_value(v), True) for k, v in value.items()]
-        )
+        return {k: infer_raw(v) for k, v in value.items()}
     if isinstance(value, (list, tuple)):
-        elem: DataType = NullType()
+        elem: Any = None
         for item in value:
-            elem = merge_types(elem, infer_json_value(item))
-        return ArrayType(elem, True)
+            elem = merge_raw(elem, infer_raw(item))
+        return [elem]
     # string / int / float / bool — every scalar is STRING (CreateHQL.scala:64,81)
-    return StringType()
+    return "s"
+
+
+def merge_raw(a: Any, b: Any) -> Any:
+    """The commutative join operator (CreateHQL.scala:50-66) over raw
+    shapes."""
+    if a is None:
+        return b
+    if b is None:
+        return a
+    if isinstance(a, list) and isinstance(b, list):
+        return [merge_raw(a[0], b[0])]
+    if isinstance(a, dict) and isinstance(b, dict):
+        out = dict(a)
+        for k, v in b.items():
+            out[k] = merge_raw(out[k], v) if k in out else v
+        return out
+    # "If there is a mismatch, always return string" (CreateHQL.scala:63-64).
+    # Total — never raises; the reference's RowMismatch/InconsistentArray
+    # error paths are unreachable dead code (SURVEY §1.4 rule 7).
+    return "s"
+
+
+def infer_json_value(value: Any) -> DataType:
+    """``infer_raw`` as a :mod:`pyspark.sql.types` lattice type."""
+    return type_from_dict(infer_raw(value))
 
 
 def infer_json_line(line: str) -> DataType:
@@ -99,33 +126,8 @@ def infer_json_line(line: str) -> DataType:
 
 
 def merge_types(a: DataType, b: DataType) -> DataType:
-    """The commutative join operator (CreateHQL.scala:50-66)."""
-    if isinstance(a, NullType):
-        return b
-    if isinstance(b, NullType):
-        return a
-    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
-        return ArrayType(merge_types(a.elementType, b.elementType), True)
-    if isinstance(a, StructType) and isinstance(b, StructType):
-        fields: list[StructField] = []
-        index: dict[str, int] = {}
-        for f in a.fields:
-            index[f.name] = len(fields)
-            fields.append(f)
-        for f in b.fields:
-            i = index.get(f.name)
-            if i is None:
-                index[f.name] = len(fields)
-                fields.append(f)
-            else:
-                fields[i] = StructField(
-                    f.name, merge_types(fields[i].dataType, f.dataType), True
-                )
-        return StructType(fields)
-    # "If there is a mismatch, always return string" (CreateHQL.scala:63-64).
-    # Total — never raises; the reference's RowMismatch/InconsistentArray
-    # error paths are unreachable dead code (SURVEY §1.4 rule 7).
-    return StringType()
+    """``merge_raw`` over :mod:`pyspark.sql.types` lattice types."""
+    return type_from_dict(merge_raw(type_to_dict(a), type_to_dict(b)))
 
 
 def schema_from_json_lines(lines) -> DataType:
@@ -133,15 +135,15 @@ def schema_from_json_lines(lines) -> DataType:
 
     Starts from an empty STRUCT like ``CreateHQL.scala:12`` (``Json.obj()``),
     so top-level-array content degrades to STRING — which the renderer
-    reports as the reference's ``"ERROR"`` definition. Used by unit tests
-    and the single-node baseline; the distributed path is
-    ``operators.infer``.
+    reports as the reference's ``"ERROR"`` definition. It folds raw shapes
+    and converts once at the end. Used as the test oracle and by the
+    single-node baseline; the distributed path is ``operators.infer``.
     """
-    schema: DataType = StructType([])
+    schema: Any = {}
     for line in lines:
         if line:
-            schema = merge_types(schema, infer_json_line(line))
-    return schema
+            schema = merge_raw(schema, infer_raw(json.loads(line)))
+    return type_from_dict(schema)
 
 
 def finalize_type(dt: DataType) -> DataType:
@@ -163,46 +165,7 @@ def finalize_type(dt: DataType) -> DataType:
     return dt
 
 
-# --- raw-shape lattice (executor hot path) --------------------------------
-#
-# The exact-inference fold runs once per record on executors; building
-# pyspark.sql.types objects there is ~10× slower than folding over the
-# plain shapes the ser/de below already uses (None | "s" | [elem] |
-# {name: shape}). The typed and raw forms are kept in lockstep —
-# ``type_to_dict(infer_json_value(v)) == infer_raw(v)`` by construction
-# (property-tested in test_lattice).
-
-def infer_raw(value: Any) -> Any:
-    """``infer_json_value`` over raw shapes (executor hot path)."""
-    if value is None:
-        return None
-    if isinstance(value, dict):
-        return {k: infer_raw(v) for k, v in value.items()}
-    if isinstance(value, (list, tuple)):
-        elem: Any = None
-        for item in value:
-            elem = merge_raw(elem, infer_raw(item))
-        return [elem]
-    return "s"
-
-
-def merge_raw(a: Any, b: Any) -> Any:
-    """``merge_types`` over raw shapes (executor hot path)."""
-    if a is None:
-        return b
-    if b is None:
-        return a
-    if isinstance(a, list) and isinstance(b, list):
-        return [merge_raw(a[0], b[0])]
-    if isinstance(a, dict) and isinstance(b, dict):
-        out = dict(a)
-        for k, v in b.items():
-            out[k] = merge_raw(out[k], v) if k in out else v
-        return out
-    return "s"
-
-
-# --- compact ser/de so executors can ship partial schemas to the driver ---
+# --- ser/de between typed and raw shapes ----------------------------------
 
 def type_to_dict(dt: DataType) -> Any:
     """Serialize a lattice type to a JSON-able tree (compact, stable)."""

@@ -5348,7 +5348,7 @@ def doc_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def props_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group schema drift over a JSON column (operators/drift.
     schema_drift_report, built on the keyed reference-lattice inference
-    of operators/infer.infer_schema_by_key — one scan, zero shuffle).
+    of operators/infer.infer_schema_by_key — one scan, one aggregate).
     The payload derives deterministically from events so every drift
     class appears: purchase nests `amount` (STRUCT), click wraps it in
     an array (ARRAY), signup omits it (absent), error/view keep it

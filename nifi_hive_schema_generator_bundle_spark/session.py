@@ -21,8 +21,9 @@ __all__ = ["get_session", "ship_package"]
 def ship_package(spark: SparkSession) -> None:
     """Distribute this package to executor Python workers.
 
-    Closures on the exact-inference path (``mapInPandas`` partial folds)
-    reference package modules by name, so every executor needs the package
+    Schema inference runs entirely in the JVM and does not need it, but
+    operators whose Python UDFs or ``mapInPandas`` closures reference
+    package modules by name do, so every executor needs the package
     importable. On a real cluster this is the ``--py-files`` deployment
     story; doing it programmatically keeps ``spark-submit`` invocations
     flag-free. Idempotent per session.

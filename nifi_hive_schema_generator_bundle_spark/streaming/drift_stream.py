@@ -3,7 +3,7 @@
 The batch ``operators.drift.schema_drift_report`` answers "how do my
 sources differ right now"; this is its streaming twin: per micro-batch,
 fold each group's records into a driver-held schema (the keyed
-zero-shuffle lattice fold of ``infer_schema_by_key``) and emit an event
+one-aggregate lattice inference of ``infer_schema_by_key``) and emit an event
 whenever a group gains a field, loses parity, or demotes a type — the
 signal a 100 TB ingest pipeline alerts on before a bad producer poisons
 a day of data.

@@ -7,10 +7,11 @@ Design (SURVEY §7 step 5): the accumulated schema lives on the DRIVER
 across batches — merge state is a tiny type tree, not row state, so no
 stateful operator / watermark machinery is needed for parity. Each batch:
 
-1. route per-record valid/invalid (quarantine sink optional)
-2. exact-lattice inference on the batch (no-shuffle partial folds)
-3. ``merge_types`` into the accumulated schema
-4. on drift (schema changed): re-render DDL, invoke ``on_drift`` —
+1. one aggregate over the batch: valid/invalid counts plus the lattice
+   schema of the valid records (``route_and_infer``); invalid lines are
+   written to the quarantine sink when one is set and there are any
+2. ``merge_types`` into the accumulated schema
+3. on drift (schema changed): re-render DDL, invoke ``on_drift`` —
    the ALTER TABLE / re-register hook
 
 ``run_inference_stream`` wires a file-source stream; ``InferenceState`` is
@@ -25,7 +26,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
 
-from ..operators.infer import infer_schema_df
+# ``infer_schema_df`` stays a module attribute: perfbench/spans.py wraps it.
+from ..operators.infer import infer_schema_df, route_and_infer  # noqa: F401
 from ..operators.routing import split_valid
 from ..plans.lattice import merge_types, type_to_dict
 from ..plans.render import render_alter_ddl, render_hive_ddl
@@ -50,48 +52,39 @@ class InferenceState:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches += 1
-        good, bad = split_valid(batch_df, "value")
-        good = good.cache()
-        try:
-            if self.quarantine_path is not None:
-                bad_count = bad.cache().count()
-                if bad_count:
-                    bad.write.mode("append").text(self.quarantine_path)
-                self.bad_rows += bad_count
-                bad.unpersist()
-            else:
-                self.bad_rows += bad.count()
-            n_good = good.count()
-            self.good_rows += n_good
-            if n_good == 0:
-                return  # null-input guard (SURVEY §2 O16)
-            batch_schema = infer_schema_df(good, "value")
-            before = type_to_dict(self.schema)
-            merged = merge_types(self.schema, batch_schema)
-            if type_to_dict(merged) != before:
-                old = self.schema
-                # drift from the empty initial schema IS the table creation
-                # — an ALTER restating the CREATE's columns would be
-                # redundant (and invalid: the table doesn't exist yet). A
-                # resumed state pre-seeded with a prior schema still emits
-                # ALTERs, so the empty-schema test is the right signal,
-                # not ddl_history emptiness.
-                is_creation = isinstance(old, StructType) and not old.fields
-                self.schema = merged
-                ddl = render_hive_ddl(
-                    merged, self.table, self.location, drop_if_exists=True
+        good, bad, batch_schema = route_and_infer(batch_df, "value")
+        if bad and self.quarantine_path is not None:
+            split_valid(batch_df, "value").failure.write.mode("append").text(
+                self.quarantine_path
+            )
+        self.good_rows += good
+        self.bad_rows += bad
+        if good == 0:
+            return  # null-input guard (SURVEY §2 O16)
+        before = type_to_dict(self.schema)
+        merged = merge_types(self.schema, batch_schema)
+        if type_to_dict(merged) != before:
+            old = self.schema
+            # drift from the empty initial schema IS the table creation
+            # — an ALTER restating the CREATE's columns would be
+            # redundant (and invalid: the table doesn't exist yet). A
+            # resumed state pre-seeded with a prior schema still emits
+            # ALTERs, so the empty-schema test is the right signal,
+            # not ddl_history emptiness.
+            is_creation = isinstance(old, StructType) and not old.fields
+            self.schema = merged
+            ddl = render_hive_ddl(
+                merged, self.table, self.location, drop_if_exists=True
+            )
+            self.ddl_history.append(ddl)
+            # incremental path: evolve the live table in place instead
+            # of re-creating it (SURVEY §7 step 5 - ALTER on drift)
+            if not is_creation:
+                self.alter_history.extend(
+                    render_alter_ddl(old, merged, self.table)
                 )
-                self.ddl_history.append(ddl)
-                # incremental path: evolve the live table in place instead
-                # of re-creating it (SURVEY §7 step 5 - ALTER on drift)
-                if not is_creation:
-                    self.alter_history.extend(
-                        render_alter_ddl(old, merged, self.table)
-                    )
-                if self.on_drift is not None:
-                    self.on_drift(ddl, merged)
-        finally:
-            good.unpersist()
+            if self.on_drift is not None:
+                self.on_drift(ddl, merged)
 
     @property
     def current_ddl(self) -> str | None:

@@ -1,5 +1,6 @@
-"""Distributed inference tests: reference-exact path vs native path
-(SURVEY §5d differential test), end-to-end DDL on the provenance fixture."""
+"""Distributed inference tests: the one-aggregate engine path against the
+single-threaded fold (SURVEY §5d differential test), end-to-end DDL on
+the provenance fixture."""
 
 from __future__ import annotations
 
@@ -11,8 +12,8 @@ from pyspark.sql.types import ArrayType, StringType, StructType
 from nifi_hive_schema_generator_bundle_spark.catalog import infer_and_register, infer_ddl
 from nifi_hive_schema_generator_bundle_spark.operators.infer import (
     infer_schema_df,
+    infer_schema_by_key,
     infer_schema_exact,
-    infer_schema_native,
 )
 from nifi_hive_schema_generator_bundle_spark.plans.lattice import (
     finalize_type,
@@ -45,12 +46,6 @@ def test_exact_is_partition_count_invariant(spark):
     df1 = spark.read.text(FIXTURE).repartition(1)
     df7 = spark.read.text(FIXTURE).repartition(7)
     assert canon(infer_schema_df(df1, "value")) == canon(infer_schema_df(df7, "value"))
-
-
-def test_native_agrees_with_exact_on_fixture(spark):
-    exact = infer_schema_exact(spark, FIXTURE)
-    native = infer_schema_native(spark, FIXTURE)
-    assert canon(native) == canon(exact)
 
 
 def test_fixture_key_types(spark):
@@ -105,10 +100,6 @@ def test_top_level_array_file_yields_error_definition(spark, tmp_path):
 def test_infer_schema_by_key_single_pass(spark):
     from pyspark.sql.types import ArrayType, StringType, StructType
 
-    from nifi_hive_schema_generator_bundle_spark.operators.infer import (
-        infer_schema_by_key,
-    )
-
     rows = [
         ("t_a", '{"x": 1}'),
         ("t_a", '{"x": [2], "y": "s"}'),   # x conflicts within t_a -> STRING
@@ -149,3 +140,23 @@ def test_empty_input_yields_no_column_ddl(spark, tmp_path):
     assert "CREATE EXTERNAL TABLE t_empty (" in ddl
     body = ddl.split("t_empty (")[1].split(") ROW FORMAT")[0]
     assert body.strip() == ""
+
+
+def test_case_pairs_keep_both_fields(spark):
+    """Keys differing only in case are distinct fields, as in the reference
+    fold, even in a session that sets ``spark.sql.caseSensitive=false``
+    explicitly (Spark's variant-schema merge would otherwise fold ``a``
+    and ``A`` together depending on row order); the caller's conf is left
+    as it was."""
+    lines = ['{"a": 1}', '{"A": 2}'] * 4
+    df = spark.createDataFrame([("k", x) for x in lines], "k string, value string")
+    df = df.repartition(3)
+    key = "spark.sql.caseSensitive"
+    spark.conf.set(key, "false")
+    try:
+        assert sorted(infer_schema_df(df, "value").fieldNames()) == ["A", "a"]
+        by_key = infer_schema_by_key(df, "value", "k")
+        assert sorted(by_key["k"].fieldNames()) == ["A", "a"]
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.unset(key)

@@ -41,6 +41,14 @@ def test_bare_scalar_is_invalid(spark):
     assert good == [] and sorted(bad) == sorted(["5", '"str"', "true"])
 
 
+def test_leading_tab_or_cr_before_object_is_valid(spark):
+    # JSON whitespace before the first value is skipped, as try_parse_json
+    # and org.json's nextClean do
+    lines = ['\t{"a": 1}', '\r{"a": 1}', '\r\n\t [1]']
+    good, bad = routed(spark, lines)
+    assert good == sorted(lines) and bad == []
+
+
 def test_null_and_empty_are_invalid(spark):
     good, bad = routed(spark, ["", "   "])
     assert good == []
