@@ -8,11 +8,7 @@ multimodal columns) designed for 100 TB scale.
 """
 
 from .catalog import ddl_per_group, infer_and_register, infer_ddl, register_table
-from .operators.infer import (
-    infer_schema_df,
-    infer_schema_exact,
-    route_and_infer,
-)
+from .operators.infer import infer_schema_df, route_and_infer
 from .operators.routing import is_valid_json, split_valid
 from .plans.lattice import (
     finalize_type,

@@ -42,13 +42,13 @@ def _session(args):
 
 def cmd_infer(args) -> int:
     from .catalog import register_table
-    from .operators.infer import infer_schema_exact
+    from .operators.infer import infer_schema_df
     from .plans.render import render_hive_ddl
 
     spark = _session(args)
     # infer ONCE, then render and (optionally) register from the same
     # schema — rendering and registration are driver-side string work
-    schema = infer_schema_exact(spark, args.input)
+    schema = infer_schema_df(spark.read.text(args.input))
     print(
         render_hive_ddl(
             schema, args.table, args.location, drop_if_exists=args.drop_if_exists

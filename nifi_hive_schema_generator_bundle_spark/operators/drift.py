@@ -32,12 +32,18 @@ __all__ = [
 ]
 
 
-def _type_class(t: DataType) -> str:
-    if isinstance(t, StructType):
-        return "STRUCT"
-    if isinstance(t, ArrayType):
-        return "ARRAY"
-    return "STRING"  # scalars, NullType (all-null renders STRING)
+def field_classes(t: DataType) -> dict[str, str]:
+    """Top-level field → lattice class: STRUCT, ARRAY or STRING (scalars,
+    conflicts and NullType, since an all-null field renders STRING). A
+    non-object schema has no fields."""
+    if not isinstance(t, StructType):
+        return {}
+    return {
+        f.name: "STRUCT" if isinstance(f.dataType, StructType)
+        else "ARRAY" if isinstance(f.dataType, ArrayType)
+        else "STRING"
+        for f in t.fields
+    }
 
 
 def schema_drift_report(
@@ -63,32 +69,22 @@ def schema_drift_report(
             "group_key string, field string, group_class string, "
             "global_class string, drift string",
         )
-    # Global view = FIELD-WISE merge over the groups whose root is an
-    # object. A strict whole-root merge would let one non-object group
-    # demote the entire corpus schema to STRING (the reference's "ERROR"
-    # case) and erase the field-level report — the report instead keeps
-    # field resolution and shows such groups as all-'absent'. Field-wise
-    # merge_types still applies the full conflict lattice per field, and
-    # matches a per-record class derivation (merge is associative).
-    merged_fields: dict[str, DataType] = {}
+    # Global view = merge over the groups whose root is an object only. A
+    # merge over every group would let one non-object group demote the
+    # entire corpus schema to STRING (the reference's "ERROR" case) and
+    # erase the field-level report — the report instead keeps field
+    # resolution and shows such groups as all-'absent'. Merging structs
+    # applies the full conflict lattice per field, and matches a
+    # per-record class derivation (merge is associative).
+    merged: DataType = StructType([])
     for t in per_key.values():
         if isinstance(t, StructType):
-            for f in t.fields:
-                merged_fields[f.name] = (
-                    merge_types(merged_fields[f.name], f.dataType)
-                    if f.name in merged_fields
-                    else f.dataType
-                )
-    global_fields = {n: _type_class(t) for n, t in merged_fields.items()}
+            merged = merge_types(merged, t)
+    global_fields = field_classes(merged)
 
     rows = []
     for key in sorted(per_key):
-        schema = per_key[key]
-        group_fields = (
-            {f.name: _type_class(f.dataType) for f in schema.fields}
-            if isinstance(schema, StructType)
-            else {}
-        )
+        group_fields = field_classes(per_key[key])
         for field in sorted(global_fields):
             gcls = global_fields[field]
             if field not in group_fields:

@@ -1,10 +1,12 @@
 """Distributed schema inference (SURVEY §2 O5/O6/O7/O8).
 
 One implementation, one JVM aggregate: ``schema_of_variant_agg`` over
-``try_parse_json`` of exactly the lines ``routing.is_valid_json`` accepts.
-Spark merges the per-record variant schemas associatively (partial
-aggregates per partition, one tiny final merge), and the returned schema
-string is parsed into the reference lattice (``plans.lattice``):
+``routing.parse_valid_json``, each line parsed once. A line is valid
+exactly when that parsed value is non-NULL, so the same value gives the
+routing counts. Spark merges the per-record variant schemas
+associatively (partial aggregates per partition, one tiny final merge),
+and the returned schema string is parsed into the reference lattice
+(``plans.lattice``):
 
 * ``OBJECT<…>`` → struct (key union; Spark emits keys name-sorted)
 * ``ARRAY<…>``  → array of the merged element
@@ -15,10 +17,11 @@ The map is exact because STRING is the lattice top for everything but
 bottom: Spark only widens scalars among themselves or gives up to VARIANT
 on an object/array/scalar mix, and the lattice sends both to STRING.
 
-The same ``select`` also counts valid and invalid lines, so a routed
-inference is one Spark job (``route_and_infer``). Struct fields come out
-name-sorted; correctness tests compare order-insensitively (SURVEY §1.4
-rule 6).
+Unkeyed (``route_and_infer``) and keyed (``infer_schema_by_key``)
+inference run the same ``groupBy(*keys).agg`` job, so a routed inference
+is one Spark job, and every key's fold starts from the empty struct.
+Struct fields come out name-sorted; correctness tests compare
+order-insensitively (SURVEY §1.4 rule 6).
 
 There is no whole-content buffering anywhere (the reference's
 ``IOUtils.toString`` double-read at HiveSchemaGenerator.scala:75,98,116 is
@@ -30,18 +33,17 @@ from __future__ import annotations
 import re
 from typing import Any, NamedTuple
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
 from ..plans.lattice import merge_types, type_from_dict
-from .routing import is_valid_json
+from .routing import parse_valid_json
 
 __all__ = [
     "Inferred",
     "infer_schema_by_key",
     "infer_schema_df",
-    "infer_schema_exact",
     "parse_variant_schema",
     "route_and_infer",
 ]
@@ -121,10 +123,6 @@ def _parse_name(text: str, i: int) -> tuple[str, int]:
 
 # --- the aggregate ----------------------------------------------------------
 
-def _shape_agg(value: Column, valid: Column) -> Column:
-    return F.schema_of_variant_agg(F.when(valid, F.try_parse_json(value)))
-
-
 def _collect_case_sensitive(df: DataFrame) -> list[Row]:
     """``df.collect()`` with ``spark.sql.caseSensitive=true``.
 
@@ -143,24 +141,35 @@ def _collect_case_sensitive(df: DataFrame) -> list[Row]:
     return DataFrame(jdf, spark).collect()
 
 
-def route_and_infer(df: DataFrame, column: str = "value") -> Inferred:
-    """Valid count, invalid count and the lattice schema of ``column`` in
-    ONE Spark job (scan → partial aggregate per partition → final merge).
-
-    Lines are valid exactly when ``is_valid_json`` says so; only valid
-    lines reach the fold. The fold starts from the empty struct like
-    ``CreateHQL.scala:12``: no valid line gives the empty struct, and
-    top-level arrays demote to STRING (rendered ``"ERROR"``).
+def _infer(df: DataFrame, column: str, *keys: str) -> list[tuple[Any, Inferred]]:
+    """``(key values, Inferred)`` per group of ``keys`` in ONE Spark job
+    (scan → partial aggregate per partition → final merge); no keys is
+    one global group. Counts and shape come from one parsed value per
+    line. Every fold starts from the empty struct like
+    ``CreateHQL.scala:12``: top-level arrays demote to STRING (``"ERROR"``).
     """
-    value = F.col(column).cast("string")
-    valid = is_valid_json(value)
-    (row,) = _collect_case_sensitive(
-        df.select(
-            F.count_if(valid), F.count_if(~valid), _shape_agg(value, valid)
+    projected = df.select(
+        *(F.col(k).cast("string").alias(f"_k{i}") for i, k in enumerate(keys)),
+        parse_valid_json(F.col(column).cast("string")).alias("_v"),
+    )
+    rows = _collect_case_sensitive(
+        projected.groupBy(*projected.columns[:-1]).agg(
+            F.count("_v"), F.count(F.lit(1)), F.schema_of_variant_agg("_v")
         )
     )
-    parsed = type_from_dict(parse_variant_schema(row[2]))
-    return Inferred(row[0], row[1], merge_types(StructType([]), parsed))
+    out = []
+    for *key, good, total, text in rows:
+        shape = type_from_dict(parse_variant_schema(text))
+        seeded = merge_types(StructType([]), shape)
+        out.append((tuple(key), Inferred(good, total - good, seeded)))
+    return out
+
+
+def route_and_infer(df: DataFrame, column: str = "value") -> Inferred:
+    """Valid count, invalid count and the lattice schema of ``column`` in
+    ONE Spark job; no valid line gives the empty struct."""
+    ((_, inferred),) = _infer(df, column)
+    return inferred
 
 
 def infer_schema_df(df: DataFrame, column: str = "value") -> DataType:
@@ -168,33 +177,18 @@ def infer_schema_df(df: DataFrame, column: str = "value") -> DataType:
     return route_and_infer(df, column).schema
 
 
-def infer_schema_exact(spark: SparkSession, path: str) -> DataType:
-    """Reference-lattice inference over NDJSON file(s): one text scan
-    (``spark.read.text`` splits lines for free) plus the aggregate."""
-    return infer_schema_df(spark.read.text(path), "value")
-
-
 def infer_schema_by_key(
     df: DataFrame, json_col: str, key_col: str
 ) -> dict[str, DataType]:
-    """Reference-lattice inference per routing key in ONE job:
-    ``groupBy(key).agg(schema_of_variant_agg(...))``. Each partition
-    pre-aggregates one partial schema per key, so the shuffle carries
-    ``partitions × keys`` tiny rows, never records.
+    """Reference-lattice inference per routing key: the same one-job
+    aggregate, grouped by ``key_col``. Each partition pre-aggregates one
+    partial schema per key, so the shuffle carries ``partitions × keys``
+    tiny rows, never records.
 
-    There is no empty-struct seed per key: a key whose rows are
-    top-level arrays keeps its ARRAY type, and a key with no valid line
-    is absent. A NULL key is kept as ``None``.
+    A key with no valid line is absent; a NULL key is kept as ``None``.
     """
-    value = F.col(json_col).cast("string")
-    rows = _collect_case_sensitive(
-        df.groupBy(F.col(key_col).cast("string").alias("key")).agg(
-            _shape_agg(value, is_valid_json(value)).alias("shape")
-        )
-    )
-    out: dict[str, DataType] = {}
-    for key, text in rows:
-        shape = parse_variant_schema(text)
-        if shape is not None:
-            out[key] = type_from_dict(shape)
-    return out
+    return {
+        key: inferred.schema
+        for (key,), inferred in _infer(df, json_col, key_col)
+        if inferred.good
+    }

@@ -221,15 +221,18 @@ def bradley_terry(
             )
         )
         # Materialize the models-sized result BEFORE the finally releases
-        # the loop caches (pagerank's `ranks.count()` rationale): the
-        # rounds above are lazy (localCheckpoint(eager=False)), so
-        # unpersisting first would hand the caller a lineage whose every
-        # round recomputes the pair/win aggregations from the raw battle
-        # table — measured ~30% of the fit at sf0.1. The result frame is
-        # one row per model, so the eager checkpoint is a trivial job;
-        # its blocks are ContextCleaner-owned (the connected_components
-        # NOTE applies).
-        return out.localCheckpoint(eager=True)
+        # the loop caches (pagerank's `ranks.count()` rationale):
+        # unpersisting first would hand the caller a lineage that
+        # recomputes the pair/win aggregations from the raw battle table
+        # — measured ~30% of the fit at sf0.1. The result frame is one
+        # row per model, so the eager checkpoint is a trivial job. With
+        # ``checkpoint_dir`` it is one more reliable checkpoint there, so
+        # the result never rests on executor-local blocks; otherwise a
+        # local one, whose blocks are ContextCleaner-owned (the
+        # connected_components NOTE applies).
+        if checkpoint_dir is None:
+            return out.localCheckpoint(eager=True)
+        return _materialize(out)
     finally:
         pairs.unpersist()
         wins.unpersist()

@@ -8,11 +8,13 @@ record**, the documented improvement (FIXTURES.md F3b): every line is
 independently validated, good lines proceed to inference, bad lines go to
 a quarantine side.
 
-Validity predicate stays JVM-side: Spark 4's ``try_parse_json`` (variant
-parser, whole-stage codegen) plus a first-char check that mirrors the
-reference's object-or-array requirement (a bare scalar like ``5`` is
-*invalid* to org.json's JSONObject/JSONArray constructors, so it is
-invalid here too). No Python UDF in the hot path.
+Validity is stated once, JVM-side, in ``parse_valid_json``: a first-char
+check that mirrors the reference's object-or-array requirement (a bare
+scalar like ``5`` is *invalid* to org.json's JSONObject/JSONArray
+constructors, so it is invalid here too), then Spark 4's variant JSON
+parser (whole-stage codegen). A line is valid exactly when its parsed
+value is non-NULL, and inference (``operators.infer``) folds that same
+value, so each line is parsed once. No Python UDF in the hot path.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
+    "parse_valid_json",
     "is_valid_json",
     "is_valid_json_lax",
     "split_valid",
@@ -40,20 +43,22 @@ class RoutedFrames(NamedTuple):
     failure: DataFrame
 
 
-def is_valid_json(col: Column | str) -> Column:
-    """True iff the value parses as JSON *and* the first value is an object
-    or array (org.json parity — HiveSchemaGenerator.scala:80,85).
+def parse_valid_json(col: Column | str) -> Column:
+    """The parsed variant of a valid line, NULL otherwise. Valid means the
+    value parses as JSON *and* the first value is an object or array
+    (org.json parity — HiveSchemaGenerator.scala:80,85).
 
     The first-character check skips all JSON whitespace (space, tab, LF,
-    CR), as ``try_parse_json`` does; org.json's ``nextClean`` skips those
-    too."""
+    CR), as the variant parser does; org.json's ``nextClean`` skips those
+    too. It runs first, so lines that cannot be valid are never parsed."""
     c = F.col(col) if isinstance(col, str) else col
     first = F.regexp_extract(c, r"^[ \t\n\r]*(.)", 1)
-    return (
-        c.isNotNull()
-        & F.try_parse_json(c).isNotNull()
-        & first.isin("{", "[")
-    )
+    return F.when(first.isin("{", "["), F.try_parse_json(c))
+
+
+def is_valid_json(col: Column | str) -> Column:
+    """True iff ``parse_valid_json`` is non-NULL; never NULL itself."""
+    return parse_valid_json(col).isNotNull()
 
 
 def is_valid_json_lax(col: Column | str) -> Column:
@@ -72,7 +77,7 @@ def is_valid_json_lax(col: Column | str) -> Column:
     string parses (pretty-printed JSON spanning lines) OR its first line
     parses (the NDJSON-with-trailing-garbage case the reference's own
     fixtures exercise) — both subject to the object-or-array first-char
-    rule. Empirically Spark's ``try_parse_json`` (this build) already
+    rule. Empirically Spark's variant parser (this build) already
     behaves like org.json's tokener — it stops after the first complete
     value and ignores trailing garbage — so the first-line disjunct is a
     guard against future parser tightening, not the load-bearing branch.

@@ -26,8 +26,6 @@ import re
 
 from pyspark.sql.types import ArrayType, DataType, StructType
 
-from .lattice import finalize_type
-
 __all__ = [
     "render_type",
     "render_compact_type",
@@ -69,14 +67,17 @@ def render_type(dt: DataType, indent: int = 0, key: str | None = None) -> str:
 
 def render_compact_type(dt: DataType) -> str:
     """Single-line uppercase rendering (``ARRAY<STRING>``,
-    ``STRUCT<`k`: STRING>``) — same lattice, no indentation. Used where a
-    type travels inside a row (e.g. the inference query surface) rather
-    than a DDL body."""
+    ``STRUCT<`k`: STRING>``) — same lattice, no indentation; bottoms
+    render as STRING. Names are sanitized and quoted (``_quote``), so the
+    text parses as a Spark type whatever the keys hold. Used for
+    executable DDL and where a type travels inside a row (e.g. the
+    inference query surface)."""
     if isinstance(dt, ArrayType):
         return f"ARRAY<{render_compact_type(dt.elementType)}>"
     if isinstance(dt, StructType):
         fields = ", ".join(
-            f"`{f.name}`: {render_compact_type(f.dataType)}" for f in dt.fields
+            f"{_quote(f.name)}: {render_compact_type(f.dataType)}"
+            for f in dt.fields
         )
         return f"STRUCT<{fields}>"
     return "STRING"
@@ -99,6 +100,12 @@ def sanitize_identifiers(rendered: str) -> str:
     """``replaceAll("[.-]", "_")`` over the whole definition string
     (CreateHQL.scala:97)."""
     return _SANITIZE_RE.sub("_", rendered)
+
+
+def _quote(name: str) -> str:
+    """``[.-]`` → ``_`` on one name, then backtick-quoted with any
+    backtick inside doubled (Spark SQL's escape)."""
+    return "`" + _SANITIZE_RE.sub("_", name).replace("`", "``") + "`"
 
 
 def sanitize_schema(dt: DataType) -> DataType:
@@ -156,15 +163,19 @@ def render_hive_ddl(
 def render_spark_ddl(schema: DataType, table: str, location: str) -> str:
     """Spark-native executable dialect: ``CREATE TABLE … USING JSON``.
 
-    Uses the sanitized schema's ``simpleString`` column list so the DDL
-    runs on a plain Spark build (no Hive SerDe classes needed); pair with
-    a separate ``DROP TABLE IF EXISTS`` statement.
+    Columns render through ``render_compact_type``, so every name, nested
+    or not, is sanitized and quoted and the DDL runs on a plain Spark
+    build (no Hive SerDe classes needed); pair with a separate ``DROP
+    TABLE IF EXISTS`` statement. Spark and Hive column names are
+    case-insensitive, so keys that differ only in case (``a``/``A``) or
+    that sanitize to one name (``x.y``/``x-y``) fail CREATE with
+    ``COLUMN_ALREADY_EXISTS`` by design.
     """
     if not isinstance(schema, StructType):
         raise ValueError("top-level schema must be a STRUCT to create a table")
-    clean = sanitize_schema(finalize_type(schema))
     cols = ",\n  ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in clean.fields
+        f"{_quote(f.name)} {render_compact_type(f.dataType)}"
+        for f in schema.fields
     )
     return (
         f"CREATE TABLE {table} (\n  {cols}\n) USING JSON LOCATION '{location}'"
@@ -197,20 +208,17 @@ def render_alter_ddl(old: DataType, new: DataType, table: str) -> list[str]:
     ]
     if added:
         cols = ", ".join(
-            sanitize_identifiers(
-                f"`{f.name}` {render_compact_type(f.dataType)}"
-            )
+            f"{_quote(f.name)} {render_compact_type(f.dataType)}"
             for f in added
         )
         stmts.append(f"ALTER TABLE {table} ADD COLUMNS ({cols});")
     for f in new.fields:
         key = sanitize_identifiers(f.name)
         if key in old_by_name and old_by_name[key] != f.dataType:
-            col = f"`{key}`"
+            col = _quote(f.name)
             stmts.append(
                 f"ALTER TABLE {table} CHANGE COLUMN {col} {col} "
-                + sanitize_identifiers(render_compact_type(f.dataType))
-                + ";"
+                f"{render_compact_type(f.dataType)};"
             )
     return stmts
 

@@ -20,26 +20,13 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import ArrayType, DataType, StructType
+from pyspark.sql.types import DataType
 
+from ..operators.drift import field_classes
 from ..operators.infer import infer_schema_by_key
 from ..plans.lattice import merge_types, type_to_dict
 
 __all__ = ["GroupDriftState", "ValueDriftMonitor"]
-
-
-def _classes(t: DataType) -> dict[str, str]:
-    if not isinstance(t, StructType):
-        return {}
-    out = {}
-    for f in t.fields:
-        if isinstance(f.dataType, StructType):
-            out[f.name] = "STRUCT"
-        elif isinstance(f.dataType, ArrayType):
-            out[f.name] = "ARRAY"
-        else:
-            out[f.name] = "STRING"
-    return out
 
 
 @dataclass
@@ -76,7 +63,7 @@ class GroupDriftState:
             merged = merge_types(old, t)
             if type_to_dict(merged) == type_to_dict(old):
                 continue  # batch fits the known schema — no drift
-            oldc, newc = _classes(old), _classes(merged)
+            oldc, newc = field_classes(old), field_classes(merged)
             for fld in sorted(newc):
                 if fld not in oldc:
                     self._emit(batch_id, key, fld, "new_field")

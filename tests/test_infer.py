@@ -10,10 +10,11 @@ import pytest
 from pyspark.sql.types import ArrayType, StringType, StructType
 
 from nifi_hive_schema_generator_bundle_spark.catalog import infer_and_register, infer_ddl
+from nifi_hive_schema_generator_bundle_spark.operators import infer as infer_mod
 from nifi_hive_schema_generator_bundle_spark.operators.infer import (
     infer_schema_df,
     infer_schema_by_key,
-    infer_schema_exact,
+    route_and_infer,
 )
 from nifi_hive_schema_generator_bundle_spark.plans.lattice import (
     finalize_type,
@@ -38,7 +39,7 @@ def canon(dt):
 def test_exact_matches_single_thread_fold(spark):
     with open(FIXTURE) as fh:
         expected = schema_from_json_lines(line.strip() for line in fh)
-    got = infer_schema_exact(spark, FIXTURE)
+    got = infer_schema_df(spark.read.text(FIXTURE))
     assert canon(got) == canon(expected)
 
 
@@ -49,7 +50,7 @@ def test_exact_is_partition_count_invariant(spark):
 
 
 def test_fixture_key_types(spark):
-    t = finalize_type(infer_schema_exact(spark, FIXTURE))
+    t = finalize_type(infer_schema_df(spark.read.text(FIXTURE)))
     by_name = {f.name: f.dataType for f in t.fields}
     # conflict demotion: [100,104] on row 1 vs scalar on later rows
     assert by_name["eventOrdinal"] == StringType()
@@ -160,3 +161,27 @@ def test_case_pairs_keep_both_fields(spark):
         assert spark.conf.get(key) == "false"
     finally:
         spark.conf.unset(key)
+
+
+class _Planned(Exception):
+    pass
+
+
+def test_one_json_parse_per_row(spark, monkeypatch):
+    """Routing counts and schema share one parsed value: the optimized
+    plan of the unkeyed and the keyed path calls the JSON parser once.
+    Plan-only, no job runs. The matched text (``parseJson(``, what
+    ``try_parse_json`` is rewritten to) is Spark-version specific."""
+    plans = []
+
+    def plan_only(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        raise _Planned
+
+    monkeypatch.setattr(infer_mod, "_collect_case_sensitive", plan_only)
+    df = spark.createDataFrame([("k", '{"a": 1}')], "k string, value string")
+    with pytest.raises(_Planned):
+        route_and_infer(df, "value")
+    with pytest.raises(_Planned):
+        infer_schema_by_key(df, "value", "k")
+    assert [p.count("parseJson(") for p in plans] == [1, 1], plans

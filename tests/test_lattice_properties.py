@@ -176,6 +176,7 @@ _deep = st.builds(
 _records = st.one_of(
     st.dictionaries(_keys, _engine_values, max_size=5),
     st.builds(lambda k, v: {k: v}, _keys, _deep),
+    st.lists(_engine_values, max_size=4),  # top-level arrays: the seed
 )
 
 

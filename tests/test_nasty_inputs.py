@@ -117,3 +117,44 @@ def test_drift_report_on_garbage_json_column(spark, nasty):
     rep = schema_drift_report(spark, tagged, "payload", "lang")
     # nothing parses as a JSON object → empty report, no exception
     assert rep.count() == 0
+
+
+# keys from ``_keys`` in tests/test_lattice_properties.py plus a backtick
+# inside a name; case pairs (a/A) and names that sanitize onto each other
+# (x.y/x-y) are left out, since Spark and Hive column names are
+# case-insensitive and CREATE rejects them with COLUMN_ALREADY_EXISTS
+AWKWARD_KEYS = ["`", "``", "a`b", ":", ",", ">", "<", " ", "", "OBJECT<",
+                "ARRAY<", "a b", "x: y, z", "DECIMAL(38,0)"]
+
+
+def test_awkward_keys_register(spark, tmp_path):
+    import json
+
+    from nifi_hive_schema_generator_bundle_spark.catalog import (
+        infer_and_register,
+    )
+    from nifi_hive_schema_generator_bundle_spark.operators.infer import (
+        infer_schema_df,
+    )
+    from nifi_hive_schema_generator_bundle_spark.plans.lattice import (
+        finalize_type,
+        type_to_dict,
+    )
+    from nifi_hive_schema_generator_bundle_spark.plans.render import (
+        sanitize_schema,
+    )
+
+    path = tmp_path / "awkward.ndjson"
+    path.write_text(
+        json.dumps({k: {j: [{j: 1}] for j in AWKWARD_KEYS} for k in AWKWARD_KEYS})
+        + "\n"
+        + json.dumps({k: None for k in AWKWARD_KEYS})
+        + "\n"
+    )
+    res = infer_and_register(spark, str(path), "awkward_keys", str(tmp_path / "loc"))
+    try:
+        assert (res["good_count"], res["bad_count"]) == (2, 0)
+        want = sanitize_schema(finalize_type(infer_schema_df(spark.read.text(str(path)))))
+        assert type_to_dict(spark.table("awkward_keys").schema) == type_to_dict(want)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS awkward_keys")

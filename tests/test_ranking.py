@@ -80,13 +80,15 @@ def test_checkpoint_dir_matches_local(spark, tmp_path):
     local = sorted(
         (r.model, r.rating) for r in bradley_terry(df, iters=8).collect()
     )
-    ckpt = sorted(
-        (r.model, r.rating)
-        for r in bradley_terry(
-            df, iters=8, checkpoint_dir=str(tmp_path / "bt")
-        ).collect()
-    )
+    out = bradley_terry(df, iters=8, checkpoint_dir=str(tmp_path / "bt"))
+    ckpt = sorted((r.model, r.rating) for r in out.collect())
     assert local == ckpt
+    # with checkpoint_dir the result is a reliable checkpoint written
+    # there, never executor-local blocks
+    rdd = out._jdf.queryExecution().logical().rdd()
+    assert not rdd.isLocallyCheckpointed()
+    path = rdd.getCheckpointFile()
+    assert path.isDefined() and str(tmp_path / "bt") in path.get()
 
 
 def test_plan_jvm_only(spark):

@@ -90,9 +90,12 @@ def test_ddl_drop_if_exists_compat_flag():
 def test_spark_ddl_executable_dialect():
     schema = struct(**{"a.b": S, "c": ArrayType(NullType()), "d": struct(e=NullType())})
     ddl = render_spark_ddl(schema, "t", "/x")
-    assert "`a_b` string" in ddl
-    assert "`c` array<string>" in ddl  # bottoms finalized to string
-    assert "`d` struct<e:string>" in ddl
+    assert "`a_b` STRING" in ddl
+    assert "`c` ARRAY<STRING>" in ddl  # bottoms render as STRING
+    assert "`d` STRUCT<`e`: STRING>" in ddl
+    # nested names are sanitized and quoted too, backticks doubled
+    nested = render_spark_ddl(struct(**{"a`b": struct(**{"x.y z": S})}), "t", "/x")
+    assert "`a``b` STRUCT<`x_y z`: STRING>" in nested
     assert ddl.startswith("CREATE TABLE t (") and ddl.endswith("USING JSON LOCATION '/x'")
 
 
