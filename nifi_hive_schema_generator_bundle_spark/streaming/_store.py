@@ -1,8 +1,36 @@
-"""Durable staging for batch-partitioned store compaction.
+"""The batch-partitioned store protocol, stated once for every
+streaming store (the sketch stores ``cms``/``hll``/``count``/
+``histogram``/``span`` and the dedup stores ``incremental_dedup``/
+``_near_dedup``/``_embedding_dedup``):
 
-Every ``compact_*_store`` folds partitions ``batch_id < cut`` into the
-``cut − 1`` partition and then deletes the originals. Two failure
-windows are closed here:
+* **Partition per batch.** Micro-batch N writes its partial state (a
+  sketch delta, new fingerprints, band keys…) into its own
+  ``batch_id=N`` partition by dynamic partition overwrite
+  (``write_partial``/``write_counted``). The store's value is the merge
+  of all its partitions.
+* **Replay overwrites.** ``foreachBatch`` may re-run batch N after a
+  crash between the write and the checkpoint commit. The replay
+  rewrites the same partition with the same bytes, so it converges
+  instead of double-counting. Dedup stores read history as
+  ``batch_id < N`` only, so a replay never matches its own rows.
+* **Monotonic guard.** A ``batch_id`` below the store's max means the
+  streaming checkpoint was reset against a live store; the update
+  raises (``check_batch_id``). Equal to the max is a replay and allowed.
+* **Cadence.** ``start_batch_stream`` wires ``foreachBatch``, the
+  checkpoint and ``availableNow``; with ``compact_every=N`` it compacts
+  after the update of every batch id ``> 0`` divisible by N.
+* **Fold.** ``compact_store`` folds every partition below the newest
+  ``keep_last`` into the ``cut − 1`` partition, then deletes the
+  originals. A sketch store folds with the associative merge its
+  readout uses (``read_merged``); a dedup store rewrites its row set.
+  Safe because future ids are above the fold and a replay of a kept
+  batch rewrites only its own partition.
+
+The rest of this module makes the fold crash-safe.
+
+**Durable staging.** Every fold writes partitions ``batch_id < cut``
+into the ``cut − 1`` partition and then deletes the originals. Two
+failure windows are closed here:
 
 1. **Lost lineage.** The fold frame MUST NOT depend (even lazily) on
    the files being overwritten: a ``.persist()`` + ``count()`` is not
@@ -67,9 +95,11 @@ or miss (VERDICT r6 #3).
 from __future__ import annotations
 
 import json
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.formats import overwrite_partitions
 
@@ -266,8 +296,7 @@ def _replay_fold(spark, store_dir: str, m: dict, claim_path: str) -> None:
 def read_store(
     spark, store_dir: str, *, heal: bool = True
 ) -> DataFrame | None:
-    """Heal-then-read for batch-partitioned stores (the shared helper
-    every stream module aliases as ``_read_store``): complete any
+    """Heal-then-read for batch-partitioned stores: complete any
     crashed compaction BEFORE binding the file listing — a readout
     between a fold's overwrite and its deletes would double-count the
     stale pre-cut partitions — then read the store. Returns None only
@@ -331,7 +360,7 @@ def durable_fold(
     partitions. Returns the folded row count.
 
     The caller must have called ``finish_pending_fold`` before READING
-    the store to build ``folded`` (every ``compact_*_store`` does) —
+    the store to build ``folded`` (``compact_store`` does) —
     recovery cannot run here because ``folded``'s lineage is already
     bound to the store's current files."""
     spark = folded.sparkSession
@@ -510,3 +539,113 @@ def store_max_batch_id(spark, store_dir: str) -> int | None:
     one-LIST partition listing as ``store_batch_ids``."""
     ids = store_batch_ids_or_scan(spark, store_dir)
     return max(ids) if ids else None
+
+
+def check_batch_id(spark, store_dir: str, batch_id: int) -> None:
+    """The monotonic batch-id guard, run by every batch update before
+    it writes: ``batch_id`` may equal the store's max (a replay) but
+    never fall behind it."""
+    top = store_max_batch_id(spark, store_dir)
+    if top is not None and batch_id < top:
+        raise ValueError(
+            f"batch_id {batch_id} is behind the store's max {top}: "
+            "the streaming checkpoint was reset against an existing "
+            "store. Resume with the original checkpoint, or point the "
+            "store (and any output) at fresh locations."
+        )
+
+
+def write_partial(
+    batch_df: DataFrame,
+    batch_id: int,
+    store_dir: str,
+    build: Callable[[DataFrame], DataFrame],
+) -> int:
+    """A sketch store's batch update: guard the id, then write
+    ``build(batch_df)`` into the ``batch_id`` partition. Returns the
+    rows written (0 for an empty batch, which writes nothing)."""
+    if batch_df.isEmpty():
+        return 0
+    check_batch_id(batch_df.sparkSession, store_dir, batch_id)
+    partial = build(batch_df).withColumn("batch_id", F.lit(batch_id))
+    return write_counted(partial, store_dir, ["batch_id"])
+
+
+def read_merged(
+    spark,
+    store_dir: str,
+    merge: Callable[[DataFrame], DataFrame],
+    *,
+    heal: bool = True,
+) -> DataFrame:
+    """A store's whole-history readout: ``merge`` over every partition's
+    rows (``batch_id`` dropped) — the same merge ``compact_store`` folds
+    with, so a readout is unchanged by compaction. ``heal`` as in
+    ``read_store``; raises FileNotFoundError when there is no store."""
+    store = read_store(spark, store_dir, heal=heal)
+    if store is None:
+        raise FileNotFoundError(f"no store at {store_dir}")
+    return merge(store.drop("batch_id"))
+
+
+def compact_store(
+    spark,
+    store_dir: str,
+    fold: Callable[[DataFrame], DataFrame],
+    *,
+    keep_last: int = 1,
+) -> int:
+    """Fold every partition below the newest ``keep_last`` into the
+    ``cut − 1`` partition: ``fold`` maps the pre-cut rows (``batch_id``
+    dropped) to the folded rows, staged and committed by
+    ``durable_fold``. Returns the folded row count; 0 when the store is
+    missing or has too few partitions to be worth folding."""
+    store = read_store(spark, store_dir)  # heals any pending fold first
+    if store is None:
+        return 0
+    ids = store_batch_ids_or_scan(spark, store_dir)
+    if len(ids) <= keep_last + 1:
+        return 0
+    cut = ids[-keep_last] if keep_last else ids[-1] + 1
+    fold_to = cut - 1
+    folded = fold(
+        store.filter(F.col("batch_id") < cut).drop("batch_id")
+    ).withColumn("batch_id", F.lit(fold_to))
+    return durable_fold(
+        folded, store_dir, stale_ids=[i for i in ids if i < fold_to]
+    )
+
+
+def start_batch_stream(
+    stream_df: DataFrame,
+    update: Callable[[DataFrame, int], object],
+    *,
+    checkpoint_dir: str,
+    available_now: bool = True,
+    compact_every: int | None = None,
+    compact: Callable[..., object] | None = None,
+) -> StreamingQuery:
+    """Start ``stream_df`` with ``update(batch_df, batch_id)`` as its
+    ``foreachBatch`` hook, checkpointed at ``checkpoint_dir``;
+    ``available_now`` drains what is there and stops.
+
+    ``compact_every=N`` runs ``compact(spark)`` after the update of
+    every batch id ``> 0`` divisible by N, bounding the partition count
+    of an unbounded drain. The SCALE.md 30-batch sweeps price the
+    cadence: ~10 for the sketch stores, 50-100 for the dedup stores,
+    whose partials are larger and folds dearer. A crash between the
+    fold and the checkpoint commit is safe: the replayed batch rewrites
+    only its own (kept) partition, and the fold itself is crash-safe
+    via the ``durable_fold`` commit marker."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        update(batch_df, batch_id)
+        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+            compact(batch_df.sparkSession)
+
+    writer = stream_df.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

@@ -7,15 +7,10 @@ bounded alternative: each micro-batch folds into ≤ depth × width
 cells, and grid **linearity** (per-cell addition) makes the store an
 accumulator across batches, runs, and restarts.
 
-Replay safety follows `incremental_dedup.py`'s contract exactly: the
-store is partitioned by ``batch_id``, each batch dynamic-partition-
-overwrites ONLY its own delta partition, so a crash-replay rewrites
-the same bytes instead of double-counting; a batch id behind the
-store's max means the streaming checkpoint was reset against a live
-store, and raises. Estimates fold every batch delta per-cell — the
-order never matters — and ``compact_cms_store`` periodically collapses
-history partitions into one (per-cell sums preserve every estimate
-bit-for-bit: linearity again).
+Replay safety, the monotonic-id guard, the compaction cadence and the
+fold are `_store.py`'s store contract verbatim. The merge is per-cell
+sum (`cms_merge`): the order of batch deltas never matters, and
+compaction preserves every estimate bit-for-bit — linearity again.
 
 State: O(batches × depth × width) between compactions, O(depth ×
 width) after — never O(distinct keys).
@@ -23,18 +18,18 @@ width) after — never O(distinct keys).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.sketches import cms_build, cms_lookup
+from ..operators.sketches import cms_build, cms_lookup, cms_merge
 from ._store import (
-    write_counted,
-    durable_fold,
-    finish_pending_fold,
+    compact_store,
+    read_merged,
     read_store,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    start_batch_stream,
+    write_partial,
 )
 
 __all__ = [
@@ -46,7 +41,7 @@ __all__ = [
 ]
 
 
-# heal-then-read shared by every store module (hoisted round 7)
+# the heal-then-read helper under its older name (tests import it here)
 _read_store = read_store
 
 
@@ -64,27 +59,14 @@ def cms_batch_update(
 
     Reusable from any ``foreachBatch`` or batch loop with monotonic
     batch numbering."""
-    spark = batch_df.sparkSession
-    if batch_df.isEmpty():
-        return 0
-    # monotonic-id guard from partition DIRECTORY names (one FS LIST,
-    # not a footer scan of every partition — the measured per-batch
-    # drift source at high batch counts; see _store.store_max_batch_id)
-    top = store_max_batch_id(spark, store_dir)
-    if top is not None and batch_id < top:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the store's max {top}: "
-            "the streaming checkpoint was reset against an existing "
-            "store. Resume with the original checkpoint or use a "
-            "fresh store_dir."
-        )
-    delta = cms_build(
-        batch_df, key_col, depth=depth, width=width, weight_col=weight_col
-    ).withColumn("batch_id", F.lit(batch_id))
-    # the returned row count rides the write itself (r9: Dataset.observe
-    # — one job, no cache block; the r8 persist+count+write protocol
-    # paid a dedicated count job per batch). See _store.write_counted.
-    return write_counted(delta, store_dir, ["batch_id"])
+    return write_partial(
+        batch_df,
+        batch_id,
+        store_dir,
+        lambda df: cms_build(
+            df, key_col, depth=depth, width=width, weight_col=weight_col
+        ),
+    )
 
 
 def run_cms_stream(
@@ -100,46 +82,30 @@ def run_cms_stream(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the accumulation query: every micro-batch's grid delta
-    lands in its own store partition. ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_batch_update(
-            batch_df,
-            batch_id,
+    lands in its own store partition; ``compact_every=N`` folds the
+    store every N batches (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            cms_batch_update,
             store_dir=store_dir,
             key_col=key_col,
             depth=depth,
             width=width,
             weight_col=weight_col,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_cms_store(batch_df.sparkSession, store_dir)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(compact_cms_store, store_dir=store_dir),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cms_store_grid(spark, store_dir: str, *, heal: bool = True) -> DataFrame:
     """The whole-history grid: per-cell sum over every batch delta.
-    ``heal=False`` makes the readout
-    strictly read-only (no FS mutation; a pending fold is served as
-    the consistent post-fold view — see ``_store.read_store``)."""
-    store = _read_store(spark, store_dir, heal=heal)
-    if store is None:
-        raise FileNotFoundError(f"no CMS store at {store_dir}")
-    return store.groupBy("hash_row", "bucket").agg(F.sum("cnt").alias("cnt"))
+    ``heal=False`` makes the readout strictly read-only (see
+    ``_store.read_store``)."""
+    return read_merged(spark, store_dir, cms_merge, heal=heal)
 
 
 def cms_store_estimate(
@@ -164,28 +130,6 @@ def cms_store_estimate(
 
 def compact_cms_store(spark, store_dir: str, *, keep_last: int = 1) -> int:
     """Collapse all batch partitions strictly below the newest
-    ``keep_last`` into the ``max − keep_last`` partition via per-cell
-    sums (estimates unchanged: linearity). Returns cells after
-    compaction. Same safety argument as
-    ``incremental_dedup.compact_fingerprint_store``: future ids are
-    monotonic, and a replay of the live max batch only rewrites its
-    own partition."""
-    finish_pending_fold(spark, store_dir)
-    store = spark.read.parquet(store_dir)
-    ids = store_batch_ids_or_scan(spark, store_dir)
-    if len(ids) <= keep_last + 1:
-        return 0
-    cut = ids[-keep_last] if keep_last else ids[-1] + 1
-    fold_to = cut - 1
-    folded = (
-        store.filter(F.col("batch_id") < cut)
-        .groupBy("hash_row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("batch_id", F.lit(fold_to))
-    )
-    # stage durably, commit, overwrite, delete — one crash-safe protocol
-    # (see _store.durable_fold); the stale deletes ride the fold's commit
-    # marker so a crash can never leave a double-counting store
-    return durable_fold(
-        folded, store_dir, stale_ids=[i for i in ids if i < fold_to]
-    )
+    ``keep_last`` into one via per-cell sums (estimates unchanged:
+    linearity). Returns cells after compaction."""
+    return compact_store(spark, store_dir, cms_merge, keep_last=keep_last)

@@ -13,13 +13,9 @@ forecast from the store equals the batch `ewma_backtest` on the full
 history. The gate entry hash-verifies exactly that equality against
 the direct single-pass SQL replay.
 
-Replay safety is `cms_stream.py`'s contract verbatim: the store is
-batch_id-partitioned, each micro-batch OVERWRITES only its own delta
-partition (a crash between checkpoint write and store write replays
-the batch and rewrites the same bytes — idempotent), behind-store
-batch ids raise (checkpoint reset against a live store), and
-compaction folds history partitions by count-sum (linearity: additive
-state, safe because folded partitions are removed in the same pass).
+Replay safety, the monotonic-id guard, the compaction cadence and the
+fold are `_store.py`'s store contract verbatim; the merge is the
+per-(group, day) count sum.
 
 State: O(batches × groups × days) between compactions,
 O(groups × days) after — dimension-bounded, never row-bounded.
@@ -27,17 +23,17 @@ O(groups × days) after — dimension-bounded, never row-bounded.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ._store import (
-    write_counted,
-    durable_fold,
-    finish_pending_fold,
-    read_store,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    compact_store,
+    read_merged,
+    start_batch_stream,
+    write_partial,
 )
 
 __all__ = [
@@ -49,8 +45,10 @@ __all__ = [
 ]
 
 
-# heal-then-read shared by every store module (hoisted round 7)
-_read_store = read_store
+def _merge(rows: DataFrame) -> DataFrame:
+    """Per-(g, day) count sum: the one merge the readout and the
+    compactor share."""
+    return rows.groupBy("g", "day").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
 def count_batch_update(
@@ -63,31 +61,14 @@ def count_batch_update(
 ) -> int:
     """Fold one micro-batch's (group, day) count delta into the store;
     returns delta rows written."""
-    spark = batch_df.sparkSession
-    if batch_df.isEmpty():
-        return 0
-    # monotonic-id guard from partition DIRECTORY names (one FS LIST,
-    # not a footer scan of every partition — the measured per-batch
-    # drift source at high batch counts; see _store.store_max_batch_id)
-    top = store_max_batch_id(spark, store_dir)
-    if top is not None and batch_id < top:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the store's max {top}: "
-            "the streaming checkpoint was reset against an existing "
-            "store. Resume with the original checkpoint or use a "
-            "fresh store_dir."
-        )
-    delta = (
-        batch_df.groupBy(
+    return write_partial(
+        batch_df,
+        batch_id,
+        store_dir,
+        lambda df: df.groupBy(
             F.col(group_col).alias("g"), F.to_date(ts_col).alias("day")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .withColumn("batch_id", F.lit(batch_id))
+        ).agg(F.count(F.lit(1)).cast("long").alias("cnt")),
     )
-    # the returned row count rides the write itself (r9: Dataset.observe
-    # — one job, no cache block; the r8 persist+count+write protocol
-    # paid a dedicated count job per batch). See _store.write_counted.
-    return write_counted(delta, store_dir, ["batch_id"])
 
 
 def run_count_stream(
@@ -101,47 +82,29 @@ def run_count_stream(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the accumulation query: every micro-batch's count delta
-    lands in its own store partition. ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        count_batch_update(
-            batch_df,
-            batch_id,
+    lands in its own store partition; ``compact_every=N`` folds the
+    store every N batches (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            count_batch_update,
             store_dir=store_dir,
             group_col=group_col,
             ts_col=ts_col,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_count_store(batch_df.sparkSession, store_dir)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(compact_count_store, store_dir=store_dir),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def count_store_daily(spark, store_dir: str, *, heal: bool = True) -> DataFrame:
     """The whole-history (g, day, cnt) frame: per-day SUM over every
     delta — exactly the single-pass daily counts of all batches.
-    ``heal=False`` makes the readout
-    strictly read-only (no FS mutation; a pending fold is served as
-    the consistent post-fold view — see ``_store.read_store``)."""
-    store = _read_store(spark, store_dir, heal=heal)
-    if store is None:
-        raise FileNotFoundError(f"no count store at {store_dir}")
-    return store.groupBy("g", "day").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
+    ``heal=False`` makes the readout strictly read-only (see
+    ``_store.read_store``)."""
+    return read_merged(spark, store_dir, _merge, heal=heal)
 
 
 def count_store_forecast(
@@ -158,25 +121,6 @@ def count_store_forecast(
 
 def compact_count_store(spark, store_dir: str, *, keep_last: int = 1) -> int:
     """Collapse all batch partitions strictly below the newest
-    ``keep_last`` into the ``max − keep_last`` partition via count-sum
-    (linearity — merged reads are unchanged). Same monotonic-id safety
-    argument as ``compact_cms_store``."""
-    finish_pending_fold(spark, store_dir)
-    store = spark.read.parquet(store_dir)
-    ids = store_batch_ids_or_scan(spark, store_dir)
-    if len(ids) <= keep_last + 1:
-        return 0
-    cut = ids[-keep_last] if keep_last else ids[-1] + 1
-    fold_to = cut - 1
-    folded = (
-        store.filter(F.col("batch_id") < cut)
-        .groupBy("g", "day")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .withColumn("batch_id", F.lit(fold_to))
-    )
-    # stage durably, commit, overwrite, delete — one crash-safe protocol
-    # (see _store.durable_fold); the stale deletes ride the fold's commit
-    # marker so a crash can never leave a double-counting store
-    return durable_fold(
-        folded, store_dir, stale_ids=[i for i in ids if i < fold_to]
-    )
+    ``keep_last`` into one via count-sum (linearity — merged reads are
+    unchanged)."""
+    return compact_store(spark, store_dir, _merge, keep_last=keep_last)

@@ -12,12 +12,10 @@ merged registers are bit-identical to a single-pass build over
 everything ever seen, so estimates never degrade with batch count,
 replay order, or compaction depth.
 
-Replay safety follows `cms_stream.py`'s contract: batch_id-partitioned
-store, each batch overwrites only its own delta partition (crash-replay
-rewrites the same bytes — and even a DOUBLE-counted register delta
-would be absorbed by max-merge, a strictly weaker failure mode than the
-additive stores'), behind-store batch ids raise, and
-``compact_hll_store`` folds history partitions by register max.
+Replay safety, the monotonic-id guard, the compaction cadence and the
+fold are `_store.py`'s store contract verbatim. The merge is register
+max, so a double-counted register delta would even be absorbed — a
+strictly weaker failure mode than the additive stores'.
 
 State: O(batches × groups × 2^p) between compactions, O(groups × 2^p)
 after — never O(distinct keys).
@@ -25,18 +23,18 @@ after — never O(distinct keys).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cardinality import hll_estimate, hll_registers
 from ._store import (
-    write_counted,
-    durable_fold,
-    finish_pending_fold,
-    read_store,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    compact_store,
+    read_merged,
+    start_batch_stream,
+    write_partial,
 )
 
 __all__ = [
@@ -48,8 +46,12 @@ __all__ = [
 ]
 
 
-# heal-then-read shared by every store module (hoisted round 7)
-_read_store = read_store
+def _merge(rows: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Per-register max: the one merge the readout and the compactor
+    share."""
+    return rows.groupBy(*group_cols, "register").agg(
+        F.max("rho").alias("rho")
+    )
 
 
 def hll_batch_update(
@@ -63,27 +65,12 @@ def hll_batch_update(
 ) -> int:
     """Fold one micro-batch's register delta into the store; returns
     rows written."""
-    spark = batch_df.sparkSession
-    if batch_df.isEmpty():
-        return 0
-    # monotonic-id guard from partition DIRECTORY names (one FS LIST,
-    # not a footer scan of every partition — the measured per-batch
-    # drift source at high batch counts; see _store.store_max_batch_id)
-    top = store_max_batch_id(spark, store_dir)
-    if top is not None and batch_id < top:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the store's max {top}: "
-            "the streaming checkpoint was reset against an existing "
-            "store. Resume with the original checkpoint or use a "
-            "fresh store_dir."
-        )
-    delta = hll_registers(batch_df, key_col, group_cols, p=p).withColumn(
-        "batch_id", F.lit(batch_id)
+    return write_partial(
+        batch_df,
+        batch_id,
+        store_dir,
+        lambda df: hll_registers(df, key_col, group_cols, p=p),
     )
-    # the returned row count rides the write itself (r9: Dataset.observe
-    # — one job, no cache block; the r8 persist+count+write protocol
-    # paid a dedicated count job per batch). See _store.write_counted.
-    return write_counted(delta, store_dir, ["batch_id"])
 
 
 def run_hll_stream(
@@ -98,34 +85,24 @@ def run_hll_stream(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the accumulation query: every micro-batch's register delta
-    lands in its own store partition. ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hll_batch_update(
-            batch_df,
-            batch_id,
+    lands in its own store partition; ``compact_every=N`` folds the
+    store every N batches (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            hll_batch_update,
             store_dir=store_dir,
             key_col=key_col,
             group_cols=group_cols,
             p=p,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_hll_store(batch_df.sparkSession, store_dir, group_cols)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(
+            compact_hll_store, store_dir=store_dir, group_cols=group_cols
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hll_store_registers(
@@ -133,14 +110,10 @@ def hll_store_registers(
 ) -> DataFrame:
     """The whole-history registers: per-register MAX over every delta —
     EXACTLY the single-pass registers of the union of all batches.
-    ``heal=False`` makes the readout
-    strictly read-only (no FS mutation; a pending fold is served as
-    the consistent post-fold view — see ``_store.read_store``)."""
-    store = _read_store(spark, store_dir, heal=heal)
-    if store is None:
-        raise FileNotFoundError(f"no HLL store at {store_dir}")
-    return store.groupBy(*group_cols, "register").agg(
-        F.max("rho").alias("rho")
+    ``heal=False`` makes the readout strictly read-only (see
+    ``_store.read_store``)."""
+    return read_merged(
+        spark, store_dir, partial(_merge, group_cols=group_cols), heal=heal
     )
 
 
@@ -159,26 +132,12 @@ def compact_hll_store(
     spark, store_dir: str, group_cols: list[str], *, keep_last: int = 1
 ) -> int:
     """Collapse all batch partitions strictly below the newest
-    ``keep_last`` into the ``max − keep_last`` partition via register
-    max (estimates unchanged — max is idempotent AND associative, so
-    compaction is even safe to repeat). Same monotonic-id safety
-    argument as ``compact_cms_store``."""
-    finish_pending_fold(spark, store_dir)
-    store = spark.read.parquet(store_dir)
-    ids = store_batch_ids_or_scan(spark, store_dir)
-    if len(ids) <= keep_last + 1:
-        return 0
-    cut = ids[-keep_last] if keep_last else ids[-1] + 1
-    fold_to = cut - 1
-    folded = (
-        store.filter(F.col("batch_id") < cut)
-        .groupBy(*group_cols, "register")
-        .agg(F.max("rho").alias("rho"))
-        .withColumn("batch_id", F.lit(fold_to))
-    )
-    # stage durably, commit, overwrite, delete — one crash-safe protocol
-    # (see _store.durable_fold); the stale deletes ride the fold's commit
-    # marker so a crash can never leave a double-counting store
-    return durable_fold(
-        folded, store_dir, stale_ids=[i for i in ids if i < fold_to]
+    ``keep_last`` into one via register max (estimates unchanged — max
+    is idempotent AND associative, so compaction is even safe to
+    repeat)."""
+    return compact_store(
+        spark,
+        store_dir,
+        partial(_merge, group_cols=group_cols),
+        keep_last=keep_last,
     )

@@ -8,13 +8,11 @@ built by continuous ingestion needs exactly that: a durable fingerprint
 index, with each micro-batch anti-joined against history and the
 survivors' fingerprints appended.
 
-Replay safety: ``foreachBatch`` may re-run a batch after a crash between
-the write and the checkpoint commit. The store is therefore partitioned
-by ``batch_id`` and each batch (a) anti-joins only against STRICTLY
-EARLIER batches — so a replay never collides with its own half-written
-fingerprints — and (b) rewrites its own ``batch_id=N`` partition and
-output partition via dynamic partition overwrite. Retries converge to
-the same bytes, same as ``sink.idempotent_partition_sink``.
+Replay safety is `_store.py`'s store contract: the store is
+partitioned by ``batch_id``, each batch anti-joins only against
+STRICTLY EARLIER batches — so a replay never collides with its own
+half-written fingerprints — and rewrites its own store and output
+partitions, so retries converge to the same bytes.
 
 Scale shape: the per-batch work is one md5 projection (16-byte keys) and
 one anti-join of (batch fingerprints) against (store fingerprints) — the
@@ -25,6 +23,8 @@ first-occurrence wins via a min-id aggregate on the fingerprint.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,10 +33,10 @@ from pyspark.sql.streaming import StreamingQuery
 from ..functions.textfns import normalize_ws
 from ..sources.formats import overwrite_partitions
 from ._store import (
-    durable_fold,
+    check_batch_id,
+    compact_store,
     finish_pending_fold,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    start_batch_stream,
     write_counted,
 )
 
@@ -88,16 +88,7 @@ def dedup_batch_against_store(
             raise
         store = None
     if store is not None:
-        # monotonic-id guard from partition DIRECTORY names (one FS
-        # LIST, not a footer scan; see _store.store_max_batch_id)
-        top = store_max_batch_id(spark, store_dir)
-        if top is not None and batch_id < top:
-            raise ValueError(
-                f"batch_id {batch_id} is behind the store's max {top}: "
-                "the streaming checkpoint was reset against an existing "
-                "store. Resume with the original checkpoint, or point "
-                "store_dir/out_dir at fresh locations."
-            )
+        check_batch_id(spark, store_dir, batch_id)
         # strictly-earlier batches only: replays of THIS batch must not
         # see their own previously-written fingerprints
         history = store.filter(F.col("batch_id") < batch_id).select("__fp")
@@ -127,36 +118,13 @@ def dedup_batch_against_store(
 def compact_fingerprint_store(
     spark, store_dir: str, *, target_files: int = 8
 ) -> int:
-    """Fold the store's accumulated per-batch partitions into one.
-
-    One tiny partition per micro-batch is the classic small-files
-    problem; run this periodically (it is NOT part of the streaming
-    query). All batches strictly below the current maximum collapse into
-    the ``max-1`` partition — safe because every future batch id is
-    > max-1 (ids are monotonic), and a replay of batch ``max`` filters
-    ``batch_id < max``, which still sees the compacted rows and never
-    its own. The live ``max`` partition is left untouched. Returns the
-    number of fingerprints compacted.
-    """
-    finish_pending_fold(spark, store_dir)
-    store = spark.read.parquet(store_dir)
-    ids = store_batch_ids_or_scan(spark, store_dir)
-    if len(ids) < 3:  # nothing worth folding
-        return 0
-    top = max(ids)
-    folded = (
-        store.filter(F.col("batch_id") < top)
-        .select("__fp")
-        .distinct()
-        .repartition(target_files)
-        .withColumn("batch_id", F.lit(top - 1))
-    )
-    # stage durably, commit, overwrite, delete — one crash-safe protocol
-    # via the Hadoop FS API (see _store.durable_fold); the stale deletes
-    # ride the fold's commit marker so a crash can never leave a
-    # double-counting store
-    return durable_fold(
-        folded, store_dir, stale_ids=[i for i in ids if i < top - 1]
+    """Fold the store's accumulated per-batch partitions below the
+    current maximum into one (``_store.compact_store``): one tiny
+    partition per micro-batch is the classic small-files problem. The
+    fold is a set rewrite into ``target_files`` files. Returns the
+    number of fingerprints compacted."""
+    return compact_store(
+        spark, store_dir, lambda rows: rows.distinct().repartition(target_files)
     )
 
 
@@ -173,33 +141,21 @@ def run_incremental_dedup(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the streaming query: each micro-batch is deduped against
-    all prior history and appended to both the corpus and the store.
-    ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_batch_against_store(
-            batch_df,
-            batch_id,
+    all prior history and appended to both the corpus and the store;
+    ``compact_every=N`` folds the store every N batches
+    (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            dedup_batch_against_store,
             store_dir=store_dir,
             out_dir=out_dir,
             text_col=text_col,
             id_col=id_col,
             fmt=fmt,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_fingerprint_store(batch_df.sparkSession, store_dir)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(compact_fingerprint_store, store_dir=store_dir),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -23,17 +23,19 @@ survivors' band keys join the band store (strictly earlier batches),
 vectors, (4) matches drop, (5) survivors append to the corpus and
 BOTH stores, partitioned by ``batch_id``.
 
-Replay safety and scale shape are inherited wholesale from
-`incremental_near_dedup`: strictly-earlier history filters, dynamic
+Replay safety is `_store.py`'s store contract and the scale shape is
+`incremental_near_dedup`'s: strictly-earlier history filters, dynamic
 partition overwrite so retries converge, hot-bucket caps on candidate
 generation, vectors shipped per CANDIDATE (never per history row),
-and crash-safe store compaction via `_store.durable_fold`. Everything
+and crash-safe store compaction. Everything
 is deterministic (pinned planes + exact-integer quantized cosine), so
 a SQL engine can replay the full multi-batch run — the gate entry
 ``embedding_incremental_dedup`` does exactly that.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,11 +49,11 @@ from ..operators.bitext import (
 from ..operators.dedup import dedup_keep_min
 from ..sources.formats import overwrite_partitions
 from ._store import (
+    check_batch_id,
     check_store_config,
-    durable_fold,
+    compact_store,
     read_store,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    start_batch_stream,
 )
 
 __all__ = [
@@ -59,10 +61,6 @@ __all__ = [
     "compact_embedding_dedup_store",
     "run_incremental_embedding_dedup",
 ]
-
-
-# heal-then-read shared by every store module
-_read_store = read_store
 
 
 def embedding_dedup_batch_against_store(
@@ -124,16 +122,8 @@ def embedding_dedup_batch_against_store(
             "seed": int(seed),
         },
     )
-    vec_store = _read_store(spark, vecs_dir)
-    # monotonic-id guard from partition directory names (one FS LIST)
-    top = store_max_batch_id(spark, vecs_dir)
-    if top is not None and batch_id < top:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the store's max {top}: "
-            "the streaming checkpoint was reset against an existing "
-            "store. Resume with the original checkpoint, or point "
-            "store_dir/out_dir at fresh locations."
-        )
+    vec_store = read_store(spark, vecs_dir)
+    check_batch_id(spark, vecs_dir, batch_id)
     if dim is None:
         first = batch_df.select(F.size(vec_col).alias("n")).limit(1).collect()
         dim = int(first[0]["n"]) if first else 0
@@ -172,7 +162,7 @@ def embedding_dedup_batch_against_store(
     # (2)+(3) candidates vs strictly-earlier history, verified on exact
     # cosine — history vectors ship per candidate, never per row
     survivors = batch_kept
-    band_store = _read_store(spark, bands_dir)
+    band_store = read_store(spark, bands_dir)
     if band_store is not None and vec_store is not None:
         kept_bands = my_bands.join(
             batch_kept.select("id"), "id", "semi"
@@ -287,36 +277,17 @@ def embedding_dedup_batch_against_store(
 def compact_embedding_dedup_store(
     spark, store_dir: str, *, target_files: int = 4
 ) -> tuple[int, int]:
-    """Fold both sub-stores' per-batch partitions into one — identical
-    contract and safety argument to
-    ``incremental_near_dedup.compact_near_dedup_store`` (set stores,
-    monotonic ids, crash-safe via the durable_fold commit marker).
-    Returns (band_rows, vec_rows) folded."""
-    counts = []
-    for sub in ("bands", "vecs"):
-        path = f"{store_dir}/{sub}"
-        store = _read_store(spark, path)  # heals any pending fold itself
-        if store is None:
-            counts.append(0)
-            continue
-        ids = store_batch_ids_or_scan(spark, path)
-        if len(ids) < 3:  # nothing worth folding
-            counts.append(0)
-            continue
-        top = ids[-1]
-        fold_to = top - 1
-        folded = (
-            store.filter(F.col("batch_id") < top)
-            .drop("batch_id")
-            .repartition(target_files)
-            .withColumn("batch_id", F.lit(fold_to))
-        )
-        counts.append(
-            durable_fold(
-                folded, path, stale_ids=[i for i in ids if i < fold_to]
-            )
-        )
-    return counts[0], counts[1]
+    """Fold both sub-stores' per-batch partitions into one — the
+    contract of ``incremental_near_dedup.compact_near_dedup_store``
+    (set stores, rows carried verbatim). Returns (band_rows, vec_rows)
+    folded."""
+    def fold(rows: DataFrame) -> DataFrame:
+        return rows.repartition(target_files)  # set rewrite, not aggregate
+
+    return (
+        compact_store(spark, f"{store_dir}/bands", fold),
+        compact_store(spark, f"{store_dir}/vecs", fold),
+    )
 
 
 def run_incremental_embedding_dedup(
@@ -339,20 +310,12 @@ def run_incremental_embedding_dedup(
     against all prior history and appended to the corpus + stores.
     Banding params default to the production sizing and are recorded
     in (and checked against) the store's config on every batch.
-    ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        embedding_dedup_batch_against_store(
-            batch_df,
-            batch_id,
+    ``compact_every=N`` folds the stores every N batches
+    (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            embedding_dedup_batch_against_store,
             store_dir=store_dir,
             out_dir=out_dir,
             vec_col=vec_col,
@@ -362,13 +325,9 @@ def run_incremental_embedding_dedup(
             band_bits=band_bits,
             seed=seed,
             max_bucket=max_bucket,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_embedding_dedup_store(batch_df.sparkSession, store_dir)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(compact_embedding_dedup_store, store_dir=store_dir),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -20,10 +20,10 @@ Jaccard estimator — against the signature store, (4) docs whose best
 historical match ≥ threshold are dropped, (5) true survivors append to
 the corpus and BOTH stores, partitioned by ``batch_id``.
 
-Replay safety is inherited wholesale from ``incremental_dedup``: a
-replayed batch filters history to ``batch_id < N`` (never sees its own
-half-written rows) and rewrites its own partitions via dynamic partition
-overwrite, so retries converge to the same bytes.
+Replay safety is `_store.py`'s store contract, as in
+``incremental_dedup``: a replayed batch filters history to
+``batch_id < N`` (never sees its own half-written rows) and rewrites
+its own partitions, so retries converge to the same bytes.
 
 Scale shape: history never rescans text — the band join shuffles
 (band, bucket, id) triples and the verify join ships one 512 B signature
@@ -31,10 +31,12 @@ per CANDIDATE, not per document. The degenerate-bucket cap drops
 hot band buckets (> ``max_bucket`` historical members) from candidate
 generation, the same explicit trade as the batch LSH operator. Store
 growth is linear in survivors; fold small per-batch partitions with
-``compact_store`` periodically.
+``compact_near_dedup_store`` periodically.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,11 +51,10 @@ from ..operators.dedup import (
 )
 from ..sources.formats import overwrite_partitions
 from ._store import (
-    durable_fold,
-    finish_pending_fold,
+    check_batch_id,
+    compact_store,
     read_store,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    start_batch_stream,
     write_counted,
 )
 
@@ -62,10 +63,6 @@ __all__ = [
     "near_dedup_batch_against_store",
     "run_incremental_near_dedup",
 ]
-
-
-# heal-then-read shared by every store module (hoisted round 7)
-_read_store = read_store
 
 
 def near_dedup_batch_against_store(
@@ -99,17 +96,8 @@ def near_dedup_batch_against_store(
 
     bands_dir = f"{store_dir}/bands"
     sigs_dir = f"{store_dir}/sigs"
-    sig_store = _read_store(spark, sigs_dir)
-    # monotonic-id guard from partition DIRECTORY names (one FS LIST,
-    # not a footer scan of every partition; see _store.store_max_batch_id)
-    top = store_max_batch_id(spark, sigs_dir)
-    if top is not None and batch_id < top:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the store's max {top}: "
-            "the streaming checkpoint was reset against an existing "
-            "store. Resume with the original checkpoint, or point "
-            "store_dir/out_dir at fresh locations."
-        )
+    sig_store = read_store(spark, sigs_dir)
+    check_batch_id(spark, sigs_dir, batch_id)
 
     # (1) within-batch near-dedup, first (min-id) occurrence wins.
     # Signatures are computed ONCE for the whole batch and shared with
@@ -143,7 +131,7 @@ def near_dedup_batch_against_store(
         sig, bands=bands, num_perm=num_perm, portable=portable
     ).select("id", "band", "bucket")
     survivors_ids = sig.select("id")
-    band_store = _read_store(spark, bands_dir)
+    band_store = read_store(spark, bands_dir)
     if band_store is not None and sig_store is not None:
         hist_bands = band_store.filter(F.col("batch_id") < batch_id).select(
             "band", "bucket", F.col("id").alias("hist_id")
@@ -232,49 +220,22 @@ def near_dedup_batch_against_store(
 def compact_near_dedup_store(
     spark, store_dir: str, *, target_files: int = 4
 ) -> tuple[int, int]:
-    """Fold BOTH sub-stores' accumulated per-batch partitions into one
-    (VERDICT r6 #6: the last store family without a compactor — one
-    tiny parquet partition per micro-batch is the small-files problem;
-    cadence 50-100 suffices here per the round-6 30-batch sweep).
-
-    All batches strictly below the current maximum collapse into the
-    ``max−1`` partition; rows are carried verbatim (set stores — each
-    (id, band, bucket) / (id, sig) row is unique by construction, so
-    the fold is a rewrite, not an aggregate, and candidate generation
-    and signature verification read exactly the same sets afterwards).
-    Safe for the same monotonic-id reasons as
-    ``incremental_dedup.compact_fingerprint_store``: every future batch
-    id is > max−1, and a replay of batch ``max`` filters
-    ``batch_id < max``, which still sees the folded rows and never its
-    own. Crash-safe end to end via ``_store.durable_fold``'s commit
-    marker (each sub-store recovers independently). Returns
+    """Fold BOTH sub-stores' per-batch partitions below the current
+    maximum into one (``_store.compact_store``; cadence 50-100 suffices
+    here per the round-6 30-batch sweep). Rows are carried verbatim:
+    each (id, band, bucket) / (id, sig) row is unique by construction,
+    so the fold is a rewrite, not an aggregate, and candidate
+    generation and verification read the same sets afterwards. Each
+    sub-store recovers from a crashed fold independently. Returns
     (band_rows, sig_rows) folded — (0, 0) means nothing was worth
     folding."""
-    counts = []
-    for sub in ("bands", "sigs"):
-        path = f"{store_dir}/{sub}"
-        store = _read_store(spark, path)  # heals any pending fold itself
-        if store is None:
-            counts.append(0)
-            continue
-        ids = store_batch_ids_or_scan(spark, path)
-        if len(ids) < 3:  # nothing worth folding
-            counts.append(0)
-            continue
-        top = ids[-1]
-        fold_to = top - 1
-        folded = (
-            store.filter(F.col("batch_id") < top)
-            .drop("batch_id")
-            .repartition(target_files)
-            .withColumn("batch_id", F.lit(fold_to))
-        )
-        counts.append(
-            durable_fold(
-                folded, path, stale_ids=[i for i in ids if i < fold_to]
-            )
-        )
-    return counts[0], counts[1]
+    def fold(rows: DataFrame) -> DataFrame:
+        return rows.repartition(target_files)  # set rewrite, not aggregate
+
+    return (
+        compact_store(spark, f"{store_dir}/bands", fold),
+        compact_store(spark, f"{store_dir}/sigs", fold),
+    )
 
 
 def run_incremental_near_dedup(
@@ -291,34 +252,22 @@ def run_incremental_near_dedup(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the streaming query: each micro-batch is near-deduped
-    against all prior history and appended to the corpus + stores.
-    ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        near_dedup_batch_against_store(
-            batch_df,
-            batch_id,
+    against all prior history and appended to the corpus + stores;
+    ``compact_every=N`` folds the stores every N batches
+    (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            near_dedup_batch_against_store,
             store_dir=store_dir,
             out_dir=out_dir,
             text_col=text_col,
             id_col=id_col,
             threshold=threshold,
             fmt=fmt,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_near_dedup_store(batch_df.sparkSession, store_dir)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(compact_near_dedup_store, store_dir=store_dir),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

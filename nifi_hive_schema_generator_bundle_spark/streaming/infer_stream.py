@@ -31,6 +31,7 @@ from ..operators.infer import infer_schema_df, route_and_infer  # noqa: F401
 from ..operators.routing import split_valid
 from ..plans.lattice import merge_types, type_to_dict
 from ..plans.render import render_alter_ddl, render_hive_ddl
+from ._store import start_batch_stream
 
 __all__ = ["InferenceState", "run_inference_stream"]
 
@@ -120,11 +121,10 @@ def run_inference_stream(
         # micro-batch size throttle: bounds per-batch work (and memory)
         # when draining a large backlog
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(input_dir)
-    writer = (
-        stream.writeStream.foreachBatch(state.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    query = start_batch_stream(
+        reader.load(input_dir),
+        state.process_batch,
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), state
+    return query, state

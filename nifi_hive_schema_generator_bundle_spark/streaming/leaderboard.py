@@ -9,10 +9,9 @@ SUFFICIENT STATISTICS (ordered-pair battle/win counts — fixed-size per
 model pair, never raw battles), each micro-batch appends its partial
 counts, and the leaderboard refits from the folded store.
 
-Replay safety: ``foreachBatch`` may re-run a batch after a crash
-between the write and the checkpoint commit; each batch dynamically
+Replay safety is `_store.py`'s partition-per-batch rule: each batch
 overwrites only its own ``batch_id=N`` partition, so a replay converges
-to the same bytes (the ``incremental_dedup`` discipline).
+to the same bytes.
 
 Scale shape: the stored state is O(model pairs), not O(battles) — the
 per-batch write is a (i, j, n, w) partial aggregate; the refit reads the
@@ -22,10 +21,15 @@ it. Battles themselves are never retained.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from ..sources.formats import overwrite_partitions
+from ._store import start_batch_stream
 
 __all__ = [
     "battles_to_pair_stats",
@@ -63,24 +67,11 @@ def update_leaderboard_store(
 ) -> None:
     """foreachBatch hook: write this batch's pair partials into its own
     ``batch_id=N`` partition (dynamic overwrite — replays converge)."""
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            battles_to_pair_stats(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+    overwrite_partitions(
+        battles_to_pair_stats(batch_df).withColumn("batch_id", F.lit(batch_id)),
+        store_dir,
+        ["batch_id"],
+    )
 
 
 def leaderboard_from_store(
@@ -211,12 +202,9 @@ def run_streaming_leaderboard(
     """Wire a battle stream into the store via foreachBatch. Read the
     current leaderboard at any time with ``leaderboard_from_store``."""
 
-    def _sink(df: DataFrame, bid: int) -> None:
-        update_leaderboard_store(df, bid, store_dir=store_dir)
-
-    writer = battles_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batch_stream(
+        battles_stream,
+        partial(update_leaderboard_store, store_dir=store_dir),
+        checkpoint_dir=checkpoint_dir,
+        available_now=trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

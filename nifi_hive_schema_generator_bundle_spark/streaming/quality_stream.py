@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.quality_checks import quality_report
+from ..sources.formats import overwrite_partitions
+from ._store import start_batch_stream
 
 __all__ = ["run_quality_stream"]
 
@@ -46,8 +48,6 @@ def run_quality_stream(
     job, ``streaming/incremental_dedup.py``)."""
 
     def _check(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         rep = quality_report(
             batch,
             not_null=not_null,
@@ -55,23 +55,15 @@ def run_quality_stream(
             accepted_values=accepted_values,
             ranges=ranges,
         ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                rep.write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(report_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        overwrite_partitions(rep, report_path, ["batch_id"])
         if on_fail is not None:
             failed = [r for r in rep.collect() if not r["passed"]]
             if failed:
                 on_fail(batch_id, failed)
 
-    writer = stream.writeStream.foreachBatch(_check).option(
-        "checkpointLocation", checkpoint
+    return start_batch_stream(
+        stream,
+        _check,
+        checkpoint_dir=checkpoint,
+        available_now=trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

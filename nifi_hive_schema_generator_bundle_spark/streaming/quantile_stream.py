@@ -11,12 +11,9 @@ single-pass build over everything ever seen, not approximately so (the
 approximation lives entirely in the fixed bucket width, which replay
 order cannot change).
 
-Replay safety follows `cms_stream.py`'s contract exactly: the store is
-partitioned by ``batch_id``, each batch dynamic-partition-overwrites
-ONLY its own delta partition (a crash-replay rewrites the same bytes
-instead of double-counting), a batch id behind the store's max raises
-(checkpoint reset against a live store), and ``compact_histogram_store``
-collapses history partitions by per-bucket sums — estimates unchanged,
+Replay safety, the monotonic-id guard, the compaction cadence and the
+fold are `_store.py`'s store contract verbatim; the merge is the
+per-bucket sum, so compaction leaves every estimate unchanged —
 linearity again.
 
 State: O(batches × groups × B) between compactions, O(groups × B)
@@ -24,6 +21,8 @@ after — never O(rows).
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,12 +33,10 @@ from ..operators.quantile_sketch import (
     log_bucket_histogram,
 )
 from ._store import (
-    write_counted,
-    durable_fold,
-    finish_pending_fold,
-    read_store,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    compact_store,
+    read_merged,
+    start_batch_stream,
+    write_partial,
 )
 
 __all__ = [
@@ -51,8 +48,10 @@ __all__ = [
 ]
 
 
-# heal-then-read shared by every store module (hoisted round 7)
-_read_store = read_store
+def _merge(rows: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Per-bucket sum: the one merge the readout and the compactor
+    share."""
+    return rows.groupBy(*group_cols, "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def histogram_batch_update(
@@ -67,27 +66,12 @@ def histogram_batch_update(
     """Fold one micro-batch's histogram delta into the store; returns
     rows written. Reusable from any ``foreachBatch`` or batch loop with
     monotonic batch numbering."""
-    spark = batch_df.sparkSession
-    if batch_df.isEmpty():
-        return 0
-    # monotonic-id guard from partition DIRECTORY names (one FS LIST,
-    # not a footer scan of every partition — the measured per-batch
-    # drift source at high batch counts; see _store.store_max_batch_id)
-    top = store_max_batch_id(spark, store_dir)
-    if top is not None and batch_id < top:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the store's max {top}: "
-            "the streaming checkpoint was reset against an existing "
-            "store. Resume with the original checkpoint or use a "
-            "fresh store_dir."
-        )
-    delta = log_bucket_histogram(
-        batch_df, val_col, group_cols, boundaries
-    ).withColumn("batch_id", F.lit(batch_id))
-    # the returned row count rides the write itself (r9: Dataset.observe
-    # — one job, no cache block; the r8 persist+count+write protocol
-    # paid a dedicated count job per batch). See _store.write_counted.
-    return write_counted(delta, store_dir, ["batch_id"])
+    return write_partial(
+        batch_df,
+        batch_id,
+        store_dir,
+        lambda df: log_bucket_histogram(df, val_col, group_cols, boundaries),
+    )
 
 
 def run_histogram_stream(
@@ -102,50 +86,34 @@ def run_histogram_stream(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the accumulation query: every micro-batch's histogram delta
-    lands in its own store partition. ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        histogram_batch_update(
-            batch_df,
-            batch_id,
+    lands in its own store partition; ``compact_every=N`` folds the
+    store every N batches (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            histogram_batch_update,
             store_dir=store_dir,
             val_col=val_col,
             group_cols=group_cols,
             boundaries=boundaries,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_histogram_store(
-                batch_df.sparkSession, store_dir, group_cols
-            )
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(
+            compact_histogram_store, store_dir=store_dir, group_cols=group_cols
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def histogram_store(
     spark, store_dir: str, group_cols: list[str], *, heal: bool = True
 ) -> DataFrame:
     """The whole-history histogram: per-bucket sum over every delta.
-    ``heal=False`` makes the readout
-    strictly read-only (no FS mutation; a pending fold is served as
-    the consistent post-fold view — see ``_store.read_store``)."""
-    store = _read_store(spark, store_dir, heal=heal)
-    if store is None:
-        raise FileNotFoundError(f"no histogram store at {store_dir}")
-    return store.groupBy(*group_cols, "bucket").agg(
-        F.sum("cnt").alias("cnt")
+    ``heal=False`` makes the readout strictly read-only (see
+    ``_store.read_store``)."""
+    return read_merged(
+        spark, store_dir, partial(_merge, group_cols=group_cols), heal=heal
     )
 
 
@@ -171,26 +139,11 @@ def compact_histogram_store(
     spark, store_dir: str, group_cols: list[str], *, keep_last: int = 1
 ) -> int:
     """Collapse all batch partitions strictly below the newest
-    ``keep_last`` into the ``max − keep_last`` partition via per-bucket
-    sums (quantile answers unchanged: linearity). Same safety argument
-    as ``compact_cms_store``: ids are monotonic and a replay of the
-    live max batch only rewrites its own partition."""
-    finish_pending_fold(spark, store_dir)
-    store = spark.read.parquet(store_dir)
-    ids = store_batch_ids_or_scan(spark, store_dir)
-    if len(ids) <= keep_last + 1:
-        return 0
-    cut = ids[-keep_last] if keep_last else ids[-1] + 1
-    fold_to = cut - 1
-    folded = (
-        store.filter(F.col("batch_id") < cut)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("batch_id", F.lit(fold_to))
-    )
-    # stage durably, commit, overwrite, delete — one crash-safe protocol
-    # (see _store.durable_fold); the stale deletes ride the fold's commit
-    # marker so a crash can never leave a double-counting store
-    return durable_fold(
-        folded, store_dir, stale_ids=[i for i in ids if i < fold_to]
+    ``keep_last`` into one via per-bucket sums (quantile answers
+    unchanged: linearity)."""
+    return compact_store(
+        spark,
+        store_dir,
+        partial(_merge, group_cols=group_cols),
+        keep_last=keep_last,
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.formats import overwrite_partitions
+from ._store import start_batch_stream
 
 __all__ = ["idempotent_partition_sink"]
 
@@ -43,9 +44,9 @@ def idempotent_partition_sink(
             return
         overwrite_partitions(batch_df, path, partition_by, fmt=fmt)
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batch_stream(
+        stream_df,
+        write_batch,
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

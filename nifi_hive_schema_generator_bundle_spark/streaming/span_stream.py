@@ -17,9 +17,9 @@ span-dedup statistic:
   once (the `incremental_dedup` ingest discipline): occurrence counts
   sum trivially, and per-batch count(DISTINCT doc) sums to the corpus
   count(DISTINCT doc) because a doc's grams live in exactly one batch.
-* compaction: per-gram sums fold by linearity (`compact_cms_store`'s
-  argument) through the crash-safe `durable_fold` commit-marker
-  protocol; every reader heals pending folds first.
+* compaction: per-gram sums fold by linearity. Replay safety, the
+  monotonic-id guard, the cadence and the crash-safe fold are
+  `_store.py`'s store contract verbatim.
 
 Scale shape: the store holds one row per distinct gram hash per batch
 (8-byte key + two longs), folded to one row per distinct gram by
@@ -31,18 +31,19 @@ batch operators.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import _gram_positions, _span_coverage
 from ._store import (
-    write_counted,
-    durable_fold,
+    compact_store,
     finish_pending_fold,
-    read_store,
-    store_batch_ids_or_scan,
-    store_max_batch_id,
+    read_merged,
+    start_batch_stream,
+    write_partial,
 )
 
 __all__ = [
@@ -54,8 +55,13 @@ __all__ = [
 ]
 
 
-# heal-then-read shared by every store module (hoisted round 7)
-_read_store = read_store
+def _merge(rows: DataFrame) -> DataFrame:
+    """Per-gram sums of both measures: the one merge the readout and
+    the compactor share."""
+    return rows.groupBy("gh").agg(
+        F.sum("cnt").cast("long").alias("cnt"),
+        F.sum("ndocs").cast("long").alias("ndocs"),
+    )
 
 
 def span_gram_batch_update(
@@ -72,47 +78,25 @@ def span_gram_batch_update(
     run (dedupe upstream — `incremental_dedup` — if the source can
     repeat docs); a REPLAY of the same ``batch_id`` rewrites only its
     own partition and converges to the same bytes."""
-    spark = batch_df.sparkSession
-    if batch_df.isEmpty():
-        return 0
-    finish_pending_fold(spark, store_dir)
-    top = store_max_batch_id(spark, store_dir)
-    if top is not None and batch_id < top:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the store's max {top}: "
-            "the streaming checkpoint was reset against an existing "
-            "store. Resume with the original checkpoint, or point "
-            "store_dir at a fresh location."
-        )
-    _toks, _lengths, grams = _gram_positions(batch_df, k, text_col, id_col)
-    partial = (
-        grams.groupBy("gh")
-        .agg(
+
+    def build(df: DataFrame) -> DataFrame:
+        _toks, _lengths, grams = _gram_positions(df, k, text_col, id_col)
+        return grams.groupBy("gh").agg(
             F.count(F.lit(1)).cast("long").alias("cnt"),
             F.countDistinct(F.col(id_col)).cast("long").alias("ndocs"),
         )
-        .withColumn("batch_id", F.lit(batch_id))
-    )
-    # the returned row count rides the write itself (r9: Dataset.observe
-    # — one job, no cache block; the persist+count+write protocol paid a
-    # dedicated count job per batch). See _store.write_counted.
-    return write_counted(partial, store_dir, ["batch_id"])
+
+    finish_pending_fold(batch_df.sparkSession, store_dir)
+    return write_partial(batch_df, batch_id, store_dir, build)
 
 
 def span_store_grams(spark, store_dir: str, *, heal: bool = True) -> DataFrame:
     """Whole-history merged (gh, cnt, ndocs): per-gram sums over every
     batch partial — identical to a single-run aggregation over the
     union of all ingested documents (additivity; see module doc).
-    ``heal=False`` makes the readout
-    strictly read-only (no FS mutation; a pending fold is served as
-    the consistent post-fold view — see ``_store.read_store``)."""
-    store = _read_store(spark, store_dir, heal=heal)
-    if store is None:
-        raise FileNotFoundError(f"no span-gram store at {store_dir}")
-    return store.groupBy("gh").agg(
-        F.sum("cnt").cast("long").alias("cnt"),
-        F.sum("ndocs").cast("long").alias("ndocs"),
-    )
+    ``heal=False`` makes the readout strictly read-only (see
+    ``_store.read_store``)."""
+    return read_merged(spark, store_dir, _merge, heal=heal)
 
 
 def span_store_coverage(
@@ -148,29 +132,9 @@ def span_store_coverage(
 
 def compact_span_store(spark, store_dir: str, *, keep_last: int = 1) -> int:
     """Collapse all batch partitions strictly below the newest
-    ``keep_last`` into the ``max − keep_last`` partition via per-gram
-    sums (readouts unchanged: linearity). Same monotonic-id safety
-    argument as ``compact_cms_store``; crash-safe via the
-    ``durable_fold`` commit marker."""
-    finish_pending_fold(spark, store_dir)
-    store = spark.read.parquet(store_dir)
-    ids = store_batch_ids_or_scan(spark, store_dir)
-    if len(ids) <= keep_last + 1:
-        return 0
-    cut = ids[-keep_last] if keep_last else ids[-1] + 1
-    fold_to = cut - 1
-    folded = (
-        store.filter(F.col("batch_id") < cut)
-        .groupBy("gh")
-        .agg(
-            F.sum("cnt").cast("long").alias("cnt"),
-            F.sum("ndocs").cast("long").alias("ndocs"),
-        )
-        .withColumn("batch_id", F.lit(fold_to))
-    )
-    return durable_fold(
-        folded, store_dir, stale_ids=[i for i in ids if i < fold_to]
-    )
+    ``keep_last`` into one via per-gram sums (readouts unchanged:
+    linearity)."""
+    return compact_store(spark, store_dir, _merge, keep_last=keep_last)
 
 
 def run_span_stats_stream(
@@ -185,31 +149,19 @@ def run_span_stats_stream(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the accumulation query: every micro-batch's gram partials
-    land in their own store partition. ``compact_every=N`` folds the
-    store's accumulated per-batch partitions every N batches (after
-    the batch-id-N update commits its partition), bounding partition
-    count for unbounded drains — the SCALE.md 30-batch sweeps price
-    the cadence: ~10 for the sketch-grid stores, 50-100 for the dedup
-    stores, where per-batch partials are larger and folds dearer. A
-    crash between the fold and the checkpoint commit is safe: the
-    replayed batch rewrites only its own (live, kept) partition, and
-    the fold itself is crash-safe via the durable_fold commit marker."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        span_gram_batch_update(
-            batch_df,
-            batch_id,
+    land in their own store partition; ``compact_every=N`` folds the
+    store every N batches (``_store.start_batch_stream``)."""
+    return start_batch_stream(
+        stream_df,
+        partial(
+            span_gram_batch_update,
             store_dir=store_dir,
             k=k,
             text_col=text_col,
             id_col=id_col,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_span_store(batch_df.sparkSession, store_dir)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        available_now=available_now,
+        compact_every=compact_every,
+        compact=partial(compact_span_store, store_dir=store_dir),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -161,12 +161,12 @@ def test_fit_materializes_before_cache_release(spark):
     cache_mgr.clearCache()
     out = bradley_terry(df, iters=6)
     assert cache_mgr.isEmpty(), "bradley_terry leaked its loop caches"
-    # materialized result: the physical plan is a checkpoint scan, not
-    # the 6-round join tree over the battle table
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "Scan ExistingRDD" in plan and "Join" not in plan, plan
+    # materialized result: the plan is one leaf over an eagerly written
+    # local checkpoint, not the 6-round join tree over the battle table
+    logical = out._jdf.queryExecution().logical()
+    assert logical.children().isEmpty()
+    rdd = logical.rdd()
+    assert rdd.isLocallyCheckpointed() and rdd.isCheckpointed()
     ref = _fit_reference(battles, 6)
     got = {r["model"]: r["rating"] for r in out.collect()}
     assert got == {m: pytest.approx(round(v, 6)) for m, v in ref.items()}
