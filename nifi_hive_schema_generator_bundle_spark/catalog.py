@@ -46,13 +46,10 @@ def register_table(
     schema: DataType,
     table: str,
     location: str,
-    *,
-    drop_first: bool = True,
 ) -> str:
-    """Execute the Spark-native DDL; returns the statement that ran."""
+    """Drop ``table`` if present, then run the Spark-native DDL; returns it."""
     ddl = render_spark_ddl(schema, table, location)
-    if drop_first:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
     # Spark resolves the relation eagerly at CREATE time and errors on a
     # missing location; ensure it exists (Hadoop FS API — local/HDFS/S3).
     jvm = spark._jvm

@@ -12,17 +12,20 @@ all groups.
 Type classes are the lattice universe at the top level: STRUCT (JSON
 object), ARRAY, STRING (every scalar, every conflict — the demotion rule
 of CreateHQL.scala:63-64); JSON null absorbs (an all-null field renders
-STRING). The report is driver-built from the tiny per-group schema trees
-— record bodies never leave executors.
+STRING). The report is driver-built from the tiny per-group raw shapes
+(``plans.lattice``) — record bodies never leave executors. Groups are
+reported in key order, a NULL key (records without the group field)
+first.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, DataType, StructType
+from typing import Any
 
-from .infer import infer_schema_by_key
-from ..plans.lattice import merge_types
+from pyspark.sql import DataFrame, SparkSession
+
+from .infer import _shapes_by_key
+from ..plans.lattice import merge_raw
 
 __all__ = [
     "schema_drift_report",
@@ -32,18 +35,22 @@ __all__ = [
 ]
 
 
-def field_classes(t: DataType) -> dict[str, str]:
-    """Top-level field → lattice class: STRUCT, ARRAY or STRING (scalars,
-    conflicts and NullType, since an all-null field renders STRING). A
-    non-object schema has no fields."""
-    if not isinstance(t, StructType):
+def field_classes(shape: Any) -> dict[str, str]:
+    """Top-level field of a raw shape → lattice class: STRUCT, ARRAY or
+    STRING (scalars, conflicts and bottom, since an all-null field renders
+    STRING). A non-object shape has no fields."""
+    if not isinstance(shape, dict):
         return {}
     return {
-        f.name: "STRUCT" if isinstance(f.dataType, StructType)
-        else "ARRAY" if isinstance(f.dataType, ArrayType)
+        k: "STRUCT" if isinstance(v, dict) else "ARRAY" if isinstance(v, list)
         else "STRING"
-        for f in t.fields
+        for k, v in shape.items()
     }
+
+
+def _null_first(key: str | None) -> tuple:
+    """Sort key for group keys: a NULL group first, then by value."""
+    return (key is not None, key)
 
 
 def schema_drift_report(
@@ -62,13 +69,7 @@ def schema_drift_report(
     arrays — the reference's "ERROR" case, CreateHQL.scala:91) report
     every field 'absent'.
     """
-    per_key = infer_schema_by_key(df, json_col, key_col)
-    if not per_key:
-        return spark.createDataFrame(
-            [],
-            "group_key string, field string, group_class string, "
-            "global_class string, drift string",
-        )
+    per_key = _shapes_by_key(df, json_col, key_col)
     # Global view = merge over the groups whose root is an object only. A
     # merge over every group would let one non-object group demote the
     # entire corpus schema to STRING (the reference's "ERROR" case) and
@@ -76,14 +77,14 @@ def schema_drift_report(
     # resolution and shows such groups as all-'absent'. Merging structs
     # applies the full conflict lattice per field, and matches a
     # per-record class derivation (merge is associative).
-    merged: DataType = StructType([])
-    for t in per_key.values():
-        if isinstance(t, StructType):
-            merged = merge_types(merged, t)
+    merged: dict = {}
+    for shape in per_key.values():
+        if isinstance(shape, dict):
+            merged = merge_raw(merged, shape)
     global_fields = field_classes(merged)
 
     rows = []
-    for key in sorted(per_key):
+    for key in sorted(per_key, key=_null_first):
         group_fields = field_classes(per_key[key])
         for field in sorted(global_fields):
             gcls = global_fields[field]

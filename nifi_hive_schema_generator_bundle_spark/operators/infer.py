@@ -5,8 +5,9 @@ One implementation, one JVM aggregate: ``schema_of_variant_agg`` over
 exactly when that parsed value is non-NULL, so the same value gives the
 routing counts. Spark merges the per-record variant schemas
 associatively (partial aggregates per partition, one tiny final merge),
-and the returned schema string is parsed into the reference lattice
-(``plans.lattice``):
+and the returned schema string is parsed into a raw lattice shape
+(``plans.lattice``), which driver consumers take as it is; the public
+functions convert once on return:
 
 * ``OBJECT<…>`` → struct (key union; Spark emits keys name-sorted)
 * ``ARRAY<…>``  → array of the merged element
@@ -35,9 +36,10 @@ from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StructType
+from pyspark.sql.types import DataType
 
-from ..plans.lattice import merge_types, type_from_dict
+# ``merge_types`` stays a module attribute: perfbench/spans.py wraps it.
+from ..plans.lattice import merge_raw, merge_types, type_from_dict  # noqa: F401
 from .routing import parse_valid_json
 
 __all__ = [
@@ -141,11 +143,11 @@ def _collect_case_sensitive(df: DataFrame) -> list[Row]:
     return DataFrame(jdf, spark).collect()
 
 
-def _infer(df: DataFrame, column: str, *keys: str) -> list[tuple[Any, Inferred]]:
-    """``(key values, Inferred)`` per group of ``keys`` in ONE Spark job
-    (scan → partial aggregate per partition → final merge); no keys is
-    one global group. Counts and shape come from one parsed value per
-    line. Every fold starts from the empty struct like
+def _infer(df: DataFrame, column: str, *keys: str) -> list[tuple]:
+    """``(key values, good, bad, raw shape)`` per group of ``keys`` in ONE
+    Spark job (scan → partial aggregate per partition → final merge); no
+    keys is one global group. Counts and shape come from one parsed value
+    per line. Every fold starts from the empty struct like
     ``CreateHQL.scala:12``: top-level arrays demote to STRING (``"ERROR"``).
     """
     projected = df.select(
@@ -157,19 +159,23 @@ def _infer(df: DataFrame, column: str, *keys: str) -> list[tuple[Any, Inferred]]
             F.count("_v"), F.count(F.lit(1)), F.schema_of_variant_agg("_v")
         )
     )
-    out = []
-    for *key, good, total, text in rows:
-        shape = type_from_dict(parse_variant_schema(text))
-        seeded = merge_types(StructType([]), shape)
-        out.append((tuple(key), Inferred(good, total - good, seeded)))
-    return out
+    return [
+        (tuple(key), good, total - good, merge_raw({}, parse_variant_schema(t)))
+        for *key, good, total, t in rows
+    ]
+
+
+def _shapes_by_key(df: DataFrame, json_col: str, key_col: str) -> dict:
+    """Raw shape per key with a valid line; a NULL key is kept as ``None``."""
+    rows = _infer(df, json_col, key_col)
+    return {key: shape for (key,), good, _, shape in rows if good}
 
 
 def route_and_infer(df: DataFrame, column: str = "value") -> Inferred:
     """Valid count, invalid count and the lattice schema of ``column`` in
     ONE Spark job; no valid line gives the empty struct."""
-    ((_, inferred),) = _infer(df, column)
-    return inferred
+    ((_, good, bad, shape),) = _infer(df, column)
+    return Inferred(good, bad, type_from_dict(shape))
 
 
 def infer_schema_df(df: DataFrame, column: str = "value") -> DataType:
@@ -188,7 +194,6 @@ def infer_schema_by_key(
     A key with no valid line is absent; a NULL key is kept as ``None``.
     """
     return {
-        key: inferred.schema
-        for (key,), inferred in _infer(df, json_col, key_col)
-        if inferred.good
+        key: type_from_dict(shape)
+        for key, shape in _shapes_by_key(df, json_col, key_col).items()
     }

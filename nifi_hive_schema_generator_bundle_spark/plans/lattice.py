@@ -1,26 +1,27 @@
 """The type-merge lattice — the semantic heart of the engine.
 
 Re-expresses the reference's schema-inference semantics
-(``CreateHQL.scala:38-66`` — ``prepare`` + ``merge``) over
-:mod:`pyspark.sql.types` objects, and over their raw shapes
+(``CreateHQL.scala:38-66`` — ``prepare`` + ``merge``) over raw shapes
 (``None | "s" | [elem] | {name: shape}``), instead of a value-as-type JSON
-encoding.
+encoding. The raw shape is the driver's one schema value: drift is ``==``
+over it, and a :mod:`pyspark.sql.types` tree is built (``type_from_dict``)
+only where a schema leaves the engine (return value, renderer, callback).
 
 The inferred type universe is deliberately tiny (SURVEY §1.3):
 
-* ``StringType``  — any JSON scalar (string, number, bool) and any conflict
-* ``ArrayType(T)`` — JSON array; element = merge of all elements
-* ``StructType``  — JSON object; fields = union of keys across records
-* ``NullType``    — lattice bottom ("no information yet"); absorbed by
-  anything; renders as STRING if it survives to output
+* ``"s"`` (``StringType``) — any JSON scalar and any conflict
+* ``[elem]`` (``ArrayType``) — JSON array; element = merge of all elements
+* ``{name: shape}`` (``StructType``) — JSON object; union of keys
+* ``None`` (``NullType``) — bottom ("no information yet"); absorbed by
+  anything; STRING if it survives to output (``finalize_raw``)
 
 ``merge`` is commutative and associative, which is what makes the fold
 distributable: per-partition partial merges combine into a final schema
 (combiner-style aggregation; ``operators.infer`` runs it as one Spark
 aggregate).
 
-Lattice rules (SURVEY §1.4; each has a unit test), written once, over
-raw shapes, in ``infer_raw``/``merge_raw``:
+Lattice rules (SURVEY §1.4; each has a unit test), written once, in
+``infer_raw``/``merge_raw``:
 
 1. ``merge(NULL, x) = x``; ``merge(x, NULL) = x``      (CreateHQL.scala:53-54)
 2. ``merge(ARRAY[a], ARRAY[b]) = ARRAY[merge(a, b)]``  (CreateHQL.scala:55)
@@ -28,12 +29,12 @@ raw shapes, in ``infer_raw``/``merge_raw``:
    (CreateHQL.scala:57-61)
 4. any other pair → ``STRING``                         (CreateHQL.scala:63-64)
 
-The typed forms (``infer_json_value``, ``merge_types``) are conversions
-over the raw ones through ``type_to_dict``/``type_from_dict``.
+The typed forms (``infer_json_value``, ``merge_types``, ``finalize_type``)
+are one-line conversions over the raw ones.
 
 Array normalization (``prepare``, CreateHQL.scala:38-48) happens at
 *inference* time here: a JSON array's elements are folded with ``merge``
-starting from ``NullType`` — so ``[]`` infers ``ARRAY<NULL>`` (renders
+starting from bottom — so ``[]`` infers ``ARRAY<NULL>`` (renders
 ``ARRAY<STRING>``) and ``[1, 2]`` infers ``ARRAY<STRING>`` (two numbers
 hit the conflict rule, exactly as the reference's catch-all does).
 
@@ -59,7 +60,7 @@ from pyspark.sql.types import (
 )
 
 __all__ = [
-    "BOTTOM",
+    "finalize_raw",
     "finalize_type",
     "infer_json_value",
     "infer_json_line",
@@ -70,9 +71,6 @@ __all__ = [
     "type_to_dict",
     "type_from_dict",
 ]
-
-BOTTOM: DataType = NullType()
-
 
 def infer_raw(value: Any) -> Any:
     """Map one parsed JSON value to its raw lattice shape: ``null`` →
@@ -146,23 +144,23 @@ def schema_from_json_lines(lines) -> DataType:
     return type_from_dict(schema)
 
 
-def finalize_type(dt: DataType) -> DataType:
-    """Collapse surviving lattice bottoms to STRING.
+def finalize_raw(shape: Any) -> Any:
+    """Collapse surviving bottoms to STRING, as the reference's catch-all
+    renders a leftover ``JsNull`` (CreateHQL.scala:81): the schema a table
+    can see."""
+    if shape is None:
+        return "s"
+    if isinstance(shape, list):
+        return [finalize_raw(shape[0])]
+    if isinstance(shape, dict):
+        return {k: finalize_raw(v) for k, v in shape.items()}
+    return shape
 
-    The reference renders any leftover ``JsNull`` as ``STRING`` via the
-    catch-all at CreateHQL.scala:81; this is the structural equivalent for
-    consumers that need a real usable ``StructType`` (executable DDL,
-    ``from_json``, ``saveAsTable``) instead of rendered text.
-    """
-    if isinstance(dt, NullType):
-        return StringType()
-    if isinstance(dt, ArrayType):
-        return ArrayType(finalize_type(dt.elementType), True)
-    if isinstance(dt, StructType):
-        return StructType(
-            [StructField(f.name, finalize_type(f.dataType), True) for f in dt.fields]
-        )
-    return dt
+
+def finalize_type(dt: DataType) -> DataType:
+    """``finalize_raw`` over lattice types: a usable ``StructType`` for
+    ``from_json`` or ``saveAsTable`` instead of rendered text."""
+    return type_from_dict(finalize_raw(type_to_dict(dt)))
 
 
 # --- ser/de between typed and raw shapes ----------------------------------

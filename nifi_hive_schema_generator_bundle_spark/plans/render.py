@@ -105,7 +105,7 @@ def sanitize_identifiers(rendered: str) -> str:
 def _quote(name: str) -> str:
     """``[.-]`` → ``_`` on one name, then backtick-quoted with any
     backtick inside doubled (Spark SQL's escape)."""
-    return "`" + _SANITIZE_RE.sub("_", name).replace("`", "``") + "`"
+    return "`" + sanitize_identifiers(name).replace("`", "``") + "`"
 
 
 def sanitize_schema(dt: DataType) -> DataType:
@@ -129,7 +129,6 @@ def render_hive_ddl(
     location: str,
     *,
     drop_if_exists: bool = False,
-    serde: str = "org.apache.hive.hcatalog.data.JsonSerDe",
     stored_as: str | None = None,
 ) -> str:
     """Reference-exact DDL (``table``, CreateHQL.scala:94-99).
@@ -147,7 +146,7 @@ def render_hive_ddl(
     storage = (
         f") STORED AS {stored_as}"
         if stored_as is not None
-        else f") ROW FORMAT SERDE '{serde}'"
+        else ") ROW FORMAT SERDE 'org.apache.hive.hcatalog.data.JsonSerDe'"
     )
     return "\n".join(
         [
@@ -187,40 +186,33 @@ def render_alter_ddl(old: DataType, new: DataType, table: str) -> list[str]:
     existing table from ``old`` to ``new`` without a full re-create.
 
     Top-level additions become one ``ALTER TABLE … ADD COLUMNS``; any
-    column whose type changed (conflict demotion, array-element widening,
-    struct key growth) becomes ``ALTER TABLE … CHANGE COLUMN`` — Hive can
-    restate a column type in place for SerDe-backed tables. Returns []
-    when nothing changed, and falls back to nothing-but-CHANGE statements
-    rather than guessing about removals (the lattice never removes keys).
+    column whose rendered type changed (conflict demotion, array-element
+    widening, struct key growth; not a bottom refined to STRING) becomes
+    ``ALTER TABLE … CHANGE COLUMN`` — Hive can restate a column type in
+    place for SerDe-backed tables. Returns [] when nothing changed (the
+    lattice never removes keys).
     """
     if not isinstance(old, StructType) or not isinstance(new, StructType):
         return []
-    stmts: list[str] = []
     # compare by SANITIZED name — the live table's columns are sanitized,
     # so a drifted raw name ('a.b') that sanitizes onto an existing column
     # ('a_b') is a type restatement, not an addition (adding it would fail
     # on Hive with a duplicate column)
-    old_by_name = {
-        sanitize_identifiers(f.name): f.dataType for f in old.fields
+    old_types = {
+        sanitize_identifiers(f.name): render_compact_type(f.dataType)
+        for f in old.fields
     }
-    added = [
-        f for f in new.fields if sanitize_identifiers(f.name) not in old_by_name
-    ]
-    if added:
-        cols = ", ".join(
-            f"{_quote(f.name)} {render_compact_type(f.dataType)}"
-            for f in added
-        )
-        stmts.append(f"ALTER TABLE {table} ADD COLUMNS ({cols});")
+    added, changed = [], []
     for f in new.fields:
-        key = sanitize_identifiers(f.name)
-        if key in old_by_name and old_by_name[key] != f.dataType:
-            col = _quote(f.name)
-            stmts.append(
-                f"ALTER TABLE {table} CHANGE COLUMN {col} {col} "
-                f"{render_compact_type(f.dataType)};"
-            )
-    return stmts
+        col, typ = _quote(f.name), render_compact_type(f.dataType)
+        old_typ = old_types.get(sanitize_identifiers(f.name))
+        if old_typ is None:
+            added.append(f"{col} {typ}")
+        elif old_typ != typ:
+            changed.append(f"ALTER TABLE {table} CHANGE COLUMN {col} {col} {typ};")
+    if added:
+        changed.insert(0, f"ALTER TABLE {table} ADD COLUMNS ({', '.join(added)});")
+    return changed
 
 
 def render_partition_ddl(

@@ -8,7 +8,7 @@ whenever a group gains a field, loses parity, or demotes a type — the
 signal a 100 TB ingest pipeline alerts on before a bad producer poisons
 a day of data.
 
-State is schema trees only (tiny, driver-held), exactly like
+State is raw lattice shapes only (tiny, driver-held), exactly like
 ``infer_stream.InferenceState`` — no Spark stateful operator needed;
 watermarks are irrelevant because schema merge is monotone (late data
 can only widen a schema, never retract it).
@@ -17,14 +17,14 @@ can only widen a schema, never retract it).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DataType
 
-from ..operators.drift import field_classes
-from ..operators.infer import infer_schema_by_key
-from ..plans.lattice import merge_types, type_to_dict
+from ..operators.drift import _null_first, field_classes
+from ..operators.infer import _shapes_by_key
+from ..plans.lattice import merge_raw, type_from_dict
 
 __all__ = ["GroupDriftState", "ValueDriftMonitor"]
 
@@ -36,14 +36,19 @@ class GroupDriftState:
     Wire ``process_batch`` into ``foreachBatch``; read ``events`` (or
     hook ``on_drift``) for the change feed. Each event is
     ``(batch_id, group, field, change)`` with change ∈
-    {'new_group', 'new_field', 'retyped:<old>-><new>'}."""
+    {'new_group', 'new_field', 'retyped:<old>-><new>'}; a NULL group key
+    is a group of its own, ``None``, ordered first."""
 
     json_col: str = "payload"
     key_col: str = "group_key"
-    schemas: dict[str, DataType] = field(default_factory=dict)
     events: list[tuple[int, str, str, str]] = field(default_factory=list)
     batches: int = 0
     on_drift: Callable[[int, str, str, str], None] | None = None
+    _shapes: dict[str, Any] = field(default_factory=dict, init=False, repr=False)
+
+    @property
+    def schemas(self) -> dict[str, DataType]:
+        return {k: type_from_dict(v) for k, v in self._shapes.items()}
 
     def _emit(self, batch_id: int, group: str, fld: str, change: str) -> None:
         self.events.append((batch_id, group, fld, change))
@@ -52,17 +57,13 @@ class GroupDriftState:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches += 1
-        batch_schemas = infer_schema_by_key(batch_df, self.json_col, self.key_col)
-        for key in sorted(batch_schemas):
-            t = batch_schemas[key]
-            old = self.schemas.get(key)
+        batch = _shapes_by_key(batch_df, self.json_col, self.key_col)
+        for key in sorted(batch, key=_null_first):
+            old = self._shapes.get(key)  # bottom: a group not seen yet
+            merged = self._shapes[key] = merge_raw(old, batch[key])
             if old is None:
-                self.schemas[key] = t
                 self._emit(batch_id, key, "*", "new_group")
                 continue
-            merged = merge_types(old, t)
-            if type_to_dict(merged) == type_to_dict(old):
-                continue  # batch fits the known schema — no drift
             oldc, newc = field_classes(old), field_classes(merged)
             for fld in sorted(newc):
                 if fld not in oldc:
@@ -71,7 +72,6 @@ class GroupDriftState:
                     self._emit(
                         batch_id, key, fld, f"retyped:{oldc[fld]}->{newc[fld]}"
                     )
-            self.schemas[key] = merged
 
 
 @dataclass

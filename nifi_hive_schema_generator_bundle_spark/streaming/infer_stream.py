@@ -4,15 +4,17 @@ scheduler fires ``onTrigger`` per flowfile; here ``foreachBatch`` fires per
 micro-batch of newly-arrived NDJSON files).
 
 Design (SURVEY §7 step 5): the accumulated schema lives on the DRIVER
-across batches — merge state is a tiny type tree, not row state, so no
-stateful operator / watermark machinery is needed for parity. Each batch:
+across batches as a raw lattice shape (``plans.lattice``) — a tiny type
+tree, not row state, so no stateful operator / watermark machinery is
+needed for parity. Each batch:
 
-1. one aggregate over the batch: valid/invalid counts plus the lattice
-   schema of the valid records (``route_and_infer``); invalid lines are
-   written to the quarantine sink when one is set and there are any
-2. ``merge_types`` into the accumulated schema
-3. on drift (schema changed): re-render DDL, invoke ``on_drift`` —
-   the ALTER TABLE / re-register hook
+1. one aggregate: valid/invalid counts plus the raw shape of the valid
+   records; invalid lines go to the quarantine sink when one is set
+2. ``merge_raw`` into the accumulated shape (kept as merged, so a
+   bottom later refined to a struct stays a struct)
+3. on drift — ``finalize_raw`` of the shape changed, a change the table
+   can see — re-render DDL and invoke ``on_drift``, the ALTER TABLE /
+   re-register hook
 
 ``run_inference_stream`` wires a file-source stream; ``InferenceState`` is
 reusable from any foreachBatch.
@@ -21,15 +23,17 @@ reusable from any foreachBatch.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import DataType, StructType
+from pyspark.sql.types import DataType
 
-# ``infer_schema_df`` stays a module attribute: perfbench/spans.py wraps it.
-from ..operators.infer import infer_schema_df, route_and_infer  # noqa: F401
+# ``infer_schema_df`` and ``merge_types`` stay module attributes:
+# perfbench/spans.py wraps them.
+from ..operators.infer import _infer, infer_schema_df  # noqa: F401
 from ..operators.routing import split_valid
-from ..plans.lattice import merge_types, type_to_dict
+from ..plans.lattice import finalize_raw, merge_raw, merge_types  # noqa: F401
+from ..plans.lattice import type_from_dict, type_to_dict
 from ..plans.render import render_alter_ddl, render_hive_ddl
 from ._store import start_batch_stream
 
@@ -38,11 +42,11 @@ __all__ = ["InferenceState", "run_inference_stream"]
 
 @dataclass
 class InferenceState:
-    """Driver-held accumulated schema + drift-aware DDL emission."""
+    """Driver-held accumulated schema (kept raw; ``schema`` reads and
+    assigns a ``DataType``) + drift-aware DDL emission."""
 
     table: str
     location: str
-    schema: DataType = field(default_factory=lambda: StructType([]))
     batches: int = 0
     good_rows: int = 0
     bad_rows: int = 0
@@ -50,42 +54,43 @@ class InferenceState:
     alter_history: list[str] = field(default_factory=list)
     on_drift: Callable[[str, DataType], None] | None = None
     quarantine_path: str | None = None
+    _shape: Any = field(default_factory=dict, init=False, repr=False)
+
+    @property
+    def schema(self) -> DataType:
+        return type_from_dict(self._shape)
+
+    @schema.setter
+    def schema(self, dt: DataType) -> None:
+        self._shape = type_to_dict(dt)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches += 1
-        good, bad, batch_schema = route_and_infer(batch_df, "value")
+        ((_, good, bad, shape),) = _infer(batch_df, "value")
         if bad and self.quarantine_path is not None:
             split_valid(batch_df, "value").failure.write.mode("append").text(
                 self.quarantine_path
             )
         self.good_rows += good
         self.bad_rows += bad
-        if good == 0:
-            return  # null-input guard (SURVEY §2 O16)
-        before = type_to_dict(self.schema)
-        merged = merge_types(self.schema, batch_schema)
-        if type_to_dict(merged) != before:
-            old = self.schema
-            # drift from the empty initial schema IS the table creation
-            # — an ALTER restating the CREATE's columns would be
-            # redundant (and invalid: the table doesn't exist yet). A
-            # resumed state pre-seeded with a prior schema still emits
-            # ALTERs, so the empty-schema test is the right signal,
-            # not ddl_history emptiness.
-            is_creation = isinstance(old, StructType) and not old.fields
-            self.schema = merged
-            ddl = render_hive_ddl(
-                merged, self.table, self.location, drop_if_exists=True
+        old, self._shape = self._shape, merge_raw(self._shape, shape)
+        if finalize_raw(self._shape) == finalize_raw(old):
+            return  # no change the table can see, e.g. an all-bad batch (O16)
+        schema = self.schema
+        ddl = render_hive_ddl(schema, self.table, self.location, drop_if_exists=True)
+        self.ddl_history.append(ddl)
+        # drift from the empty initial schema IS the table creation — an
+        # ALTER restating the CREATE's columns would be redundant (and
+        # invalid: the table doesn't exist yet). A resumed state pre-seeded
+        # with a prior schema still emits ALTERs, so the empty-schema test
+        # is the right signal, not ddl_history emptiness. Otherwise evolve
+        # the live table in place (SURVEY §7 step 5 - ALTER on drift).
+        if old != {}:
+            self.alter_history.extend(
+                render_alter_ddl(type_from_dict(old), schema, self.table)
             )
-            self.ddl_history.append(ddl)
-            # incremental path: evolve the live table in place instead
-            # of re-creating it (SURVEY §7 step 5 - ALTER on drift)
-            if not is_creation:
-                self.alter_history.extend(
-                    render_alter_ddl(old, merged, self.table)
-                )
-            if self.on_drift is not None:
-                self.on_drift(ddl, merged)
+        if self.on_drift is not None:
+            self.on_drift(ddl, schema)
 
     @property
     def current_ddl(self) -> str | None:

@@ -58,3 +58,18 @@ def test_non_object_group_reports_absent(spark):
 def test_empty_input(spark):
     df = spark.createDataFrame([], "grp string, payload string")
     assert schema_drift_report(spark, df, "payload", "grp").count() == 0
+
+
+def test_null_group_is_reported_first(spark):
+    """Records without the group field form the NULL group, reported
+    before the named groups instead of aborting the sort."""
+    df = spark.createDataFrame(
+        [("a", '{"x": 1}'), (None, '{"y": 1}')], "grp string, payload string"
+    )
+    rows = schema_drift_report(spark, df, "payload", "grp").collect()
+    assert [(r["group_key"], r["field"], r["drift"]) for r in rows] == [
+        (None, "x", "absent"),
+        (None, "y", "same"),
+        ("a", "x", "same"),
+        ("a", "y", "absent"),
+    ]

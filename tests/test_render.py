@@ -118,6 +118,8 @@ def test_render_alter_ddl_add_and_change():
     assert "ALTER TABLE t CHANGE COLUMN `a` `a` STRING;" in joined
     assert "keep" not in joined  # unchanged columns untouched
     assert render_alter_ddl(new, new, "t") == []  # no drift -> no statements
+    # a bottom refined to STRING renders the same: nothing to restate
+    assert render_alter_ddl(struct(a=NullType()), struct(a=StringType()), "t") == []
 
 
 def test_render_partition_ddl_multi_and_sanitize():

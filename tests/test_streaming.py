@@ -70,6 +70,27 @@ def test_inference_stream_drift(spark, tmp_path):
     assert bad_lines == ["not json"]
 
 
+def test_bottom_refinement_is_not_drift(spark):
+    """A batch that only refines bottoms (null → scalar, [] → [scalar])
+    changes nothing the table can see: no second DDL, no ALTER, no
+    re-registration — but the state keeps the refinement."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    from nifi_hive_schema_generator_bundle_spark.streaming.infer_stream import (
+        InferenceState,
+    )
+
+    calls = []
+    state = InferenceState("t", "/x", on_drift=lambda ddl, s: calls.append(ddl))
+    for i, line in enumerate(['{"a": null, "b": []}', '{"a": "x", "b": [1]}']):
+        state.process_batch(spark.createDataFrame([(line,)], "value string"), i)
+    assert len(state.ddl_history) == 1 and len(calls) == 1
+    assert state.alter_history == []
+    assert state.schema == StructType(
+        [StructField("a", StringType()), StructField("b", ArrayType(StringType()))]
+    )
+
+
 def test_windowed_counts_batch_equivalence(spark, sf_smoke_dir):
     from nifi_hive_schema_generator_bundle_spark.plans.queries import load_table
 
@@ -249,6 +270,25 @@ def test_group_drift_monitor_emits_change_feed(spark, tmp_path):
     # the driver state is schema trees only
     assert set(state.schemas) == {"a", "b"}
     assert state.batches == 3
+
+
+def test_group_drift_monitor_null_group(spark):
+    """A NULL group key is a group of its own, ordered first."""
+    from nifi_hive_schema_generator_bundle_spark.streaming.drift_stream import (
+        GroupDriftState,
+    )
+
+    state = GroupDriftState(json_col="payload", key_col="grp")
+    batch = spark.createDataFrame(
+        [("a", '{"x": 1}'), (None, '{"y": 1}')], "grp string, payload string"
+    )
+    state.process_batch(batch, 0)
+    assert state.events == [(0, None, "*", "new_group"), (0, "a", "*", "new_group")]
+    state.process_batch(
+        spark.createDataFrame([(None, '{"z": [1]}')], "grp string, payload string"),
+        1,
+    )
+    assert state.events[-1] == (1, None, "z", "new_field")
 
 
 def test_group_drift_monitor_in_foreachbatch(spark, tmp_path):
