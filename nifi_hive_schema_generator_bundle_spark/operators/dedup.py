@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.partitioning import ensure_min_partitions
 from ..functions.textfns import normalize_ws, whitespace_tokens
+from ..session import round_checkpoints
 
 __all__ = [
     "exact_dedup",
@@ -978,48 +979,11 @@ def connected_components(
     component's diameter; past the cap the result is still deterministic
     (each label is the min over its ``max_iter``-hop neighborhood).
 
-    ``checkpoint_dir``: reliable checkpoint location (HDFS/S3 on a real
-    cluster) used to truncate lineage between rounds. Without it,
-    ``localCheckpoint`` stores blocks on executors — fine single-node,
-    but a lost executor on a cluster loses the (truncated) lineage.
-    Each round checkpoints into its own subdirectory and deletes the
-    previous round's once the new one is materialized (Spark never
-    cleans non-streaming checkpoints itself — 20 rounds would otherwise
-    leave 20 full label-table copies on the checkpoint filesystem); the
-    context's original checkpoint dir is restored on exit so the
-    process-global setting doesn't leak into caller code.
+    ``checkpoint_dir``: reliable location (HDFS/S3 on a real cluster)
+    for the per-round lineage truncation; every round is materialized
+    eagerly. The round contract is ``session.round_checkpoints``.
     """
     spark = pairs.sparkSession
-    sc = spark.sparkContext
-    round_no = 0
-    original_ckpt = None
-    if checkpoint_dir is not None:
-        opt = sc._jsc.sc().getCheckpointDir()
-        original_ckpt = opt.get() if opt.isDefined() else None
-
-    def _delete_round(i: int) -> None:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/round{i}")
-        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
-
-    # NOTE on superseded rounds: each localCheckpoint pins its blocks
-    # OUTSIDE the CacheManager (DataFrame.unpersist is a no-op on
-    # them), so dead rounds are released by the ContextCleaner once the
-    # frames are garbage-collected — eventual, not deterministic. The
-    # label table is (id, component) — narrow — so the transient copies
-    # are small; the heavy lineage (the caller's pair generation) is
-    # what the explicit `edges` cache below bounds.
-    def _materialize(df: DataFrame) -> DataFrame:
-        nonlocal round_no
-        if checkpoint_dir is None:
-            return df.localCheckpoint(eager=True)
-        sc.setCheckpointDir(f"{checkpoint_dir}/round{round_no}")
-        out = df.checkpoint(eager=True)  # fully written before cleanup
-        if round_no > 0:
-            _delete_round(round_no - 1)
-        round_no += 1
-        return out
-
     # edges are the loop invariant read by EVERY round's join — cache
     # them once or the whole candidate-pair lineage (for LSH callers:
     # band explode + bucket self-join + signature verify) re-executes
@@ -1056,54 +1020,51 @@ def connected_components(
         .withColumn("component", F.col("id"))
     )
     try:
-        labels = _materialize(labels)
-        for _ in range(max_iter):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            # the convergence flag rides the label-update pass itself
-            # (least() can only decrease the label, so changed ⇔ new <
-            # old) — the probe is then a scan of the materialized frame,
-            # not a join+count job
-            new_comp = F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_component"), F.col("component")),
-            )
-            updated = (
-                labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-                .select(
-                    "id",
-                    new_comp.alias("component"),
-                    (new_comp < F.col("component")).alias("chg"),
+        with round_checkpoints(spark, checkpoint_dir) as materialize:
+            labels = materialize(labels, eager=True)
+            for _ in range(max_iter):
+                neighbor_min = (
+                    edges.join(labels, edges.dst == labels.id)
+                    .groupBy("src")
+                    .agg(F.min("component").alias("nbr_component"))
                 )
-            )
-            # the convergence count rides the checkpoint job itself via
-            # Dataset.observe (r9): the probe used to be a second
-            # scheduled job per round over the just-materialized frame —
-            # pure protocol floor at ~0.15-0.3 s/job locally (guide
-            # §1.2/§1.5). Metrics land when the eager checkpoint
-            # materializes, so obs.get returns without scheduling
-            # anything.
-            from pyspark.sql import Observation
+                # the convergence flag rides the label-update pass itself
+                # (least() can only decrease the label, so changed ⇔ new <
+                # old) — the probe is then a scan of the materialized frame,
+                # not a join+count job
+                new_comp = F.least(
+                    F.col("component"),
+                    F.coalesce(F.col("nbr_component"), F.col("component")),
+                )
+                updated = (
+                    labels.join(
+                        neighbor_min, labels.id == neighbor_min.src, "left"
+                    ).select(
+                        "id",
+                        new_comp.alias("component"),
+                        (new_comp < F.col("component")).alias("chg"),
+                    )
+                )
+                # the convergence count rides the checkpoint job itself via
+                # Dataset.observe (r9): the probe used to be a second
+                # scheduled job per round over the just-materialized frame —
+                # pure protocol floor at ~0.15-0.3 s/job locally (guide
+                # §1.2/§1.5). Metrics land when the eager checkpoint
+                # materializes, so obs.get returns without scheduling
+                # anything.
+                from pyspark.sql import Observation
 
-            obs = Observation()
-            updated = updated.observe(
-                obs, F.sum(F.col("chg").cast("int")).alias("n")
-            )
-            updated = _materialize(updated)
-            n_changed = obs.get["n"]
-            labels = updated.drop("chg")
-            if not n_changed:
-                break
+                obs = Observation()
+                updated = updated.observe(
+                    obs, F.sum(F.col("chg").cast("int")).alias("n")
+                )
+                updated = materialize(updated, eager=True)
+                n_changed = obs.get["n"]
+                labels = updated.drop("chg")
+                if not n_changed:
+                    break
     finally:
         edges.unpersist(blocking=True)
-        # restore the caller's process-global checkpoint location even
-        # when a round raises mid-loop (ADVICE r8) — only possible if
-        # one was set; Spark has no unset
-        if checkpoint_dir is not None and original_ckpt is not None:
-            sc.setCheckpointDir(original_ckpt)
     return labels
 
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import round_checkpoints
+
 __all__ = [
     "pagerank",
     "triangle_count",
@@ -182,15 +184,9 @@ def pagerank(
     Deterministic given the edge set and ``iters`` (modulo float
     summation order; callers comparing across engines should round).
 
-    ``checkpoint_dir``: reliable checkpoint location (HDFS/S3 on a real
-    cluster) for the per-round lineage truncation — same contract as
-    ``connected_components``: each round checkpoints eagerly into its
-    own subdirectory and deletes the previous round's once the new one
-    is fully written (Spark never cleans non-streaming checkpoints
-    itself), and the context's original checkpoint dir is restored on
-    exit. Without it, ``localCheckpoint(eager=True)`` stores blocks on
-    executors — fine single-node; on a cluster a lost executor loses
-    the truncated lineage mid-run.
+    ``checkpoint_dir``: reliable location (HDFS/S3 on a real cluster)
+    for the per-round lineage truncation. The round contract is
+    ``session.round_checkpoints``.
 
     ``tol`` > 0 adds an early stop: iteration ends when the L1 rank
     delta Σ|rank_new − rank_old| drops below ``tol``. The delta rides
@@ -207,36 +203,6 @@ def pagerank(
         raise ValueError("tol must be >= 0")
 
     spark = edges.sparkSession
-    sc = spark.sparkContext
-    round_no = 0
-    original_ckpt = None
-    if checkpoint_dir is not None:
-        opt = sc._jsc.sc().getCheckpointDir()
-        original_ckpt = opt.get() if opt.isDefined() else None
-
-    def _delete_round(i: int) -> None:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/round{i}")
-        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        nonlocal round_no
-        if checkpoint_dir is None:
-            # lazy on the local path: the rounds all materialize inside
-            # the ONE job the caller's action runs, and the truncation
-            # still applies — an eager localCheckpoint here costs a
-            # scheduled job per round (measured 6.8 s -> 11.6 s for 5
-            # rounds at sf0.1) for no reliability gain (executor-stored
-            # blocks either way). The tol probe's per-round action makes
-            # eager equivalent when early-stop is on.
-            return df.localCheckpoint(eager=tol > 0.0)
-        sc.setCheckpointDir(f"{checkpoint_dir}/round{round_no}")
-        out = df.checkpoint(eager=True)  # fully written before cleanup
-        if round_no > 0:
-            _delete_round(round_no - 1)
-        round_no += 1
-        return out
-
     # edge/degree tables are read twice per iteration (contribution pass
     # + dangling pass) across every round — cache them once or the
     # distinct/agg lineage re-executes ~2·iters times (measured 12.3 s →
@@ -273,66 +239,72 @@ def pagerank(
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).cache()
     try:
-        n = nodes.count()  # control-path scalar (one long), not data
-        if n == 0:
-            return nodes.withColumn("rank", F.lit(0.0))
-        ranks = _materialize(nodes.withColumn("rank", F.lit(1.0 / n)))
-        for _ in range(iters):
-            with_deg = ranks.join(deg, ranks.node == deg.src, "left").select(
-                "node", "rank", "deg"
+        with round_checkpoints(spark, checkpoint_dir) as materialize:
+            n = nodes.count()  # control-path scalar (one long), not data
+            if n == 0:
+                return nodes.withColumn("rank", F.lit(0.0))
+            # local rounds are lazy unless the tol probe acts on each: they
+            # all materialize inside the one job the final count() runs,
+            # while truncation still applies (an eager local checkpoint per
+            # round measured 6.8 -> 11.6 s for 5 rounds at sf0.1)
+            ranks = materialize(
+                nodes.withColumn("rank", F.lit(1.0 / n)), eager=tol > 0.0
             )
-            # dangling mass: rank held by nodes with no out-edges (1-row agg)
-            dm = with_deg.filter(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-            )
-            contrib = (
-                e.join(
-                    with_deg.filter(F.col("deg").isNotNull()),
-                    e.src == F.col("node"),
+            for _ in range(iters):
+                with_deg = ranks.join(
+                    deg, ranks.node == deg.src, "left"
+                ).select("node", "rank", "deg")
+                # dangling mass: rank held by nodes with no out-edges
+                # (1-row agg)
+                dm = with_deg.filter(F.col("deg").isNull()).agg(
+                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
                 )
-                .select(F.col("dst"), (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-            )
-            new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-                F.coalesce(F.col("s"), F.lit(0.0)) + F.col("dm") / n
-            )
-            # joining contrib onto the OLD ranks (same rows as `nodes`)
-            # lets the per-node |Δrank| ride the update, so the early-stop
-            # probe is a plain scan of the materialized round
-            updated = (
-                ranks.join(contrib, ranks.node == contrib.dst, "left")
-                .join(F.broadcast(dm))
-                .select(
-                    "node",
-                    new_rank.alias("rank"),
-                    F.abs(new_rank - F.col("rank")).alias("delta"),
+                contrib = (
+                    e.join(
+                        with_deg.filter(F.col("deg").isNotNull()),
+                        e.src == F.col("node"),
+                    )
+                    .select(
+                        F.col("dst"), (F.col("rank") / F.col("deg")).alias("c")
+                    )
+                    .groupBy("dst")
+                    .agg(F.sum("c").alias("s"))
                 )
-            )
-            # truncate lineage each round: 5+ chained joins otherwise
-            # compound the plan
-            updated = _materialize(updated)
-            if tol > 0.0:
-                l1 = updated.agg(F.sum("delta").alias("d")).collect()[0]["d"]
+                new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+                    F.coalesce(F.col("s"), F.lit(0.0)) + F.col("dm") / n
+                )
+                # joining contrib onto the OLD ranks (same rows as `nodes`)
+                # lets the per-node |Δrank| ride the update, so the early-stop
+                # probe is a plain scan of the materialized round
+                updated = (
+                    ranks.join(contrib, ranks.node == contrib.dst, "left")
+                    .join(F.broadcast(dm))
+                    .select(
+                        "node",
+                        new_rank.alias("rank"),
+                        F.abs(new_rank - F.col("rank")).alias("delta"),
+                    )
+                )
+                # truncate lineage each round: 5+ chained joins otherwise
+                # compound the plan
+                updated = materialize(updated, eager=tol > 0.0)
                 ranks = updated.drop("delta")
-                if l1 < tol:
-                    break
-            else:
-                ranks = updated.drop("delta")
-        if checkpoint_dir is None and tol == 0.0:
-            # the lazy rounds haven't run yet — run them ONCE here (all
-            # marked localCheckpoints materialize inside this single
-            # job) so the returned frame reads stored blocks and the
-            # finally-block can drop the loop-invariant caches without
-            # forcing the caller's action to recompute their lineage
-            ranks.count()
-        return ranks
+                if tol > 0.0:
+                    l1 = updated.agg(F.sum("delta")).collect()[0][0]
+                    if l1 < tol:
+                        break
+            if checkpoint_dir is None and tol == 0.0:
+                # the lazy rounds haven't run yet — run them ONCE here (all
+                # marked localCheckpoints materialize inside this single
+                # job) so the returned frame reads stored blocks and the
+                # finally-block can drop the loop-invariant caches without
+                # forcing the caller's action to recompute their lineage
+                ranks.count()
+            return ranks
     finally:
         e.unpersist()
         nodes.unpersist()
         deg.unpersist()
-        if checkpoint_dir is not None and original_ckpt is not None:
-            sc.setCheckpointDir(original_ckpt)
 
 
 def label_propagation(
@@ -363,8 +335,8 @@ def label_propagation(
     (loop-invariant, like pagerank's); labels are materialized
     per round so the plan DAG stays one-round deep. Community counts
     are typically wanted for a handful of rounds (LPA converges in
-    ~5); for long runs add the same ``checkpoint_dir`` treatment
-    pagerank has.
+    ~5); for long runs route the rounds through
+    ``session.round_checkpoints`` as pagerank does.
     """
     from pyspark.sql import Window
 

@@ -15,14 +15,16 @@ win counts (map-side combinable aggregates — the raw battles are never
 re-scanned inside the loop); each round is then two joins + one
 partial agg over the PAIR table, whose size is models², not battles.
 Ratings are normalized to mean 1 each round via a 1-row broadcast
-total. Lineage truncates per round (localCheckpoint, or reliable
-``checkpoint_dir`` with per-round GC on a real cluster).
+total. Lineage truncates per round through
+``session.round_checkpoints``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import round_checkpoints
 
 __all__ = ["bradley_terry", "pairwise_win_rates"]
 
@@ -106,34 +108,13 @@ def bradley_terry(
     Deterministic given the battle set and ``iters`` (modulo float
     summation order; cross-engine comparisons should round).
 
-    ``checkpoint_dir`` follows the ``pagerank`` contract: eager
-    per-round reliable checkpoints with previous-round cleanup."""
+    ``checkpoint_dir``: reliable location for the per-round lineage
+    truncation and the result. The round contract is
+    ``session.round_checkpoints``."""
     if iters < 0:
         raise ValueError("iters must be >= 0")
 
     spark = battles.sparkSession
-    sc = spark.sparkContext
-    round_no = 0
-
-    def _delete_round(i: int) -> None:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/round{i}")
-        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        nonlocal round_no
-        if checkpoint_dir is None:
-            # lazy: every round materializes inside the caller's one
-            # action; truncation still applies (pagerank's measured
-            # rationale — an eager job per round buys nothing locally)
-            return df.localCheckpoint(eager=False)
-        sc.setCheckpointDir(f"{checkpoint_dir}/round{round_no}")
-        out = df.checkpoint(eager=True)
-        if round_no > 0:
-            _delete_round(round_no - 1)
-        round_no += 1
-        return out
-
     decided = battles.filter(F.col(winner).isin("a", "b")).select(
         F.col(model_a).alias("a"),
         F.col(model_b).alias("b"),
@@ -160,79 +141,80 @@ def bradley_terry(
     stats = pairs.groupBy("i").agg(F.sum("n").cast("long").alias("n_battles"))
     nodes = stats.select(F.col("i").alias("node"), "n_battles").cache()
     try:
-        n_models = nodes.count()  # control-path scalar
-        if n_models == 0:
-            return spark.createDataFrame(
-                [],
-                "model string, n_battles long, n_wins long, "
-                "rating double, elo double",
-            )
-        ratings = _materialize(
-            nodes.select("node").withColumn("rating", F.lit(1.0))
-        )
-        for _ in range(iters):
-            ra = ratings.select(
-                F.col("node").alias("i"), F.col("rating").alias("ri")
-            )
-            rb = ratings.select(
-                F.col("node").alias("j"), F.col("rating").alias("rj")
-            )
-            denom = (
-                pairs.join(ra, "i")
-                .join(rb, "j")
-                .select(
-                    F.col("i").alias("node"),
-                    (F.col("n") / (F.col("ri") + F.col("rj"))).alias("t"),
+        with round_checkpoints(spark, checkpoint_dir) as materialize:
+            n_models = nodes.count()  # control-path scalar
+            if n_models == 0:
+                return spark.createDataFrame(
+                    [],
+                    "model string, n_battles long, n_wins long, "
+                    "rating double, elo double",
                 )
-                .groupBy("node")
-                .agg(F.sum("t").alias("s"))
+            # lazy rounds: all materialize inside the one job that
+            # materializes the result below
+            ratings = materialize(
+                nodes.select("node").withColumn("rating", F.lit(1.0)),
+                eager=False,
             )
-            raw = (
-                ratings.join(denom, "node")
+            for _ in range(iters):
+                ra = ratings.select(
+                    F.col("node").alias("i"), F.col("rating").alias("ri")
+                )
+                rb = ratings.select(
+                    F.col("node").alias("j"), F.col("rating").alias("rj")
+                )
+                denom = (
+                    pairs.join(ra, "i")
+                    .join(rb, "j")
+                    .select(
+                        F.col("i").alias("node"),
+                        (F.col("n") / (F.col("ri") + F.col("rj"))).alias("t"),
+                    )
+                    .groupBy("node")
+                    .agg(F.sum("t").alias("s"))
+                )
+                raw = (
+                    ratings.join(denom, "node")
+                    .join(wins, "node", "left")
+                    .select(
+                        "node",
+                        (
+                            (F.coalesce(F.col("w"), F.lit(0.0)) + 1.0)
+                            / (F.col("s") + 2.0 / (F.col("rating") + 1.0))
+                        ).alias("raw"),
+                    )
+                )
+                total = raw.agg(F.sum("raw").alias("t"))  # 1-row broadcast
+                ratings = materialize(
+                    raw.join(F.broadcast(total)).select(
+                        "node",
+                        (F.col("raw") * n_models / F.col("t")).alias("rating"),
+                    ),
+                    eager=False,
+                )
+            out = (
+                nodes.join(ratings, "node")
                 .join(wins, "node", "left")
                 .select(
-                    "node",
-                    (
-                        (F.coalesce(F.col("w"), F.lit(0.0)) + 1.0)
-                        / (F.col("s") + 2.0 / (F.col("rating") + 1.0))
-                    ).alias("raw"),
+                    F.col("node").alias("model"),
+                    "n_battles",
+                    F.coalesce(F.col("w"), F.lit(0.0)).cast("long").alias(
+                        "n_wins"
+                    ),
+                    F.round("rating", 6).alias("rating"),
+                    F.round(
+                        F.lit(1000.0) + F.lit(400.0) * F.log10("rating"), 2
+                    ).alias("elo"),
                 )
             )
-            total = raw.agg(F.sum("raw").alias("t"))  # 1-row broadcast
-            ratings = _materialize(
-                raw.join(F.broadcast(total)).select(
-                    "node",
-                    (F.col("raw") * n_models / F.col("t")).alias("rating"),
-                )
-            )
-        out = (
-            nodes.join(ratings, "node")
-            .join(wins, "node", "left")
-            .select(
-                F.col("node").alias("model"),
-                "n_battles",
-                F.coalesce(F.col("w"), F.lit(0.0)).cast("long").alias(
-                    "n_wins"
-                ),
-                F.round("rating", 6).alias("rating"),
-                F.round(
-                    F.lit(1000.0) + F.lit(400.0) * F.log10("rating"), 2
-                ).alias("elo"),
-            )
-        )
-        # Materialize the models-sized result BEFORE the finally releases
-        # the loop caches (pagerank's `ranks.count()` rationale):
-        # unpersisting first would hand the caller a lineage that
-        # recomputes the pair/win aggregations from the raw battle table
-        # — measured ~30% of the fit at sf0.1. The result frame is one
-        # row per model, so the eager checkpoint is a trivial job. With
-        # ``checkpoint_dir`` it is one more reliable checkpoint there, so
-        # the result never rests on executor-local blocks; otherwise a
-        # local one, whose blocks are ContextCleaner-owned (the
-        # connected_components NOTE applies).
-        if checkpoint_dir is None:
-            return out.localCheckpoint(eager=True)
-        return _materialize(out)
+            # Materialize the models-sized result BEFORE the finally
+            # releases the loop caches (pagerank's `ranks.count()`
+            # rationale): unpersisting first would hand the caller a
+            # lineage that recomputes the pair/win aggregations from the
+            # raw battle table — measured ~30% of the fit at sf0.1. The
+            # result is one row per model, so this is a trivial job; with
+            # ``checkpoint_dir`` it is one more reliable round, so the
+            # result never rests on executor-local blocks.
+            return materialize(out, eager=True)
     finally:
         pairs.unpersist()
         wins.unpersist()

@@ -230,16 +230,15 @@ def render_partition_ddl(
     {key: value} dict; one statement covers them all (Hive allows
     multiple PARTITION clauses per ALTER). Values render as quoted
     strings — Hive coerces to the partition column's declared type —
-    with single quotes escaped; keys pass through the same
-    ``[.-]`` → ``_`` sanitization as every other identifier."""
+    with single quotes escaped; keys are quoted like every other
+    identifier (``_quote``)."""
     if not partitions:
         return ""
     ine = " IF NOT EXISTS" if if_not_exists else ""
     clauses = []
     for spec, location in partitions:
         kv = ", ".join(
-            f"`{sanitize_identifiers(k)}`="
-            + "'" + str(v).replace("'", "\\'") + "'"
+            _quote(k) + "='" + str(v).replace("'", "\\'") + "'"
             for k, v in spec.items()
         )
         # same quote-escaping as the spec values — a location containing

@@ -9,9 +9,11 @@ or rely on AQE coalescing from a high initial value).
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -38,6 +40,52 @@ def ship_package(spark: SparkSession) -> None:
                                   os.path.basename(pkg_dir))
     spark.sparkContext.addPyFile(archive)
     spark._engine_pkg_shipped = True
+
+
+@contextmanager
+def round_checkpoints(spark: SparkSession, checkpoint_dir: str | None):
+    """Per-round lineage truncation for the iterative operators
+    (``connected_components``, ``pagerank``, ``bradley_terry``). Yields
+    ``materialize(df, eager)``, which returns ``df`` with its lineage cut.
+
+    Without ``checkpoint_dir`` it is ``df.localCheckpoint(eager=eager)``:
+    blocks live on executors, which is fine single-node, but on a cluster
+    a lost executor loses the truncated lineage. Superseded rounds are
+    released by the ContextCleaner once their frames are garbage, not by
+    ``unpersist`` (local checkpoints sit outside the CacheManager).
+
+    With ``checkpoint_dir`` (HDFS/S3 on a cluster) every call is an eager
+    reliable checkpoint into ``{checkpoint_dir}/round{i}``, i = 0, 1, ...;
+    once round i is fully written, round i-1 is deleted, since Spark never
+    cleans non-streaming checkpoints itself. A run leaves one round dir.
+    The checkpoint dir is process-global, so while a reliable run is
+    active any other checkpoint in the process lands in its round dir.
+    On exit, also when a round raises, the caller's setting comes back
+    exactly: an unset dir stays unset and a set one keeps its path
+    (``setCheckpointDir`` would add a fresh UUID level instead).
+    """
+    if checkpoint_dir is None:
+        yield lambda df, eager: df.localCheckpoint(eager=eager)
+        return
+    from .streaming._store import fs_delete
+
+    sc = spark.sparkContext
+    saved = sc._jsc.sc().getCheckpointDir()  # an Option: None or a path
+    rounds = itertools.count()
+
+    def materialize(df, eager):
+        i = next(rounds)
+        sc.setCheckpointDir(f"{checkpoint_dir}/round{i}")
+        # always eager: round i is written before round i-1 goes
+        out = df.checkpoint(eager=True)
+        if i:
+            fs_delete(spark, f"{checkpoint_dir}/round{i - 1}")
+        return out
+
+    try:
+        yield materialize
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(saved)
 
 
 def get_session(

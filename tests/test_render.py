@@ -141,6 +141,10 @@ def test_render_partition_ddl_multi_and_sanitize():
         "PARTITION (`dt`='2024-01-02', `src_kind`='c') "
         "location '/data/dt=2024-01-02';"
     )
+    # a backtick inside a key is doubled, as in every other identifier
+    assert render_partition_ddl("t", [({"a`b": "1"}, "/d")]) == (
+        "ALTER TABLE t ADD IF NOT EXISTS PARTITION (`a``b`='1') location '/d';"
+    )
     assert render_partition_ddl("t", []) == ""
 
 
