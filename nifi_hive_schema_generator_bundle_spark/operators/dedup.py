@@ -16,16 +16,37 @@ Scale design notes (the part that matters at 100 TB):
   collapse all signatures — see ``simhash``'s docstring) in one narrow
   projection; candidates via 4×16-bit chunk equality (Hamming ≤ 3 ⇒ at
   least one chunk identical by pigeonhole) with the same
-  degenerate-bucket cap as MinHash, verified with ``bit_count(xor)``.
+  degenerate-bucket cap as MinHash (``_banded_pairs``), verified with
+  ``bit_count(xor)`` — ``packed_hamming_pairs`` is the one engine.
+* **exact set joins** — ``jaccard_threshold_join``, ``containment_join``
+  and the all-pairs form of ``ngram_jaccard_pairs`` are one prefix-filter
+  join (``_set_join``) with a different required overlap and score.
 * **connected components** — iterative min-label propagation over the
   candidate-pair edge list (alternating small-star-ish join rounds, AQE
   handles the shrinking frontier). Converges in O(log n) rounds on
   near-dup graphs, whose components are tiny in practice.
 
 Every step is DataFrame built-ins — no Python in any per-row path.
+
+Cache lifecycle: the pair generators ``persist()`` each frame that
+several consumers of their plan read — ``_set_join``'s ``docs`` and
+``toks`` (so ``jaccard_threshold_join``, ``containment_join`` and the
+all-pairs ``ngram_jaccard_pairs``), ``minhash_lsh_pairs``'s signatures
+when no ``sigs=`` frame is injected, ``packed_hamming_pairs``'s
+signature frame (so ``simhash_pairs`` and ``simhash_pairs_portable``),
+and ``embedding_near_dup_pairs``'s normalized vectors (bucketed, or
+blocked in ``_blocked_cosine_pairs``). The result is lazy, so the cache
+must outlive the call: the caller's first action fills it, and none of
+these functions unpersists it. A caller that wants the memory back owns
+the frame — injects it (``sigs=``), or unpersists the very frame it
+gave ``packed_hamming_pairs``, which persists its input in place —
+after its action, or calls
+``spark.catalog.clearCache()`` once the pairs are consumed.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,7 +58,6 @@ from ..session import round_checkpoints
 __all__ = [
     "exact_dedup",
     "shingles",
-    "minhash_signature",
     "minhash_lsh_pairs",
     "ngram_jaccard_pairs",
     "simhash",
@@ -117,30 +137,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     convenience; hot paths materialize tokens and use
     ``shingles_from_tokens`` (see its docstring for the O(n²) trap)."""
     return shingles_from_tokens(whitespace_tokens(F.lower(text)), k)
-
-
-def minhash_signature(shingle_col: Column, num_perm: int = 64) -> Column:
-    """num_perm-wide MinHash signature: for seed i, min over shingles of
-    ``xxhash64(shingle, i)``.
-
-    Implemented as ONE ``aggregate`` fold over the shingle array (per
-    shingle: 64 seeded hashes, zip_with-least into the accumulator) so the
-    shingle-construction subtree appears exactly once in the plan. The
-    naive form — 64 independent ``array_min(transform(shingles, …))``
-    columns — re-inlines the shingle expression per permutation after
-    projection collapse and blows up codegen ~40× (measured at sf0.01).
-    Zero shuffle either way."""
-    seeds = F.sequence(F.lit(0), F.lit(num_perm - 1))
-    max_long = F.lit(2**63 - 1).cast("long")
-    return F.aggregate(
-        shingle_col,
-        F.array_repeat(max_long, num_perm),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(seeds, lambda i: F.xxhash64(s, i)),
-            lambda a, h: F.least(a, h),
-        ),
-    )
 
 
 def _md5_long(s: Column, i: int) -> Column:
@@ -284,42 +280,41 @@ def minhash_lsh_pairs(
     banded = band_keys(
         sig, bands=bands, num_perm=num_perm, portable=hash_fn == "md5"
     )
+    est = signature_agreement("sig_a", "sig_b")
+    return (
+        _banded_pairs(banded, max_bucket)
+        .select("id_a", "id_b", F.round(est, 6).alias("est_jaccard"))
+        .filter(F.col("est_jaccard") >= threshold)
+    )
 
-    # degenerate-bucket guard: identical-corpus buckets would be quadratic
-    bucket_sizes = banded.groupBy("band", "bucket").count()
+
+def _banded_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """(id, band, bucket, *payload) rows → distinct (id_a < id_b) pairs
+    sharing at least one (band, bucket), each payload column as
+    ``<col>_a``/``<col>_b`` — the banded self-join behind
+    ``minhash_lsh_pairs`` and ``packed_hamming_pairs``. A bucket holding
+    more than ``max_bucket`` rows is dropped first: identical-corpus
+    buckets would make the self-join quadratic (cap² per bucket
+    instead)."""
+    sizes = banded.groupBy("band", "bucket").count()
     banded = banded.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket).drop("count"),
+        sizes.filter(F.col("count") <= max_bucket).drop("count"),
         ["band", "bucket"],
     )
+    payload = [c for c in banded.columns if c not in ("band", "bucket")]
 
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            "band", "bucket", *[F.col(c).alias(f"{c}_{s}") for c in payload]
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
+
+    return (
+        side("a")
+        .join(side("b"), ["band", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(*[f"{c}_{s}" for c in payload for s in "ab"])
         .dropDuplicates(["id_a", "id_b"])
     )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        )
-        / F.lit(float(num_perm))
-    )
-    return cand.select(
-        "id_a", "id_b", F.round(est, 6).alias("est_jaccard")
-    ).filter(F.col("est_jaccard") >= threshold)
 
 
 def contaminated_ids(
@@ -403,115 +398,28 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram-set Jaccard for pairs. With ``candidates`` (id_a, id_b)
-    given — typically LSH output — verification joins shingle sets back by
-    id; without, falls back to an exact all-pairs computation: a
-    prefix-filtered inverted shingle index for ``threshold > 0`` (no
-    false negatives, skew-safe against hot shingles — see the inline
-    note), or the O(n²) self-join only for ``threshold <= 0`` callers
-    who want every pair (test scale only).
+    """Exact n-gram-set Jaccard for pairs, as (id_a < id_b, jaccard
+    rounded to 6) with ``jaccard ≥ threshold`` tested on the rounded
+    value. With ``candidates`` (id_a, id_b) given — typically LSH output
+    — verification joins shingle sets back by id; without, falls back to
+    an exact all-pairs computation: for ``threshold > 0`` the uncapped
+    prefix-filter Jaccard join (``_set_join``: no false negatives,
+    skew-safe against hot shingles), or the O(n²) self-join only for
+    ``threshold <= 0`` callers who want every pair (test scale only).
     """
     df = ensure_min_partitions(df)
+    if candidates is None and threshold > 0.0:
+        return (
+            _jaccard_join(
+                df, text_col, id_col, k=k, threshold=threshold, max_bucket=None
+            )
+            .select("id_a", "id_b", F.round("value", 6).alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold)
+        )
     sh = df.select(
         F.col(id_col).alias("id"),
         whitespace_tokens(F.lower(F.col(text_col))).alias("__toks"),
     ).select("id", shingles_from_tokens(F.col("__toks"), k).alias("sh"))
-    if candidates is None and threshold > 0.0:
-        # Inverted-index form of the exact all-pairs fallback (r8): the
-        # previous shingle-array cross join was an O(n²) nested loop
-        # that built two per-pair hash structures over full shingle
-        # sets (measured 47 s at sf0.1 to emit 256 pairs). Shingle sets
-        # are distinct by construction (shingles_from_tokens wraps
-        # array_distinct), so |A∪B| = |A|+|B|−|A∩B| and the whole
-        # computation reduces to an equi-join on exploded shingles plus
-        # a pair count — identical pairs and identical jaccard values
-        # for every threshold > 0 (a zero-intersection pair scores 0 on
-        # both forms and is dropped by the filter either way; only a
-        # threshold ≤ 0 caller, which wants ALL pairs, still needs the
-        # cross). Guide §2.3: shuffle grams, not documents.
-        #
-        # r9 (VERDICT r8 #5, guide §2.5 skew): CANDIDATE generation is
-        # prefix-filtered (the `jaccard_threshold_join` AllPairs rule)
-        # so one hot shingle shared by f documents no longer yields
-        # f²/2 rows in a single gram's hash bucket. Under one global
-        # rarest-first gram order (df, gram tiebreak), J ≥ t forces
-        # |A∩B| ≥ ⌈t·|x|⌉ per side x, so the (|x| − ⌈t·|x|⌉ + 1)-
-        # prefixes of any qualifying pair must share a gram — PROVABLY
-        # no false negatives, and hot grams (globally most frequent =
-        # last in every doc's order) only enter a doc's prefix when the
-        # doc has almost nothing else, i.e. when the pairs are real
-        # near-duplicates and the output itself is quadratic.
-        # Verification then counts the exact |A∩B| per candidate over
-        # the FULL index, so surfaced jaccard values are identical to
-        # the un-filtered form. The filter threshold is cushioned by
-        # 1e-6 because the FINAL filter applies to round(jac, 6): a
-        # pair whose true J sits within 5e-7 below t still rounds in,
-        # and the cushion keeps it a candidate.
-        from pyspark.sql import Window
-
-        t_eff = max(threshold - 1e-6, 0.0)
-        sizes = sh.select("id", F.size("sh").alias("__n"))
-        idx = sh.select("id", F.explode("sh").alias("__g"))
-        freq = idx.groupBy("__g").agg(F.count(F.lit(1)).alias("__df"))
-        wp = Window.partitionBy("id").orderBy("__df", "__g")
-        pref = (
-            idx.join(freq, "__g")
-            .withColumn("__rnk", F.row_number().over(wp))
-            .join(sizes, "id")
-            .filter(
-                F.col("__rnk")
-                <= F.col("__n")
-                - F.ceil(F.lit(t_eff) * F.col("__n"))
-                + 1
-            )
-            .select("id", "__g", "__n")
-        )
-        cand_pf = (
-            pref.alias("a")
-            .join(
-                pref.alias("b"),
-                (F.col("a.__g") == F.col("b.__g"))
-                & (F.col("a.id") < F.col("b.id"))
-                # size filter: t|A| ≤ |B| ≤ |A|/t is necessary for J ≥ t
-                & (F.col("b.__n") * t_eff <= F.col("a.__n"))
-                & (F.col("a.__n") * t_eff <= F.col("b.__n")),
-            )
-            .select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-            )
-            .distinct()
-        )
-        inter = (
-            cand_pf.join(
-                idx.select(F.col("id").alias("id_a"), "__g"), "id_a"
-            )
-            .join(
-                idx.select(
-                    F.col("id").alias("__idb"), F.col("__g").alias("__gb")
-                ),
-                (F.col("id_b") == F.col("__idb"))
-                & (F.col("__g") == F.col("__gb")),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        jac = F.col("__c") / (F.col("__na") + F.col("__nb") - F.col("__c"))
-        return (
-            inter.join(
-                sizes.select(
-                    F.col("id").alias("id_a"), F.col("__n").alias("__na")
-                ),
-                "id_a",
-            )
-            .join(
-                sizes.select(
-                    F.col("id").alias("id_b"), F.col("__n").alias("__nb")
-                ),
-                "id_b",
-            )
-            .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
     if candidates is None:
         a, b = sh.alias("a"), sh.alias("b")
         cand = a.join(b, F.col("a.id") < F.col("b.id")).select(
@@ -676,12 +584,13 @@ def packed_hamming_pairs(
 ) -> DataFrame:
     """(id, lo, hi) 64-bit signatures (two packed 32-bit halves) →
     (id_a, id_b, hamming) candidate pairs with Hamming ≤ ``max_hamming``
-    — the shared banding engine behind ``simhash_pairs_portable`` and
-    ``multimodal.image_near_dup``: 4×16-bit pigeonhole chunks (a pair
-    within Hamming ≤ 3 must agree on at least one chunk — complete for
-    3; higher ``max_hamming`` still verifies correctly but banding may
-    miss pairs differing in all four chunks), per-chunk equi-join with
-    the ``max_bucket`` degenerate-bucket cap, verify =
+    — the banding engine behind ``simhash_pairs``,
+    ``simhash_pairs_portable`` and ``multimodal.image_near_dup``:
+    4×16-bit pigeonhole chunks (a pair within Hamming ≤ 3 must agree on
+    at least one chunk — complete for 3; higher ``max_hamming`` still
+    verifies correctly but banding may miss pairs differing in all four
+    chunks), per-chunk equi-join with the ``max_bucket``
+    degenerate-bucket cap (``_banded_pairs``), verify =
     ``bit_count(xor)`` on the packed halves (one codegen'd instruction
     per half)."""
     # The signature frame has FOUR consumers (each self-join side plus
@@ -690,58 +599,32 @@ def packed_hamming_pairs(
     # callers that is the full Arrow payload decode ×4 (guide §1.2,
     # the minhash_lsh_pairs precedent). Cached rows are (id, 2 longs).
     sh = sh.persist()
-    chunk_vals = [
-        F.col("lo").bitwiseAND(F.lit(0xFFFF)),
-        F.call_function("shiftright", F.col("lo"), F.lit(16)).bitwiseAND(
-            F.lit(0xFFFF)
-        ),
-        F.col("hi").bitwiseAND(F.lit(0xFFFF)),
-        F.call_function("shiftright", F.col("hi"), F.lit(16)).bitwiseAND(
-            F.lit(0xFFFF)
-        ),
+    chunks = [
+        F.shiftright(F.col(half), shift).bitwiseAND(F.lit(0xFFFF))
+        for half in ("lo", "hi")
+        for shift in (0, 16)
     ]
-    chunked = sh.select(
+    banded = sh.select(
         "id",
         "lo",
         "hi",
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(c).alias("chunk"), v.alias("val"))
-                    for c, v in enumerate(chunk_vals)
+                    F.struct(F.lit(c).alias("band"), v.alias("bucket"))
+                    for c, v in enumerate(chunks)
                 ]
             )
-        ).alias("cc"),
-    ).select("id", "lo", "hi", "cc.chunk", "cc.val")
-    bucket_sizes = chunked.groupBy("chunk", "val").count()
-    chunked = chunked.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket).drop("count"),
-        ["chunk", "val"],
-    )
-    a, b = chunked.alias("a"), chunked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.lo").alias("lo_a"),
-            F.col("a.hi").alias("hi_a"),
-            F.col("b.lo").alias("lo_b"),
-            F.col("b.hi").alias("hi_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+        ).alias("bb"),
+    ).select("id", "lo", "hi", "bb.band", "bb.bucket")
     ham = (
         F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
         + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
     ).cast("int")
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+    return (
+        _banded_pairs(banded, max_bucket)
+        .select("id_a", "id_b", ham.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -763,54 +646,21 @@ def simhash_pairs(
     all-near-identical corpus (or a signature-collapsing feature
     distribution) go quadratic. Inside the cap the Hamming ≤ 3
     completeness guarantee is intact; a dropped bucket is the explicit,
-    sized trade — same contract as the MinHash path."""
+    sized trade — same contract as the MinHash path.
+
+    The 64-bit SimHash splits into unsigned 32-bit halves for
+    ``packed_hamming_pairs``: its four chunks are the same 16-bit ranges,
+    and the two halves' ``bit_count(xor)`` sum to the 64-bit one."""
     df = ensure_min_partitions(df)
-    # four consumers below (both self-join sides + both bucket-cap
-    # aggregates) — persist so the tokenize+simhash pass runs once, not
-    # 4× (guide §1.2; the minhash_lsh_pairs/packed_hamming_pairs
-    # pattern). Cached rows are (id, long).
     sh = df.select(
         F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh")
-    ).persist()
-    chunked = sh.select(
+    ).select(
         "id",
-        "sh",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(3)),
-                lambda c: F.struct(
-                    c.alias("chunk"),
-                    F.call_function("shiftright", F.col("sh"), c * 16)
-                    .bitwiseAND(F.lit(0xFFFF))
-                    .alias("val"),
-                ),
-            )
-        ).alias("cc"),
-    ).select("id", "sh", "cc.chunk", "cc.val")
-    bucket_sizes = chunked.groupBy("chunk", "val").count()
-    chunked = chunked.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket).drop("count"),
-        ["chunk", "val"],
+        F.col("sh").bitwiseAND(F.lit(0xFFFFFFFF)).alias("lo"),
+        F.shiftrightunsigned("sh", 32).alias("hi"),
     )
-    a, b = chunked.alias("a"), chunked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+    return packed_hamming_pairs(
+        sh, max_hamming=max_hamming, max_bucket=max_bucket
     )
 
 
@@ -1533,6 +1383,237 @@ def url_dedup(
     return df.join(winners, id_col, "inner")
 
 
+# --------------------------------------------------------------------------
+# Exact set-similarity joins (prefix filtering)
+# --------------------------------------------------------------------------
+
+def _set_join(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    k: int | None,
+    threshold: float,
+    max_bucket: int | None,
+    need: Callable[[float, Column, Column], Column],
+    score: Callable[[Column, Column, Column], Column],
+    directed: bool,
+    expand: bool = True,
+) -> DataFrame:
+    """(id_a, id_b, value) for every pair of documents whose element-set
+    ``score`` reaches ``threshold`` — the one prefix-filter join (AllPairs
+    / PPJoin: Chaudhuri et al. 2006, Xiao et al. 2008) behind
+    ``jaccard_threshold_join``, ``containment_join`` and the all-pairs
+    ``ngram_jaccard_pairs``. ``value`` is exact and unrounded; rows below
+    ``threshold − 1e-6`` are dropped and each caller applies its own
+    published filter to the rest.
+
+    Elements: ``k=None`` → the distinct whitespace tokens; ``k`` → the
+    distinct word-k shingles (``shingles_from_tokens``: a sub-k document
+    is one whole-text shingle). Empty sets never pair.
+
+    ``score(s, na, nb)`` is the pair's value from its overlap
+    ``s = |A∩B|`` and sizes; ``need(t, na, nb)`` is the least ``s`` with
+    ``score ≥ t``. ``directed=False``: the score is symmetric and each
+    pair comes once with id_a < id_b. ``directed=True``: ``score`` is the
+    value of A inside B and both orders are scored, so a pair can come
+    twice.
+
+    No false negatives. Every representative lists its elements in one
+    global rarest-first order (document frequency, then the element). A
+    qualifying pair has ``s ≥ ⌈t·|A|⌉`` (Jaccard: ``s ≥ t·|A∪B|``;
+    containment: ``s ≥ t·|A|`` by definition), so its first shared
+    element w sits within A's first ``|A| − ⌈t·|A|⌉ + 1`` elements — the
+    prefix. A symmetric score bounds B the same way, so w is in both
+    prefixes and prefix × prefix finds the pair; a directed one bounds
+    only the contained side, so A's prefix probes B's full list. Where
+    the join meets at w, at positions (pa, pb), every shared element
+    follows w on both sides, so ``s ≤ 1 + min(|A|−pa, |B|−pb)``: a row
+    where that bound misses ``need`` cannot be w's, and dropping it loses
+    nothing (the PPJoin positional filter — it cut 10×-sweep Jaccard
+    candidates 1.50 M → 0.55 M). With pa, pb ≥ 1 it also implies the
+    size filters (``t|A| ≤ |B| ≤ |A|/t`` for Jaccard, ``|B| ≥ ⌈t·|A|⌉``
+    for containment). Every bound uses ``t = threshold − 1e-6``, so float
+    error in ``⌈t·|x|⌉`` never prunes a qualifying pair and a caller that
+    filters ``round(value, 6) ≥ threshold`` (true value down to
+    threshold − 5e-7) still gets every pair. Rarest-first order keeps a
+    hot element out of a document's prefix unless the document has
+    almost nothing else, i.e. unless its pairs are real near-duplicates.
+    Verification counts the exact ``s`` over the full index.
+
+    Degenerate-corpus guards (a duplicate clique is quadratic in the
+    OUTPUT, but must not be quadratic in the JOIN):
+
+    * Duplicate collapse: documents with identical sets (md5 of the
+      sorted set) enter the join once, as their min-id representative.
+      With ``expand`` the pairs then re-expand to members: a cross-group
+      pair gives every member pair the representatives' value, and a
+      group of ≥ 2 gives its member pairs ``score`` of identical sets
+      (1.0). Without, only representative pairs return.
+    * ``max_bucket``: an element on more than ``max_bucket`` rows of the
+      probed side (representative prefixes, or full lists when
+      ``directed``) is dropped from candidate generation. With the
+      collapse in front that means > max_bucket distinct near-identical
+      sets; the cap can lose true pairs only there. ``None`` is exact.
+
+    ``docs`` and ``toks`` are persisted: each feeds ≥ 5 consumers, and
+    unpersisted every consumer replays tokenize + shingle + sort + md5
+    over the corpus (measured super-linear at the 10× sweep, 14 s →
+    268 s). Only ids, 16-byte fingerprints and short elements shuffle;
+    element arrays never enter a join (shipping them measured 2× slower
+    at sf0.1). No ``ensure_min_partitions`` (measured): fanning the
+    1-split document scan out to 32 partitions made ``doc_jaccard_join``
+    13.3 → 23.5 s and ``doc_containment_join`` 20.0 → 35.0 s at the 10×
+    sweep — the persists already bound the tokenize stage, and the wide
+    input defeats AQE's advisory sizing for every later exchange."""
+    from pyspark.sql import Window
+
+    t = max(threshold - 1e-6, 0.0)
+    # tokens materialize into a real column first — shingles_from_tokens'
+    # O(len²) HOF-inlining contract (see its docstring)
+    base = df.select(
+        F.col(id_col).alias("id"),
+        whitespace_tokens(F.lower(F.col(text_col))).alias("__toks"),
+    )
+    words = F.col("__toks")
+    elems = F.array_distinct(
+        words if k is None else shingles_from_tokens(words, k)
+    )
+    # \x01 cannot survive whitespace tokenization, so it separates even
+    # space-joined shingles unambiguously
+    docs = base.select(
+        "id",
+        F.md5(F.concat_ws("\x01", F.array_sort(elems))).alias("fp"),
+        F.size(elems).alias("sz"),
+    ).persist()
+    groups = docs.groupBy("fp").agg(
+        F.min("id").alias("rep"),
+        F.count(F.lit(1)).alias("n"),
+        F.max("sz").alias("sz"),
+    )
+    toks = (
+        base.select(
+            "id", F.size(elems).alias("sz"), F.explode(elems).alias("tok")
+        )
+        .join(groups.select(F.col("rep").alias("id")), "id", "semi")
+        .persist()
+    )
+    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    rarest_first = Window.partitionBy("id").orderBy("df", "tok")
+    ranked = toks.join(freq, "tok").withColumn(
+        "rnk", F.row_number().over(rarest_first)
+    )
+    prefix = ranked.filter(
+        F.col("rnk") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1
+    )
+    probe = ranked if directed else prefix
+    if max_bucket is not None:
+        keep = (
+            probe.groupBy("tok")
+            .count()
+            .filter(F.col("count") <= max_bucket)
+            .drop("count")
+        )
+        prefix, probe = prefix.join(keep, "tok"), probe.join(keep, "tok")
+
+    def cols(frame: DataFrame, s: str, *names: str) -> DataFrame:
+        return frame.select(
+            "tok", *[F.col(c).alias(f"{c}_{s}") for c in names]
+        )
+
+    # a symmetric pair is found from both sides, so one order suffices
+    before = (lambda x, y: x != y) if directed else (lambda x, y: x < y)
+    na, nb = F.col("sz_a"), F.col("sz_b")
+    cand = (
+        cols(prefix, "a", "id", "sz", "rnk")
+        .join(cols(probe, "b", "id", "sz", "rnk"), "tok")
+        .filter(
+            before(F.col("id_a"), F.col("id_b"))
+            & (
+                1 + F.least(na - F.col("rnk_a"), nb - F.col("rnk_b"))
+                >= need(t, na, nb)
+            )
+        )
+        # the overlap is order-free: verify each unordered pair once
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
+        .distinct()
+    )
+    shared = (
+        cand.join(cols(toks, "a", "id", "sz"), "id_a")
+        .join(cols(toks, "b", "id", "sz"), ["id_b", "tok"])
+        .groupBy("id_a", "id_b", "sz_a", "sz_b")
+        .agg(F.count(F.lit(1)).alias("s"))
+    )
+
+    def scored(x: str, y: str) -> DataFrame:
+        return shared.select(
+            F.col(f"id_{x}").alias("id_a"),
+            F.col(f"id_{y}").alias("id_b"),
+            score(F.col("s"), F.col(f"sz_{x}"), F.col(f"sz_{y}")).alias(
+                "value"
+            ),
+        )
+
+    pairs = scored("a", "b")
+    if directed:
+        pairs = pairs.unionByName(scored("b", "a"))
+    pairs = pairs.filter(F.col("value") >= t)
+    if not expand:
+        return pairs
+
+    sz = F.col("sz")
+    clones = groups.filter((F.col("n") > 1) & (sz > 0)).select(
+        F.col("rep").alias("id_a"),
+        F.col("rep").alias("id_b"),
+        score(sz, sz, sz).alias("value"),
+    )
+    members = docs.join(groups.select("fp", "rep"), "fp")
+
+    def member(s: str) -> DataFrame:
+        return members.select(
+            F.col("rep").alias(f"id_{s}"), F.col("id").alias(f"m_{s}")
+        )
+
+    ma, mb = F.col("m_a"), F.col("m_b")
+    out = (
+        pairs.unionByName(clones)
+        .join(member("a"), "id_a")
+        .join(member("b"), "id_b")
+        .filter((F.col("id_a") != F.col("id_b")) | before(ma, mb))
+    )
+    if not directed:
+        ma, mb = F.least(ma, mb), F.greatest(ma, mb)
+    return out.select(ma.alias("id_a"), mb.alias("id_b"), "value")
+
+
+def _jaccard_join(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    k: int | None,
+    threshold: float,
+    max_bucket: int | None,
+    expand: bool = True,
+) -> DataFrame:
+    """``_set_join`` for Jaccard: J ≥ t ⇔ |A∩B| ≥ t/(1+t)·(|A|+|B|)."""
+    return _set_join(
+        df,
+        text_col,
+        id_col,
+        k=k,
+        threshold=threshold,
+        max_bucket=max_bucket,
+        need=lambda t, na, nb: F.ceil(F.lit(t / (1.0 + t)) * (na + nb)),
+        score=lambda s, na, nb: s / (na + nb - s),
+        directed=False,
+        expand=expand,
+    )
+
+
 def jaccard_threshold_join(
     df: DataFrame,
     text_col: str = "text",
@@ -1543,21 +1624,13 @@ def jaccard_threshold_join(
     max_bucket: int | None = 1000,
     expand_duplicates: bool = True,
 ) -> DataFrame:
-    """EXACT token-set Jaccard θ-join via prefix filtering (the
-    PPJoin/AllPairs candidate rule — Chaudhuri et al. 2006, Xiao et
-    al. 2008): all pairs with ``J(tokens_a, tokens_b) ≥ threshold``,
-    no false negatives. The deterministic complement of the MinHash
-    path: banding trades recall for speed probabilistically, the
-    prefix filter prunes PROVABLY — J ≥ θ forces |A∩B| ≥ ⌈θ·|x|⌉ for
-    each side x, so the (|x| − ⌈θ·|x|⌉ + 1)-prefixes under one global
-    token order must share a token.
-
-    Ordering tokens rarest-first (global document frequency, token
-    tiebreak) makes prefix tokens maximally selective: candidate fan-in
-    per token ≈ its df, and common words never enter short prefixes.
-    A size filter (θ·|A| ≤ |B| ≤ |A|/θ, necessary for J ≥ θ) rides the
-    candidate join. Verification is exact: shared-token counts per
-    candidate pair → J = shared/(|A|+|B|−shared).
+    """EXACT token-set Jaccard θ-join: all pairs with
+    ``J(tokens_a, tokens_b) ≥ threshold``, no false negatives — the
+    deterministic complement of the MinHash path (banding trades recall
+    for speed probabilistically; the prefix filter prunes provably). The
+    candidate rule is prefix × prefix under ``_set_join`` (whose
+    docstring states the argument), with the positional bound
+    ``⌈θ/(1+θ)·(|A|+|B|)⌉``; the score is ``shared/(|A|+|B|−shared)``.
 
     ``k``: None compares unigram token SETS; ``k ≥ 2`` compares
     distinct word-k-gram (shingle) sets — the right granularity for
@@ -1568,214 +1641,29 @@ def jaccard_threshold_join(
     the '' shingle and pair at J = 1 — the whole-text granularity, not
     a bug); in unigram mode empty token sets never pair.
 
-    Degenerate-corpus guards (true duplicate cliques are inherently
-    quadratic in the OUTPUT, but must not be quadratic in the JOIN):
-
-    * **Exact-duplicate collapse**: documents with identical element
-      SETS (md5 of the sorted set) collapse to one min-id
-      representative BEFORE candidate generation, so 10 K identical
-      docs cost the prefix join exactly one node. Pairs re-expand
-      afterwards through two narrow fingerprint equi-joins —
-      within-group pairs at J = 1, cross-group pairs inherit the
-      representative pair's J (identical sets ⇒ identical J). Set
-      ``expand_duplicates=False`` to return representative pairs only
-      (bounded output even on a pure-duplicate corpus).
-    * **Prefix-bucket cap** (``max_bucket``, the
-      `minhash_lsh_pairs`/`packed_hamming_pairs` convention): prefix
-      tokens shared by more than ``max_bucket`` REPRESENTATIVES are
-      dropped from candidate generation. With the duplicate collapse
-      in front, a bucket that large means >max_bucket genuinely
-      distinct near-identical sets — cap it or go quadratic. The cap
-      can drop true pairs in that pathological regime only; pass
-      ``max_bucket=None`` for the provably-exact mode.
+    Identical sets collapse to one representative before the join and
+    re-expand after it; ``expand_duplicates=False`` returns
+    representative pairs only (bounded output even on a pure-duplicate
+    corpus). ``max_bucket`` caps the representatives sharing one prefix
+    token (the ``minhash_lsh_pairs``/``packed_hamming_pairs``
+    convention); ``max_bucket=None`` is the provably-exact mode.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded
-    to 6. Scale: one df aggregate (vocab-sized), one rank window keyed
-    by doc, the candidate equi-join keyed by capped prefix tokens, the
-    re-expansion keyed by 16-byte set fingerprints — everything narrow
-    ids + short tokens; no all-pairs stage anywhere."""
-    from pyspark.sql import Window
-
+    to 6."""
     if not 0 < threshold <= 1:
         raise ValueError("threshold must be in (0, 1]")
-    words = whitespace_tokens(F.lower(F.col(text_col)))
-    # tokens materialize into a real column first — shingles_from_tokens'
-    # O(len²) HOF-inlining contract (see its docstring).
-    # NOTE (r9, measured): do NOT ensure_min_partitions here. Fanning the
-    # 1-split document scan to 32 partitions made the whole pipeline
-    # SLOWER at 1× and 2× worse at the 10× sweep (doc_jaccard_join 13.3
-    # → 23.5 s, doc_containment_join 20.0 → 35.0 s warm): the persists
-    # bound the single-threaded tokenize stage already, and the wide
-    # input defeats AQE's advisory sizing for every downstream exchange
-    # of this many-exchange pipeline (32-way micro-stages each way).
-    base = df.select(F.col(id_col).alias("id"), words.alias("__toks"))
-    if k is None:
-        elems = F.array_distinct(F.col("__toks"))
-    else:
-        elems = F.array_distinct(shingles_from_tokens(F.col("__toks"), k))
-    # set fingerprint: \x01 can't survive whitespace tokenization, so it
-    # is an unambiguous element separator even for space-joined shingles.
-    # Element arrays themselves NEVER enter a join/shuffle — only the
-    # 16-byte fp and the exploded (id, tok) rows do (the first cut of
-    # this rework shipped the arrays through the reps join and measured
-    # 2× slower at sf0.1).
-    # persist the two hot frames: docs feeds groups/members/rep_fp/dup_fp
-    # (≥5 consumers) and toks feeds freq/sizes/ranked/ta/tb (5 consumers).
-    # Unpersisted, EVERY consumer replays tokenize + shingle + sort + md5
-    # over the whole corpus — measured SUPER-linear at the 10× sweep
-    # (14 s → 268 s, exponent 1.27) vs ~linear persisted. Narrow payloads
-    # either way: (id, 16-byte fp, int) and (id, short token).
-    docs = base.select(
-        "id",
-        F.md5(F.concat_ws("\x01", F.array_sort(elems))).alias("fp"),
-        F.size(elems).alias("ssz"),
-    ).persist()
-    toks_all = base.select("id", F.explode(elems).alias("tok"))
-    groups = docs.groupBy("fp").agg(
-        F.min("id").alias("rep"), F.count(F.lit(1)).alias("n_members")
-    )
-    rep_ids = groups.select(F.col("rep").alias("id"))
-    toks = toks_all.join(rep_ids, "id", "semi").persist()
-    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("id").orderBy("df", "tok")
-    ranked = (
-        toks.join(freq, "tok")
-        .withColumn("rnk", F.row_number().over(w))
-        .join(sizes, "id")
-    )
-    prefix = ranked.filter(
-        F.col("rnk")
-        <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ).select("id", "tok", "sz", "rnk")
-    if max_bucket is not None:
-        # degenerate-bucket guard: candidate fan-in per prefix token is
-        # quadratic in its representative-df; cap it (file convention)
-        bucket_sizes = prefix.groupBy("tok").count()
-        prefix = prefix.join(
-            bucket_sizes.filter(F.col("count") <= max_bucket).drop("count"),
-            "tok",
+    return (
+        _jaccard_join(
+            df,
+            text_col,
+            id_col,
+            k=k,
+            threshold=threshold,
+            max_bucket=max_bucket,
+            expand=expand_duplicates,
         )
-    pb = prefix.select(
-        F.col("id").alias("id_b"),
-        F.col("tok"),
-        F.col("sz").alias("sz_b"),
-        F.col("rnk").alias("rnk_b"),
-    )
-    # PPJoin positional filter (Xiao et al. 2008): J ≥ θ needs overlap
-    # α = ⌈θ/(1+θ)·(|A|+|B|)⌉, and a pair first meeting at prefix
-    # positions (pa, pb) can still share at most
-    # 1 + min(|A|−pa, |B|−pb) tokens (same global order both sides) —
-    # provably no false negatives, and it cut 10×-sweep candidates
-    # 1.50 M → 0.55 M (verify join 103 s → 19 s).
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (prefix.sz + pb.sz_b)
-    )
-    cand = (
-        prefix.join(
-            pb,
-            (prefix.tok == pb.tok)
-            & (prefix.id < pb.id_b)
-            # size filter: θ|A| ≤ |B| ≤ |A|/θ is necessary for J ≥ θ
-            & (pb.sz_b * threshold <= prefix.sz)
-            & (prefix.sz * threshold <= pb.sz_b)
-            & (
-                F.lit(1) + F.least(prefix.sz - prefix.rnk, pb.sz_b - pb.rnk_b)
-                >= alpha
-            ),
-        )
-        .select(F.col("id").alias("id_a"), "id_b")
-        .distinct()
-    )
-    ta = toks.select(F.col("id").alias("id_a"), "tok")
-    tb = toks.select(
-        F.col("id").alias("__idb"), F.col("tok").alias("__tokb")
-    )
-    shared = (
-        cand.join(ta, "id_a")
-        .join(
-            tb,
-            (F.col("id_b") == F.col("__idb"))
-            & (F.col("tok") == F.col("__tokb")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    rep_pairs = (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("shared")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if not expand_duplicates:
-        return rep_pairs.select(
-            "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-        )
-
-    members = docs.select("fp", "id")
-    rep_fp = groups.select(F.col("rep"), F.col("fp"))
-    # cross-group expansion: identical sets within a group ⇒ every
-    # member pair across (A, B) has exactly the representatives' J
-    cross = (
-        rep_pairs.join(
-            rep_fp.select(
-                F.col("rep").alias("id_a"), F.col("fp").alias("__fpa")
-            ),
-            "id_a",
-        )
-        .join(
-            rep_fp.select(
-                F.col("rep").alias("id_b"), F.col("fp").alias("__fpb")
-            ),
-            "id_b",
-        )
-        .join(
-            members.select(F.col("fp").alias("__fpa"), F.col("id").alias("__ma")),
-            "__fpa",
-        )
-        .join(
-            members.select(F.col("fp").alias("__fpb"), F.col("id").alias("__mb")),
-            "__fpb",
-        )
-        .select(
-            F.least("__ma", "__mb").alias("id_a"),
-            F.greatest("__ma", "__mb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    # within-group expansion: exact duplicates pair at J = 1 (skipping
-    # empty sets, which never pair in unigram mode)
-    dup_fp = (
-        groups.join(
-            docs.select("fp", "ssz").dropDuplicates(["fp"]), "fp"
-        )
-        .filter((F.col("n_members") >= 2) & (F.col("ssz") >= 1))
-        .select("fp")
-    )
-    ma = members.join(dup_fp, "fp").select("fp", F.col("id").alias("__ma"))
-    mb = members.join(dup_fp, "fp").select(
-        F.col("fp").alias("__fp2"), F.col("id").alias("__mb")
-    )
-    within = (
-        ma.join(
-            mb,
-            (ma.fp == mb.__fp2) & (F.col("__ma") < F.col("__mb")),
-        )
-        .select(
-            F.col("__ma").alias("id_a"),
-            F.col("__mb").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within).select(
-        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
+        .filter(F.col("value") >= threshold)
+        .select("id_a", "id_b", F.round("value", 6).alias("jaccard"))
     )
 
 
@@ -1796,25 +1684,14 @@ def containment_join(
     scrapes): a short doc fully embedded in a long one has tiny
     Jaccard but containment 1.0, so symmetric dedup never sees it.
 
-    Prefix filter, containment form (Chaudhuri et al. 2006 adapted —
-    the required overlap ⌈θ·|Sa|⌉ depends only on the CONTAINED side):
-    a's (|Sa| − ⌈θ·|Sa|⌉ + 1)-prefix under the global rarest-first
-    token order must share a token with b's FULL token list (b can be
-    arbitrarily large and still contain a, so only the a-side prefix
-    shrinks; the b side is the inverted index). A size filter
-    ``|Sb| ≥ ⌈θ·|Sa|⌉`` rides the candidate join; verification is the
-    exact shared-count divide.
-
-    Guards (file conventions): exact-duplicate collapse — identical
-    element sets (md5 set fingerprint) enter candidate generation once
-    via their min-id representative, then pairs re-expand through the
-    fingerprint (within-group ordered pairs at containment 1.0;
-    cross-group pairs inherit the representative pair's value, both
-    directions carried independently because C is asymmetric) — and a
-    logged ``max_bucket`` cap on the index-token fan-in (dropping
-    tokens whose REPRESENTATIVE document frequency exceeds the cap can
-    lose true pairs only in the >max_bucket-distinct-near-identical-
-    sets regime; ``None`` for provably-exact mode).
+    The candidate rule is a's prefix × b's full token list under
+    ``_set_join`` (whose docstring states the argument): the required
+    overlap ``⌈θ·|Sa|⌉`` bounds only the contained side, since b can be
+    arbitrarily large and still contain a. The score is
+    ``shared/|Sa|``, in both directions. Identical sets collapse to one
+    representative and re-expand (every ordered pair within a group at
+    1.0); ``max_bucket`` caps the index-token fan-in, ``None`` for
+    provably-exact mode.
 
     ``k``: None = unigram token sets (empty sets never pair — a 0-size
     contained side is undefined and is dropped); k ≥ 2 = distinct
@@ -1823,167 +1700,21 @@ def containment_join(
     granularity contract — two empty docs contain each other at 1.0).
 
     Returns (id_a, id_b, containment) — DIRECTED, id_a is the
-    contained side. Scale: same frame shapes as the Jaccard join (16-
-    byte fingerprints + (id, token) rows, never element arrays); the
-    one structural difference is the full-index b side, whose fan-in
-    is exactly what ``max_bucket`` bounds."""
-    from pyspark.sql import Window
-
+    contained side, containment rounded to 6."""
     if not 0 < threshold <= 1:
         raise ValueError("threshold must be in (0, 1]")
-    words = whitespace_tokens(F.lower(F.col(text_col)))
-    # no ensure_min_partitions: see the jaccard_threshold_join note (r9
-    # measured regression — AQE advisory sizing beats a forced fan-out)
-    base = df.select(F.col(id_col).alias("id"), words.alias("__toks"))
-    if k is None:
-        elems = F.array_distinct(F.col("__toks"))
-    else:
-        elems = F.array_distinct(shingles_from_tokens(F.col("__toks"), k))
-    docs = base.select(
-        "id",
-        F.md5(F.concat_ws("\x01", F.array_sort(elems))).alias("fp"),
-        F.size(elems).alias("ssz"),
-    ).persist()
-    toks_all = base.select("id", F.explode(elems).alias("tok"))
-    groups = docs.groupBy("fp").agg(
-        F.min("id").alias("rep"), F.count(F.lit(1)).alias("n_members")
-    )
-    rep_ids = groups.select(F.col("rep").alias("id"))
-    toks = toks_all.join(rep_ids, "id", "semi").persist()
-    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("id").orderBy("df", "tok")
-    ranked = (
-        toks.join(freq, "tok")
-        .withColumn("rnk", F.row_number().over(w))
-        .join(sizes, "id")
-    )
-    # contained-side prefix: overlap ≥ ⌈θ·|Sa|⌉ forces a shared token
-    # in the first |Sa| − ⌈θ·|Sa|⌉ + 1 rarest elements of a
-    prefix = ranked.filter(
-        F.col("rnk")
-        <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ).select("id", "tok", "sz", "rnk")
-    index = ranked.select(
-        F.col("id").alias("id_b"),
-        "tok",
-        F.col("sz").alias("sz_b"),
-        F.col("rnk").alias("rnk_b"),
-    )
-    if max_bucket is not None:
-        bucket_sizes = index.groupBy("tok").count()
-        keep = bucket_sizes.filter(F.col("count") <= max_bucket).drop(
-            "count"
+    return (
+        _set_join(
+            df,
+            text_col,
+            id_col,
+            k=k,
+            threshold=threshold,
+            max_bucket=max_bucket,
+            need=lambda t, na, nb: F.ceil(F.lit(t) * na),
+            score=lambda s, na, nb: s / na,
+            directed=True,
         )
-        prefix = prefix.join(keep, "tok")
-        index = index.join(keep, "tok")
-    # positional filter (the PPJoin argument, containment form): a true
-    # pair's FIRST shared token sits inside a's prefix at (rnk, rnk_b);
-    # every other shared token follows it in the global order on both
-    # sides, so overlap ≤ 1 + min(|Sa|−rnk, |Sb|−rnk_b) — if even that
-    # bound misses ⌈θ·|Sa|⌉ the row cannot witness a true pair, and the
-    # first-shared-token row of a true pair always passes (actual
-    # overlap ≥ ⌈θ·|Sa|⌉ is itself ≤ the bound). Provably no false
-    # negatives.
-    alpha = F.ceil(F.lit(threshold) * prefix.sz)
-    cand = (
-        prefix.join(
-            index,
-            (prefix.tok == index.tok)
-            & (prefix.id != index.id_b)
-            # |Sb| ≥ ⌈θ·|Sa|⌉ is necessary for containment ≥ θ
-            & (index.sz_b >= alpha)
-            & (
-                F.lit(1)
-                + F.least(prefix.sz - prefix.rnk, index.sz_b - index.rnk_b)
-                >= alpha
-            ),
-        )
-        # verify once per UNORDERED pair: the shared count is direction-
-        # free, and per-direction completeness of the prefix rule means
-        # normalizing candidates loses nothing while halving the verify
-        # join for mutual near-dup pairs
-        .select(
-            F.least(F.col("id"), F.col("id_b")).alias("id_a"),
-            F.greatest(F.col("id"), F.col("id_b")).alias("id_b"),
-        )
-        .distinct()
-    )
-    ta = toks.select(F.col("id").alias("id_a"), "tok")
-    tb = toks.select(F.col("id").alias("__idb"), F.col("tok").alias("__tokb"))
-    shared = (
-        cand.join(ta, "id_a")
-        .join(
-            tb,
-            (F.col("id_b") == F.col("__idb"))
-            & (F.col("tok") == F.col("__tokb")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb2 = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    both = shared.join(sa, "id_a").join(sb2, "id_b")
-    fwd = (
-        both.withColumn("containment", F.col("shared") / F.col("sz_a"))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    )
-    bwd = (
-        both.withColumn("containment", F.col("shared") / F.col("sz_b"))
-        .filter(F.col("containment") >= threshold)
-        .select(
-            F.col("id_b").alias("id_a"),
-            F.col("id_a").alias("id_b"),
-            "containment",
-        )
-    )
-    rep_pairs = fwd.unionByName(bwd)
-    members = docs.select("fp", "id")
-    rep_fp = groups.select("rep", "fp")
-    # cross-group expansion: identical sets ⇒ identical containments,
-    # direction preserved (a-side members stay contained sides)
-    cross = (
-        rep_pairs.join(
-            rep_fp.select(F.col("rep").alias("id_a"), F.col("fp").alias("__fpa")),
-            "id_a",
-        )
-        .join(
-            rep_fp.select(F.col("rep").alias("id_b"), F.col("fp").alias("__fpb")),
-            "id_b",
-        )
-        .join(
-            members.select(F.col("fp").alias("__fpa"), F.col("id").alias("__ma")),
-            "__fpa",
-        )
-        .join(
-            members.select(F.col("fp").alias("__fpb"), F.col("id").alias("__mb")),
-            "__fpb",
-        )
-        .select(
-            F.col("__ma").alias("id_a"),
-            F.col("__mb").alias("id_b"),
-            "containment",
-        )
-    )
-    # within-group expansion: identical non-empty sets contain each
-    # other — BOTH ordered pairs at 1.0
-    dup_fp = (
-        groups.join(docs.select("fp", "ssz").dropDuplicates(["fp"]), "fp")
-        .filter((F.col("n_members") >= 2) & (F.col("ssz") >= 1))
-        .select("fp")
-    )
-    ma = members.join(dup_fp, "fp").select("fp", F.col("id").alias("__ma"))
-    mb = members.join(dup_fp, "fp").select(
-        F.col("fp").alias("__fp2"), F.col("id").alias("__mb")
-    )
-    within = ma.join(
-        mb, (ma.fp == mb.__fp2) & (F.col("__ma") != F.col("__mb"))
-    ).select(
-        F.col("__ma").alias("id_a"),
-        F.col("__mb").alias("id_b"),
-        F.lit(1.0).alias("containment"),
-    )
-    return cross.unionByName(within).select(
-        "id_a", "id_b", F.round("containment", 6).alias("containment")
+        .filter(F.col("value") >= threshold)
+        .select("id_a", "id_b", F.round("value", 6).alias("containment"))
     )

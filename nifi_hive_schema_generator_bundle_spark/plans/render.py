@@ -108,6 +108,13 @@ def _quote(name: str) -> str:
     return "`" + sanitize_identifiers(name).replace("`", "``") + "`"
 
 
+def _literal(value: object) -> str:
+    """``value`` as a single-quoted SQL string literal: backslash
+    escaped first, then the quote, so neither can end the literal or
+    turn a following character into an escape."""
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def sanitize_schema(dt: DataType) -> DataType:
     """Structural equivalent of the whole-string sanitization: rewrite
     ``[.-]`` to ``_`` in every struct field name. Used when the schema is
@@ -154,7 +161,7 @@ def render_hive_ddl(
             f"CREATE EXTERNAL TABLE {table} (",
             sanitize_identifiers(render_definition(schema, 1)),
             storage,
-            f"location '{location}';",
+            f"location {_literal(location)};",
         ]
     )
 
@@ -177,7 +184,8 @@ def render_spark_ddl(schema: DataType, table: str, location: str) -> str:
         for f in schema.fields
     )
     return (
-        f"CREATE TABLE {table} (\n  {cols}\n) USING JSON LOCATION '{location}'"
+        f"CREATE TABLE {table} (\n  {cols}\n) USING JSON "
+        f"LOCATION {_literal(location)}"
     )
 
 
@@ -229,22 +237,18 @@ def render_partition_ddl(
     ``partitions`` is [(spec, location), …] with spec an ordered
     {key: value} dict; one statement covers them all (Hive allows
     multiple PARTITION clauses per ALTER). Values render as quoted
-    strings — Hive coerces to the partition column's declared type —
-    with single quotes escaped; keys are quoted like every other
-    identifier (``_quote``)."""
+    strings (``_literal``) — Hive coerces to the partition column's
+    declared type; keys are quoted like every other identifier
+    (``_quote``)."""
     if not partitions:
         return ""
     ine = " IF NOT EXISTS" if if_not_exists else ""
     clauses = []
     for spec, location in partitions:
         kv = ", ".join(
-            _quote(k) + "='" + str(v).replace("'", "\\'") + "'"
-            for k, v in spec.items()
+            f"{_quote(k)}={_literal(v)}" for k, v in spec.items()
         )
-        # same quote-escaping as the spec values — a location containing
-        # a single quote must not break out of the string literal
-        loc = str(location).replace("'", "\\'")
-        clauses.append(f"PARTITION ({kv}) location '{loc}'")
+        clauses.append(f"PARTITION ({kv}) location {_literal(location)}")
     return f"ALTER TABLE {table} ADD{ine} " + " ".join(clauses) + ";"
 
 
