@@ -1,20 +1,44 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-Two tiers (SURVEY north-star / BASELINE.json):
+Seven top-k searches share one output contract (SURVEY north-star /
+BASELINE.json): ``(query_id, id, cosine, rank)``, cosine exact and
+rounded to 6 dp, ranks 1..k per query, ties broken on ascending corpus
+id. The query set is broadcast-small; the corpus never shuffles beyond
+``ensure_min_partitions``.
 
-* **brute_force_topk** — the exact baseline: broadcast the (small) query
-  set against the corpus, JVM-side cosine, per-query top-k via window
-  ``row_number``. At 100 TB the corpus side stays partition-parallel and
-  the only shuffle is the (n_queries × corpus_partitions → k) top-k
-  reduction, which AQE coalesces.
-* **lsh_topk** — random-hyperplane LSH: corpus and queries hash to sign
-  buckets over ``n_planes`` deterministic projections; cosine is computed
-  only within matching buckets (multi-probe by flipping 1 bit recovers
-  recall). Shuffle is bucket-partitioned — near-linear scale path.
+* **brute_force_topk** — the exact baseline: every corpus row is scored
+  against the broadcast queries.
+* **lsh_topk** — random-hyperplane LSH: a query meets the corpus rows in
+  its sign bucket over ``n_planes`` deterministic planes and in every
+  1-bit flip of it (multi-probe). Shuffle is bucket-partitioned.
+* **IVF** — ``ivf_topk`` fits a Lloyd coarse quantizer and probes each
+  query's ``nprobe`` nearest cells inline; ``build_ivf_index`` writes the
+  same index as cell-partitioned parquet, ``ivf_search`` probes it with
+  static partition pruning, ``ivf_index_append`` grows it and
+  ``ivf_index_drift_stats`` says when to rebuild it.
+* **int8** — ``quantized_rerank_topk`` scans int8 codes and keeps
+  ``candidate_k`` rows per query.
+* **PQ** — ``pq_topk`` fits per-subspace Lloyd codebooks and keeps each
+  query's ``candidate_k`` best rows by asymmetric distance (ADC) over m
+  codes per vector; ``build_pq_index`` / ``pq_search`` do the same
+  against codes persisted on disk.
 
-The hyperplanes are generated from a seed with ``xxhash64`` arithmetic —
-deterministic across runs and executors, no driver-side random state to
-broadcast.
+Each search only generates candidates. One private core does the rest:
+``_corpus`` is the corpus projection, ``_cosine_topk`` the exact-cosine
+verify-and-rank tail, ``_top`` the one per-group rank window,
+``_pq_candidates`` the ADC cut, ``_empty_topk`` the empty-corpus result,
+and ``_fit_sample`` + ``_lloyd`` + ``_nearest`` fit and apply both
+quantizers (driver-bounded sample, numpy Lloyd, matmul-form argmin).
+
+Caching: ``quantized_rerank_topk`` caches its int8 corpus and ``pq_topk``
+its encoded corpus, so the query join does not redo the quantization.
+Neither is released, because the returned frame is lazy and still reads
+the cache; a caller frees both with ``spark.catalog.clearCache()`` once
+it has consumed the result.
+
+The LSH hyperplanes are generated from a seed with ``xxhash64``
+arithmetic — deterministic across runs and executors, no driver-side
+random state to broadcast.
 """
 
 from __future__ import annotations
@@ -43,6 +67,91 @@ __all__ = [
     "ann_recall",
     "ranking_metrics",
 ]
+
+
+def _corpus(corpus: DataFrame, vec_col: str, id_col: str, *extra: Column) -> DataFrame:
+    """The ``(c_id, c_vec array<double>, *extra)`` projection every search
+    scores; an under-split input is spread over the cores first."""
+    return ensure_min_partitions(corpus).select(
+        F.col(id_col).alias("c_id"),
+        F.col(vec_col).cast("array<double>").alias("c_vec"),
+        *extra,
+    )
+
+
+def _empty_topk(
+    corpus: DataFrame, queries: DataFrame, *, id_col: str, query_id_col: str
+) -> DataFrame:
+    """No rows, the contract schema: a quantizer fit over an empty corpus
+    has nothing to search, and brute force returns the same."""
+    q_t = queries.schema[query_id_col].dataType.simpleString()
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    return corpus.sparkSession.createDataFrame(
+        [], f"{query_id_col} {q_t}, {id_col} {id_t}, cosine double, rank int"
+    )
+
+
+def _top(df: DataFrame, by: str, order: list[Column], k: int, rank: str) -> DataFrame:
+    """The rows ranked 1..``k`` within each ``by`` group under ``order``,
+    the rank kept in column ``rank`` (``row_number``: no shared ranks)."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _cosine_topk(
+    pairs: DataFrame, k: int, id_col: str, query_id_col: str
+) -> DataFrame:
+    """The verify-and-rank tail of every search: candidate pairs
+    ``(query_id, c_id, c_vec, q_vec)`` scored with exact cosine rounded to
+    6 dp, each query's top ``k`` kept, ties on ascending id."""
+    scored = pairs.select(
+        query_id_col,
+        F.col("c_id").alias(id_col),
+        F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
+    )
+    return _top(
+        scored, query_id_col, [F.col("cosine").desc(), F.col(id_col).asc()], k, "rank"
+    )
+
+
+def _nearest(M, C):
+    """Index of the nearest row of ``C`` for every row of ``M``. Squared
+    distance in matmul form, |x|² − 2x·c + |c|²: an (n, C) BLAS product,
+    where the broadcasting-subtraction form materializes an (n, C, dim)
+    temp — tens of GB per Arrow batch at a realistic C=4096."""
+    d2 = (M * M).sum(1)[:, None] - 2.0 * (M @ C.T) + (C * C).sum(1)[None, :]
+    return d2.argmin(1)
+
+
+def _fit_sample(c: DataFrame, fit_sample: int, seed: int):
+    """The quantizer fit sample: ≤ ``fit_sample`` ``c_vec`` rows of ``c``
+    collected into an (n, dim) numpy matrix, or None when ``c`` is
+    empty. The collect is bounded whatever the corpus size."""
+    import numpy as np
+
+    n = c.count()
+    frac = min(1.0, fit_sample / max(n, 1))
+    sampled = c.sample(frac, seed=seed).limit(fit_sample).collect()
+    if not sampled:
+        return None
+    return np.stack([np.asarray(r["c_vec"]) for r in sampled])
+
+
+def _lloyd(sample, n_cells: int, max_iter: int, rng):
+    """``max_iter`` Lloyd rounds over ``sample``, seeded with
+    ``min(n_cells, len(sample))`` distinct rows drawn from ``rng``; a cell
+    left empty keeps its centroid. A coarse quantizer needs
+    representative centroids, not a converged fit."""
+    cents = sample[
+        rng.choice(len(sample), size=min(n_cells, len(sample)), replace=False)
+    ]
+    for _ in range(max_iter):
+        cell = _nearest(sample, cents)
+        for j in range(len(cents)):
+            pts = sample[cell == j]
+            if len(pts):
+                cents[j] = pts.mean(0)
+    return cents
 
 
 def _plane_component(plane: int, dim_idx: Column, seed: int) -> Column:
@@ -94,26 +203,15 @@ def brute_force_topk(
     """Exact cosine top-k: (query_id, vec_id, cosine, rank).
 
     ``queries`` is broadcast — the small-dim side of the join (SURVEY §4:
-    broadcast small sides, no shuffle of the corpus). Ties break on
-    ascending corpus id for full determinism.
+    broadcast small sides, no shuffle of the corpus). At 100 TB the
+    corpus side stays partition-parallel and the only shuffle is the
+    (n_queries × corpus_partitions → k) top-k reduction, which AQE
+    coalesces.
     """
-    c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias(query_id_col), F.col(vec_col).alias("q_vec")
-    )
-    scored = c.join(F.broadcast(q)).select(
-        query_id_col,
-        F.col("c_id").alias(id_col),
-        F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("q_vec"))
+    return _cosine_topk(
+        _corpus(corpus, vec_col, id_col).join(F.broadcast(q)),
+        k, id_col, query_id_col,
     )
 
 
@@ -123,57 +221,33 @@ def lsh_topk(
     *,
     k: int = 10,
     n_planes: int = 8,
-    multiprobe: bool = True,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: candidates share a hyperplane sign-bucket with
-    the query (plus 1-bit-flip probes when ``multiprobe``), then exact
-    cosine + window rank within candidates only."""
-    c = corpus.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        random_hyperplane_bucket(l2_normalize(F.col(vec_col)), n_planes).alias(
-            "bucket"
+    the query or with one of its ``n_planes`` 1-bit flips (multi-probe
+    recovers the recall a single bucket loses), then exact cosine + rank
+    within candidates only. The probe buckets of one query are distinct,
+    so each (query, corpus row) pair meets at most once."""
+
+    def bucket(vec: str) -> Column:
+        return random_hyperplane_bucket(l2_normalize(F.col(vec)), n_planes)
+
+    c = _corpus(corpus, vec_col, id_col).withColumn("bucket", bucket("c_vec"))
+    probes = F.array_union(
+        F.array(F.col("qb")),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_planes - 1)),
+            lambda p: F.col("qb").bitwiseXOR(
+                F.call_function("shiftleft", F.lit(1).cast("long"), p)
+            ),
         ),
     )
     q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("q_vec"),
-        random_hyperplane_bucket(l2_normalize(F.col(vec_col)), n_planes).alias(
-            "qb"
-        ),
-    )
-    if multiprobe:
-        probes = F.array_union(
-            F.array(F.col("qb")),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_planes - 1)),
-                lambda p: F.col("qb").bitwiseXOR(
-                    F.call_function("shiftleft", F.lit(1).cast("long"), p)
-                ),
-            ),
-        )
-        q = q.select(query_id_col, "q_vec", F.explode(probes).alias("bucket"))
-    else:
-        q = q.withColumnRenamed("qb", "bucket")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .select(
-            query_id_col,
-            F.col("c_id").alias(id_col),
-            F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
-        )
-        .dropDuplicates([query_id_col, id_col])
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        F.col(query_id_col), F.col(vec_col).alias("q_vec"), bucket(vec_col).alias("qb")
+    ).select(query_id_col, "q_vec", F.explode(probes).alias("bucket"))
+    return _cosine_topk(c.join(F.broadcast(q), "bucket"), k, id_col, query_id_col)
 
 
 def _ivf_fit(
@@ -184,60 +258,40 @@ def _ivf_fit(
     fit_sample: int,
     seed: int,
 ):
-    """Lloyd-iterate the coarse quantizer on a driver-bounded sample of
-    ≤ ``fit_sample`` (c_id, c_vec) rows; returns the (C, dim) numpy
-    centroid matrix, or None for an empty corpus."""
+    """The coarse quantizer: Lloyd over the bounded fit sample of ``c``;
+    the (C, dim) numpy centroid matrix, or None for an empty corpus."""
     import numpy as np
 
-    n = c.count()
-    frac = min(1.0, fit_sample / max(n, 1))
-    sampled = c.sample(frac, seed=seed).limit(fit_sample).collect()
-    if not sampled:
+    sample = _fit_sample(c, fit_sample, seed)
+    if sample is None:
         return None
-    sample = np.stack([np.asarray(r["c_vec"]) for r in sampled])
-    rng = np.random.default_rng(seed)
-    cents = sample[
-        rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)
-    ]
+    return _lloyd(sample, n_centroids, max_iter, np.random.default_rng(seed))
 
-    def _nearest(M: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
-        # argmin over squared distance in matmul form: |x|^2 - 2 x·c + |c|^2.
-        # The broadcasting-subtraction form materializes an (n, C, dim)
-        # temp — O(n·C·dim) memory, tens of GB per Arrow batch at a
-        # realistic C=4096 — while this is an (n, C) BLAS product.
-        d2 = (
-            (M * M).sum(1)[:, None]
-            - 2.0 * (M @ C.T)
-            + (C * C).sum(1)[None, :]
-        )
-        return d2.argmin(1)
 
-    for _ in range(max_iter):
-        cell = _nearest(sample, cents)
-        for j in range(len(cents)):
-            pts = sample[cell == j]
-            if len(pts):
-                cents[j] = pts.mean(0)
-    return cents
+def _ivf_cent_df(spark, centroids) -> DataFrame:
+    """Centroid matrix → the (cell, centroid) table the probe join and
+    the persisted index share."""
+    return spark.createDataFrame(
+        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(centroids)],
+        "cell int, centroid array<double>",
+    )
 
 
 def _ivf_assign(c: DataFrame, centroids) -> DataFrame:
     """Assign every (c_id, c_vec) row to its nearest centroid with one
-    Arrow-batched argmax pass; the centroid matrix rides the closure."""
-    import numpy as np
+    Arrow-batched argmin pass; the centroid matrix rides the closure."""
 
     def assign(batches):
+        import numpy as np
         import pandas as pd
 
-        c2 = (centroids * centroids).sum(1)[None, :]
         for pdf in batches:
             M = np.stack(pdf["c_vec"].to_numpy())
-            d2 = (M * M).sum(1)[:, None] - 2.0 * (M @ centroids.T) + c2
             yield pd.DataFrame(
                 {
                     "c_id": pdf["c_id"],
                     "c_vec": pdf["c_vec"],
-                    "cell": d2.argmin(1).astype("int32"),
+                    "cell": _nearest(M, centroids).astype("int32"),
                 }
             )
 
@@ -255,29 +309,25 @@ def _ivf_probe_cells(
     query_id_col: str,
 ) -> DataFrame:
     """(query_id, q_vec, cell) — each query's ``nprobe`` nearest cells,
-    scored against the broadcast centroid table with a JVM distance fold."""
+    scored against the broadcast centroid table with a JVM distance fold
+    (the distributed plan, rather than scoring queries on the driver)."""
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("q_vec")
     )
-    dist_w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cdist").asc(), F.col("cell").asc()
+    scored = q.join(F.broadcast(cent_df)).select(
+        query_id_col,
+        "q_vec",
+        "cell",
+        F.aggregate(
+            F.zip_with("q_vec", "centroid", lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("cdist"),
     )
-    return (
-        q.join(F.broadcast(cent_df))
-        .select(
-            query_id_col,
-            "q_vec",
-            "cell",
-            F.aggregate(
-                F.zip_with("q_vec", "centroid", lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("cdist"),
-        )
-        .withColumn("crank", F.row_number().over(dist_w))
-        .filter(F.col("crank") <= nprobe)
-        .select(query_id_col, "q_vec", "cell")
-    )
+    return _top(
+        scored, query_id_col, [F.col("cdist").asc(), F.col("cell").asc()],
+        nprobe, "crank",
+    ).select(query_id_col, "q_vec", "cell")
 
 
 def build_ivf_index(
@@ -302,22 +352,16 @@ def build_ivf_index(
     assignment is the same single Arrow-batched pass, written instead
     of consumed. Deterministic given (corpus, params): rebuilding
     yields the identical index."""
-    c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
+    c = _corpus(corpus, vec_col, id_col)
     centroids = _ivf_fit(
         c, n_centroids=n_centroids, max_iter=max_iter,
         fit_sample=fit_sample, seed=seed,
     )
     if centroids is None:
         raise ValueError("cannot build an IVF index over an empty corpus")
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _ivf_cent_df(corpus.sparkSession, centroids).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids")
     (
         _ivf_assign(c, centroids)
         # cluster the write by cell: one file per cell-partition instead
@@ -344,7 +388,7 @@ def ivf_index_append(
     pass — the quantizer is never refit, the standard IVF maintenance
     contract) and append them to the cell-partitioned postings.
     Searches pick the new vectors up immediately; returns the number of
-    rows appended.
+    rows appended, counted by the write itself.
 
     The append is ``mode("append")`` into the same ``cell=`` partition
     layout, so partition pruning keeps working and old files are never
@@ -355,6 +399,7 @@ def ivf_index_append(
     between rebuilds, not a replacement). Duplicate ids are the
     caller's concern, as with any append-only store."""
     import numpy as np
+    from pyspark.sql import Observation
 
     cent_rows = spark.read.parquet(f"{path}/centroids").collect()
     if not cent_rows:
@@ -362,19 +407,19 @@ def ivf_index_append(
     cents = np.stack(
         [np.asarray(r["centroid"]) for r in sorted(cent_rows, key=lambda r: r["cell"])]
     )
-    c = ensure_min_partitions(new_vectors).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
-    assigned = _ivf_assign(c, cents)
-    n = assigned.count()
+    obs = Observation()
     (
-        assigned.repartition("cell")
+        _ivf_assign(_corpus(new_vectors, vec_col, id_col), cents)
+        .repartition("cell")
+        # the count rides the write's result stage, where observed
+        # metrics are exact (streaming/_store.write_counted), so the
+        # assignment pass runs once
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .write.mode("append")
         .partitionBy("cell")
         .parquet(f"{path}/postings")
     )
-    return n
+    return int(obs.get["n"])
 
 
 def ivf_index_drift_stats(spark, path: str) -> DataFrame:
@@ -459,17 +504,8 @@ def ivf_search(
     postings = spark.read.parquet(f"{path}/postings").filter(
         F.col("cell").isin(cells)
     )
-    scored = postings.join(F.broadcast(probes), "cell").select(
-        query_id_col,
-        F.col("c_id").alias(id_col),
-        F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _cosine_topk(
+        postings.join(F.broadcast(probes), "cell"), k, id_col, query_id_col
     )
 
 
@@ -491,19 +527,17 @@ def ivf_topk(
     path, complementary to ``lsh_topk``'s hyperplane buckets.
 
     Index: Lloyd-iterate ``n_centroids`` centroids on a driver-bounded
-    sample of ≤ ``fit_sample`` vectors (numpy, milliseconds — a coarse
-    quantizer needs representative centroids, not a converged global fit),
-    then assign every corpus vector to its nearest centroid with one
-    Arrow-batched argmax pass (``mapInPandas``; the centroid matrix rides
+    sample of ≤ ``fit_sample`` vectors (numpy, milliseconds), then
+    assign every corpus vector to its nearest centroid with one
+    Arrow-batched argmin pass (``mapInPandas``; the centroid matrix rides
     the closure). Search: each query probes its ``nprobe`` nearest cells
     and runs exact cosine + rank within those cells only — candidate
     volume ~``nprobe/n_centroids`` of the corpus per query.
     ``nprobe == n_centroids`` degrades gracefully to exact brute force
-    (tested equal to ``brute_force_topk``).
+    (tested equal to ``brute_force_topk``). An empty corpus returns an
+    empty result with the contract schema.
     """
-    c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).cast("array<double>").alias("c_vec")
-    )
+    c = _corpus(corpus, vec_col, id_col)
     centroids = _ivf_fit(
         c,
         n_centroids=n_centroids,
@@ -512,42 +546,14 @@ def ivf_topk(
         seed=seed,
     )
     if centroids is None:
-        # empty corpus -> empty result with the contract schema, matching
-        # brute_force_topk's behavior instead of a numpy stack error
-        spark = corpus.sparkSession
-        q_schema = queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("q_vec")
-        ).schema[query_id_col].dataType.simpleString()
-        id_t = corpus.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [],
-            f"{query_id_col} {q_schema}, {id_col} {id_t}, cosine double, rank int",
-        )
-    assigned = _ivf_assign(c, centroids)
-
-    # each query scores the tiny centroid table driver-side is wasteful in
-    # a distributed plan; do it with the same broadcast-join pattern the
-    # other ANN paths use
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    )
+        return _empty_topk(corpus, queries, id_col=id_col, query_id_col=query_id_col)
     probes = _ivf_probe_cells(
-        queries, cent_df, nprobe=nprobe, vec_col=vec_col,
-        query_id_col=query_id_col,
+        queries, _ivf_cent_df(corpus.sparkSession, centroids), nprobe=nprobe,
+        vec_col=vec_col, query_id_col=query_id_col,
     )
-    scored = assigned.join(F.broadcast(probes), "cell").select(
-        query_id_col,
-        F.col("c_id").alias(id_col),
-        F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _cosine_topk(
+        _ivf_assign(c, centroids).join(F.broadcast(probes), "cell"),
+        k, id_col, query_id_col,
     )
 
 
@@ -575,84 +581,51 @@ def quantized_rerank_topk(
     L2-normalized vector, because the norm cancels inside the ratio —
     and the pair score is ``int_dot·(amax_c/|c|)·(amax_q/|q|)``, a
     monotone cosine proxy. The quantized corpus is built BEFORE the
-    query join and cached: Spark evaluates higher-order-function
-    lambdas interpreted and re-inlines referenced expressions per
-    element, so quantizing after the join would redo O(dim²) work per
-    (corpus × query) pair — the cache is both the "store the int8
-    index once" architecture and the fix."""
+    query join and cached (released only by the caller, see the module
+    docstring): Spark evaluates higher-order-function lambdas
+    interpreted and re-inlines referenced expressions per element, so
+    quantizing after the join would redo O(dim²) work per (corpus ×
+    query) pair — the cache is both the "store the int8 index once"
+    architecture and the fix."""
     from ..functions.vectors import l2_norm
 
     candidate_k = candidate_k or 4 * k
-    amax = F.array_max(F.transform(F.col("c_vec"), F.abs))
-    c = (
-        ensure_min_partitions(corpus)
-        .select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-        )
-        .withColumn("c_amax", amax)
-        .select(
-            "c_id",
-            "c_vec",
+
+    def int8(df: DataFrame, vec: str) -> DataFrame:
+        # (…, {vec}_q codes, {vec}_scale = amax/|vec|); amax is its own
+        # column so the code lambda reads it instead of re-folding it
+        amax = f"{vec}_amax"
+        return df.withColumn(amax, F.array_max(F.transform(vec, F.abs))).select(
+            *df.columns,
             F.transform(
-                "c_vec",
-                lambda x: F.round(x * 127.0 / F.col("c_amax"), 0).cast("int"),
-            ).alias("c_q"),
-            (F.col("c_amax") / l2_norm("c_vec")).alias("c_scale"),
+                vec, lambda x: F.round(x * 127.0 / F.col(amax), 0).cast("int")
+            ).alias(f"{vec}_q"),
+            (F.col(amax) / l2_norm(vec)).alias(f"{vec}_scale"),
         )
-        .cache()
-    )
-    qamax = F.array_max(F.transform(F.col("q_vec"), F.abs))
-    q = (
-        queries.select(
-            F.col(query_id_col).alias(query_id_col),
-            F.col(vec_col).alias("q_vec"),
-        )
-        .withColumn("q_amax", qamax)
-        .select(
-            query_id_col,
-            "q_vec",
-            F.transform(
-                "q_vec",
-                lambda x: F.round(x * 127.0 / F.col("q_amax"), 0).cast("int"),
-            ).alias("q_q"),
-            (F.col("q_amax") / l2_norm("q_vec")).alias("q_scale"),
-        )
+
+    c = int8(_corpus(corpus, vec_col, id_col), "c_vec").cache()
+    q = int8(
+        queries.select(F.col(query_id_col), F.col(vec_col).alias("q_vec")), "q_vec"
     )
     int_dot = F.aggregate(
         F.zip_with(
             # widen BEFORE multiplying: int×int can overflow int under
             # ANSI semantics at these magnitudes only in theory, long is
             # free here
-            F.col("c_q"),
-            F.col("q_q"),
+            F.col("c_vec_q"),
+            F.col("q_vec_q"),
             lambda a, b: a.cast("long") * b.cast("long"),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    approx = int_dot.cast("double") * F.col("c_scale") * F.col("q_scale")
-    wc = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx").desc(), F.col("c_id").asc()
+    approx = int_dot.cast("double") * F.col("c_vec_scale") * F.col("q_vec_scale")
+    cands = _top(
+        c.join(F.broadcast(q)).withColumn("approx", approx),
+        query_id_col, [F.col("approx").desc(), F.col("c_id").asc()],
+        candidate_k, "crank",
     )
-    cands = (
-        c.join(F.broadcast(q))
-        .withColumn("approx", approx)
-        .withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= candidate_k)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        cands.select(
-            query_id_col,
-            F.col("c_id").alias(id_col),
-            F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk(cands, k, id_col, query_id_col)
 
 
 def _pq_fit(
@@ -664,18 +637,15 @@ def _pq_fit(
     fit_sample: int,
     seed: int,
 ):
-    """Per-subspace Lloyd on a driver-bounded sample of ≤ ``fit_sample``
-    L2-NORMALIZED vectors; returns the (m, ks, dim/m) numpy codebook
-    tensor, or None for an empty corpus. Raises if the vector dimension
-    is not divisible by ``m``."""
+    """Per-subspace Lloyd on the bounded fit sample of ``c``, L2-NORMALIZED;
+    returns the (m, ks, dim/m) numpy codebook tensor, or None for an
+    empty corpus. Raises if the vector dimension is not divisible by
+    ``m``."""
     import numpy as np
 
-    n = c.count()
-    frac = min(1.0, fit_sample / max(n, 1))
-    sampled = c.sample(frac, seed=seed).limit(fit_sample).collect()
-    if not sampled:
+    sample = _fit_sample(c, fit_sample, seed)
+    if sample is None:
         return None
-    sample = np.stack([np.asarray(r["c_vec"]) for r in sampled])
     sample = sample / np.maximum(
         np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
     )
@@ -686,23 +656,7 @@ def _pq_fit(
     rng = np.random.default_rng(seed)
     books = []
     for j in range(m):
-        sub = sample[:, j * dsub:(j + 1) * dsub]
-        cents = sub[
-            rng.choice(len(sub), size=min(ks, len(sub)), replace=False)
-        ].copy()
-        for _ in range(max_iter):
-            # same matmul-form argmin as _ivf_fit: (n, ks) BLAS product,
-            # never the (n, ks, dsub) broadcast temp
-            d2 = (
-                (sub * sub).sum(1)[:, None]
-                - 2.0 * (sub @ cents.T)
-                + (cents * cents).sum(1)[None, :]
-            )
-            cell = d2.argmin(1)
-            for g in range(len(cents)):
-                pts = sub[cell == g]
-                if len(pts):
-                    cents[g] = pts.mean(0)
+        cents = _lloyd(sample[:, j * dsub:(j + 1) * dsub], ks, max_iter, rng)
         if len(cents) < ks:
             # tiny corpus: pad with repeats so every code j*ks+c exists
             cents = np.concatenate(
@@ -714,27 +668,20 @@ def _pq_fit(
 
 def _pq_encode(c: DataFrame, books) -> DataFrame:
     """ONE Arrow-batched pass assigning every (c_id, c_vec) row its m
-    codes under the codebook tensor (which rides the closure); bodies
-    stream through numpy argmin matmuls."""
+    codes under the codebook tensor (which rides the closure): one
+    matmul-form argmin per subspace."""
     m, _, dsub = books.shape
 
     def encode(batches):
         import numpy as np
         import pandas as pd
 
-        bnorm2 = [(books[j] * books[j]).sum(1)[None, :] for j in range(m)]
         for pdf in batches:
             M = np.stack(pdf["c_vec"].to_numpy())
             M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
             codes = np.empty((len(M), m), dtype="int32")
             for j in range(m):
-                sub = M[:, j * dsub:(j + 1) * dsub]
-                d2 = (
-                    (sub * sub).sum(1)[:, None]
-                    - 2.0 * (sub @ books[j].T)
-                    + bnorm2[j]
-                )
-                codes[:, j] = d2.argmin(1)
+                codes[:, j] = _nearest(M[:, j * dsub:(j + 1) * dsub], books[j])
             yield pd.DataFrame(
                 {
                     "c_id": pdf["c_id"],
@@ -793,49 +740,28 @@ def _pq_luts(
     )
 
 
-def _pq_adc_expr(m: int, ks: int):
-    """The pure-JVM ADC scan: element_at gathers + a fold over m codes."""
-    return F.expr(
-        f"aggregate(zip_with(codes, sequence(0, {m - 1}),"
-        f" (cd, j) -> element_at(lut, j * {ks} + cd + 1)),"
-        " 0D, (acc, x) -> acc + x)"
-    )
-
-
-def _pq_rank(
-    encoded: DataFrame,
+def _pq_candidates(
+    codes: DataFrame,
     luts: DataFrame,
     *,
     m: int,
     ks: int,
-    k: int,
     candidate_k: int,
-    id_col: str,
     query_id_col: str,
 ) -> DataFrame:
-    """ADC candidate cut → exact-cosine re-rank (the shared tail of the
-    inline and persisted PQ paths). ``encoded`` must carry c_id, c_vec,
-    codes."""
-    wc = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc").desc(), F.col("c_id").asc()
+    """The ADC cut of the inline and persisted PQ paths: each query's
+    top ``candidate_k`` rows of ``codes`` (c_id, codes, …) by asymmetric
+    distance. The scan is pure JVM: ``element_at`` gathers from the
+    broadcast per-query LUT and a fold over the m codes."""
+    adc = F.expr(
+        f"aggregate(zip_with(codes, sequence(0, {m - 1}),"
+        f" (cd, j) -> element_at(lut, j * {ks} + cd + 1)),"
+        " 0D, (acc, x) -> acc + x)"
     )
-    cands = (
-        encoded.join(F.broadcast(luts))
-        .withColumn("adc", _pq_adc_expr(m, ks))
-        .withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= candidate_k)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        cands.select(
-            query_id_col,
-            F.col("c_id").alias(id_col),
-            F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _top(
+        codes.join(F.broadcast(luts)).withColumn("adc", adc),
+        query_id_col, [F.col("adc").desc(), F.col("c_id").asc()],
+        candidate_k, "crank",
     )
 
 
@@ -866,7 +792,9 @@ def pq_topk(
     same bounded-collect contract as the IVF quantizer), then ONE
     Arrow-batched encode pass assigns every corpus vector its m codes
     (codebook tensor rides the closure; bodies stream through numpy
-    argmin matmuls). Search is asymmetric distance computation:
+    argmin matmuls). The encoded corpus is cached, so the query join
+    does not re-encode it; the caller releases it (see the module
+    docstring). Search is asymmetric distance computation:
     the per-query LUT (lut[j·ks + c] = q̂_j · codebook[j][c], m·ks
     doubles) is built DISTRIBUTED by joining the broadcast codebook-row
     table against the queries and folding with ``sort_array`` over
@@ -882,41 +810,24 @@ def pq_topk(
     contract), the corpus never shuffles, and only candidate_k rows
     per query touch the float column again."""
     candidate_k = candidate_k or 4 * k
-    c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
+    c = _corpus(corpus, vec_col, id_col)
     books = _pq_fit(
         c, m=m, ks=ks, max_iter=max_iter, fit_sample=fit_sample, seed=seed
     )
-    spark = corpus.sparkSession
     if books is None:
-        q_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = corpus.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"{query_id_col} {q_t}, {id_col} {id_t}, cosine double, rank int"
-        )
-    dsub = books.shape[2]
-    # encode once, cache: the codes column is the persisted "index";
-    # re-encoding per query join would redo the whole corpus pass
-    encoded = _pq_encode(c, books).cache()
+        return _empty_topk(corpus, queries, id_col=id_col, query_id_col=query_id_col)
     luts = _pq_luts(
         queries,
-        _pq_book_df(spark, books),
-        dsub=dsub,
+        _pq_book_df(corpus.sparkSession, books),
+        dsub=books.shape[2],
         vec_col=vec_col,
         query_id_col=query_id_col,
     )
-    return _pq_rank(
-        encoded,
-        luts,
-        m=m,
-        ks=ks,
-        k=k,
-        candidate_k=candidate_k,
-        id_col=id_col,
-        query_id_col=query_id_col,
+    cands = _pq_candidates(
+        _pq_encode(c, books).cache(), luts, m=m, ks=ks,
+        candidate_k=candidate_k, query_id_col=query_id_col,
     )
+    return _cosine_topk(cands, k, id_col, query_id_col)
 
 
 def build_pq_index(
@@ -938,19 +849,15 @@ def build_pq_index(
     Build once, search many; deterministic given (corpus, params):
     rebuilding yields the identical index (the ``build_ivf_index``
     contract)."""
-    c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
+    c = _corpus(corpus, vec_col, id_col)
     books = _pq_fit(
         c, m=m, ks=ks, max_iter=max_iter, fit_sample=fit_sample, seed=seed
     )
     if books is None:
         raise ValueError("cannot build a PQ index over an empty corpus")
-    spark = corpus.sparkSession
-    _pq_book_df(spark, books).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/codebook"
-    )
+    _pq_book_df(corpus.sparkSession, books).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/codebook")
     (
         _pq_encode(c, books)
         .select("c_id", "codes")
@@ -984,38 +891,17 @@ def pq_search(
         F.max("j").alias("mj"), F.max("cc").alias("mc"),
         F.max(F.size("sub")).alias("dsub"),
     ).collect()[0]
-    m, ks, dsub = mk["mj"] + 1, mk["mc"] + 1, mk["dsub"]
     luts = _pq_luts(
-        queries, book_df, dsub=dsub, vec_col=vec_col,
+        queries, book_df, dsub=mk["dsub"], vec_col=vec_col,
         query_id_col=query_id_col,
     )
-    codes = spark.read.parquet(f"{path}/codes")
-    wc = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc").desc(), F.col("c_id").asc()
-    )
-    cands = (
-        codes.join(F.broadcast(luts))
-        .withColumn("adc", _pq_adc_expr(m, ks))
-        .withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= candidate_k)
-        .select(query_id_col, "c_id", "q_vec")
-    )
-    floats = corpus.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        floats.join(F.broadcast(cands), "c_id")
-        .select(
-            query_id_col,
-            F.col("c_id").alias(id_col),
-            F.round(cosine_similarity("c_vec", "q_vec"), 6).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    cands = _pq_candidates(
+        spark.read.parquet(f"{path}/codes"), luts, m=mk["mj"] + 1,
+        ks=mk["mc"] + 1, candidate_k=candidate_k, query_id_col=query_id_col,
+    ).select(query_id_col, "c_id", "q_vec")
+    return _cosine_topk(
+        _corpus(corpus, vec_col, id_col).join(F.broadcast(cands), "c_id"),
+        k, id_col, query_id_col,
     )
 
 
@@ -1043,11 +929,7 @@ def hard_negatives(
     top-k window so rejected rows never reach the rank exchange. Ties
     break on ascending corpus id for full determinism.
     """
-    c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).alias("c_label"),
-    )
+    c = _corpus(corpus, vec_col, id_col, F.col(label_col).alias("c_label"))
     a = anchors.select(
         F.col(id_col).alias(anchor_id_col),
         F.col(vec_col).alias("a_vec"),
@@ -1066,11 +948,8 @@ def hard_negatives(
             F.round(cosine_similarity("c_vec", "a_vec"), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy(anchor_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _top(
+        scored, anchor_id_col, [F.col("cosine").desc(), F.col(id_col).asc()], k, "rank"
     )
 
 
@@ -1115,14 +994,10 @@ def reciprocal_rank_fusion(
     fused = allr.groupBy(query_id_col, id_col).agg(
         F.sum("__rrf").alias("__score")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__score").desc(), F.col(id_col).asc()
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= k)
-        .select(query_id_col, id_col, "fused_rank")
-    )
+    return _top(
+        fused, query_id_col, [F.col("__score").desc(), F.col(id_col).asc()],
+        k, "fused_rank",
+    ).select(query_id_col, id_col, "fused_rank")
 
 
 def ann_recall(
@@ -1217,13 +1092,11 @@ def ranking_metrics(
         F.min(F.when(F.col("__rel") > 0, F.col("__rank"))).alias("__first"),
     )
     # ideal gains: best possible ordering of the judgments, top k
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("__rel").desc(), F.col(id_col)
-    )
     ideal = (
-        jud.filter(F.col("__rel") > 0)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        _top(
+            jud.filter(F.col("__rel") > 0), query_col,
+            [F.col("__rel").desc(), F.col(id_col)], k, "__rn",
+        )
         .groupBy(query_col)
         .agg(
             F.sum(

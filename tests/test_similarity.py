@@ -319,6 +319,22 @@ def test_ivf_index_build_rejects_empty_corpus(spark, tmp_path):
         build_ivf_index(empty, str(tmp_path / "ivf"))
 
 
+def test_ivf_topk_empty_corpus(spark):
+    from nifi_hive_schema_generator_bundle_spark.operators.similarity import (
+        ivf_topk,
+    )
+
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    q = spark.createDataFrame(
+        [(1, [1.0] * 8)], "query_id long, embedding array<double>"
+    )
+    out = ivf_topk(df, q, k=3)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "query_id", "vec_id", "cosine", "rank",
+    ]
+
+
 # ---------------------------------------------------------------------------
 # ranking_metrics (MRR@k / nDCG@k)
 # ---------------------------------------------------------------------------
@@ -553,6 +569,37 @@ class TestIvfIndexAppend:
         )
         assert res_appended == res_rebuilt
 
+    def test_append_assigns_each_vector_once(self, spark, tmp_path):
+        """The appended-row count rides the write: every new vector passes
+        through the assignment once (a separate count() ran it twice)."""
+        from pyspark.sql.types import ArrayType, DoubleType
+
+        from nifi_hive_schema_generator_bundle_spark.operators.similarity import (
+            build_ivf_index,
+            ivf_index_append,
+        )
+
+        schema = "vec_id long, embedding array<double>"
+        base = spark.createDataFrame(
+            [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(40)], schema
+        )
+        path = str(tmp_path / "ivf")
+        build_ivf_index(base, path, n_centroids=4)
+
+        reads = spark.sparkContext.accumulator(0)
+
+        @F.udf(ArrayType(DoubleType()))
+        def tap(v):
+            reads.add(1)
+            return v
+
+        new = spark.createDataFrame(
+            [(100 + i, [1.0, float(i), 0.5]) for i in range(10)], schema
+        ).withColumn("embedding", tap("embedding"))
+        assert ivf_index_append(spark, path, new) == 10
+        assert reads.value == 10
+        assert spark.read.parquet(f"{path}/postings").count() == 50
+
     def test_missing_index_raises(self, spark, tmp_path):
         from nifi_hive_schema_generator_bundle_spark.operators.similarity import (
             ivf_index_append,
@@ -738,3 +785,91 @@ class TestIvfIndexDriftStats:
         after_max = max(r.drift_ratio_ppm for r in after)
         assert after_max > fresh_max
         assert after_max > 50_000  # the 0.3-shift is a >5% drift somewhere
+
+
+# ---------------------------------------------------------------------------
+# the shared output contract of the seven top-k searches
+# ---------------------------------------------------------------------------
+
+# (doc, v): docs 3/7 and 2/9 carry identical vectors, so their cosines
+# tie for every query; ids are out of order so insertion order can't
+# pass for the ascending-id tie-break
+_CONTRACT_CORPUS = [
+    (7, [1.0, 0.0, 0.0, 0.0]),
+    (3, [1.0, 0.0, 0.0, 0.0]),
+    (5, [0.9, 0.1, 0.0, 0.0]),
+    (9, [0.0, 1.0, 0.0, 0.0]),
+    (2, [0.0, 1.0, 0.0, 0.0]),
+    (8, [0.5, 0.5, 0.1, 0.0]),
+    (4, [0.0, 0.0, 1.0, 0.0]),
+    (6, [0.0, 0.0, 0.0, 1.0]),
+    (1, [-1.0, 0.0, 0.0, 0.0]),
+]
+_CONTRACT_QUERIES = [(100, [1.0, 0.05, 0.0, 0.0]), (200, [0.05, 1.0, 0.0, 0.0])]
+
+
+def _contract_search(name, spark, corpus, queries, path):
+    """Run search ``name`` with parameters that make it exact on the
+    contract corpus (every bucket/cell probed, candidate_k = corpus)."""
+    from nifi_hive_schema_generator_bundle_spark.operators import similarity as s
+
+    cols = dict(vec_col="v", id_col="doc")
+    kw = dict(k=3, query_id_col="qid", **cols)
+    n = len(_CONTRACT_CORPUS)
+    if name == "brute_force_topk":
+        return s.brute_force_topk(corpus, queries, **kw)
+    if name == "lsh_topk":
+        return s.lsh_topk(corpus, queries, n_planes=1, **kw)
+    if name == "ivf_topk":
+        return s.ivf_topk(corpus, queries, n_centroids=2, nprobe=2, **kw)
+    if name == "ivf_search":
+        s.build_ivf_index(corpus, path, n_centroids=2, **cols)
+        return s.ivf_search(spark, path, queries, nprobe=2, **kw)
+    if name == "quantized_rerank_topk":
+        return s.quantized_rerank_topk(corpus, queries, candidate_k=n, **kw)
+    if name == "pq_topk":
+        return s.pq_topk(corpus, queries, m=2, ks=4, candidate_k=n, **kw)
+    s.build_pq_index(corpus, path, m=2, ks=4, **cols)
+    return s.pq_search(spark, path, queries, corpus, candidate_k=n, **kw)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "brute_force_topk",
+        "lsh_topk",
+        "ivf_topk",
+        "ivf_search",
+        "quantized_rerank_topk",
+        "pq_topk",
+        "pq_search",
+    ],
+)
+def test_topk_contract_with_custom_columns(spark, tmp_path, name):
+    import numpy as np
+
+    corpus = spark.createDataFrame(_CONTRACT_CORPUS, "doc long, v array<double>")
+    queries = spark.createDataFrame(_CONTRACT_QUERIES, "qid long, v array<double>")
+    out = _contract_search(name, spark, corpus, queries, str(tmp_path / "idx"))
+    assert out.columns == ["qid", "doc", "cosine", "rank"]
+
+    def cos(a, b):
+        a, b = np.array(a), np.array(b)
+        return round(float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))), 6)
+
+    want = {}
+    for qid, qv in _CONTRACT_QUERIES:
+        top = sorted(_CONTRACT_CORPUS, key=lambda r: (-cos(qv, r[1]), r[0]))[:3]
+        want[qid] = [(doc, cos(qv, v)) for doc, v in top]
+        # the top 3 hold a tie, so the id order below is the tie-break
+        assert want[qid][0][1] == want[qid][1][1]
+    got = {}
+    for r in sorted(out.collect(), key=lambda r: (r["qid"], r["rank"])):
+        got.setdefault(r["qid"], []).append((r["doc"], r["cosine"], r["rank"]))
+    for qid, rows in got.items():
+        assert [rank for _, _, rank in rows] == [1, 2, 3]
+        assert [doc for doc, _, _ in rows] == [doc for doc, _ in want[qid]]
+        assert [cos for _, cos, _ in rows] == pytest.approx(
+            [cos for _, cos in want[qid]], abs=1e-6
+        )
+    assert set(got) == set(want)
