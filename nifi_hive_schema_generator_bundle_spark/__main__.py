@@ -42,13 +42,13 @@ def _session(args):
 
 def cmd_infer(args) -> int:
     from .catalog import register_table
-    from .operators.infer import infer_schema_df
+    from .operators.infer import _read_lines, infer_schema_df
     from .plans.render import render_hive_ddl
 
     spark = _session(args)
     # infer ONCE, then render and (optionally) register from the same
     # schema — rendering and registration are driver-side string work
-    schema = infer_schema_df(spark.read.text(args.input))
+    schema = infer_schema_df(_read_lines(spark, args.input))
     print(
         render_hive_ddl(
             schema, args.table, args.location, drop_if_exists=args.drop_if_exists
@@ -63,10 +63,11 @@ def cmd_infer(args) -> int:
 def cmd_route(args) -> int:
     from pyspark.sql import functions as F
 
+    from .operators.infer import _read_lines
     from .operators.routing import is_valid_json, split_valid
 
     spark = _session(args)
-    lines = spark.read.text(args.input)
+    lines = _read_lines(spark, args.input)
     if args.quarantine:
         lines = lines.cache()
         _, bad = split_valid(lines, "value")
@@ -85,6 +86,7 @@ def cmd_group(args) -> int:
     from pyspark.sql import functions as F
 
     from .catalog import ddl_per_group
+    from .operators.infer import _read_lines
 
     spark = _session(args)
     # raw lines, NOT spark.read.json: a file-wide json read would unify
@@ -92,7 +94,7 @@ def cmd_group(args) -> int:
     # demoting group-local ARRAY/STRUCT columns to STRING. The routing
     # column stays part of each record (the NiFi-EL use-case routes on an
     # attribute of the record itself).
-    lines = spark.read.text(args.input)
+    lines = _read_lines(spark, args.input)
     df = lines.select(
         F.get_json_object("value", f"$.{args.table_col}").alias("__tbl"),
         F.col("value").alias("__payload"),

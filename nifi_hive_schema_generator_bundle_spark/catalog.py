@@ -19,7 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
-from .operators.infer import infer_schema_by_key, infer_schema_df, route_and_infer
+from .operators.infer import (
+    _read_lines,
+    infer_schema_by_key,
+    infer_schema_df,
+    route_and_infer,
+)
 from .plans.render import render_hive_ddl, render_spark_ddl
 
 __all__ = ["infer_ddl", "register_table", "infer_and_register", "ddl_per_group", "write_bucketed"]
@@ -35,7 +40,7 @@ def infer_ddl(
 ) -> str:
     """The minimum end-to-end slice (SURVEY §7): NDJSON path → reference
     lattice schema → reference-format DDL string."""
-    schema = infer_schema_df(spark.read.text(path), "value")
+    schema = infer_schema_df(_read_lines(spark, path), "value")
     return render_hive_ddl(
         schema, table, location, drop_if_exists=drop_if_exists
     )
@@ -47,7 +52,10 @@ def register_table(
     table: str,
     location: str,
 ) -> str:
-    """Drop ``table`` if present, then run the Spark-native DDL; returns it."""
+    """Drop ``table`` if present, then run the Spark-native DDL; returns it.
+
+    The DDL is rendered before the drop, so a schema that cannot make a
+    table raises ``ValueError`` and leaves the existing table in place."""
     ddl = render_spark_ddl(schema, table, location)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     # Spark resolves the relation eagerly at CREATE time and errors on a
@@ -72,7 +80,7 @@ def infer_and_register(
 
     Routing counts and the schema come from one aggregate over one scan
     (``route_and_infer``); registration is driver-side DDL."""
-    good, bad, schema = route_and_infer(spark.read.text(path), "value")
+    good, bad, schema = route_and_infer(_read_lines(spark, path), "value")
     loc = location or path
     hive_ddl = render_hive_ddl(schema, table, loc)
     spark_ddl = register_table(spark, schema, table, loc)

@@ -34,7 +34,7 @@ from __future__ import annotations
 import re
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
@@ -125,20 +125,53 @@ def _parse_name(text: str, i: int) -> tuple[str, int]:
 
 # --- the aggregate ----------------------------------------------------------
 
-def _collect_case_sensitive(df: DataFrame) -> list[Row]:
-    """``df.collect()`` with ``spark.sql.caseSensitive=true``.
+def _clone(spark: SparkSession):
+    """The JVM session the engine's own scans and aggregates run in: a
+    clone of ``spark``'s, because the caller's conf is shared with other
+    threads and is never written. It differs in two settings.
 
-    Spark's variant-schema merge reads the conf when the job runs and,
-    case-insensitively, may fold ``a`` and ``A`` into one field depending
-    on row order; the reference keeps both. The caller's session conf is
-    shared with other threads, so the analyzed plan runs in a clone of
-    the session instead of flipping the caller's conf.
+    * ``spark.sql.caseSensitive=true``. Spark's variant-schema merge reads
+      it when the job runs and, case-insensitively, may fold ``a`` and
+      ``A`` into one field depending on row order; the reference keeps
+      both.
+    * ``spark.sql.files.minPartitionNum`` = 2 × the default parallelism,
+      read per call so that executors added since session start count.
+      Spark cuts files into splits of ``max(openCost, (bytes + openCost)
+      / n)`` (capped at ``maxPartitionBytes``) with n the slot count, and
+      every chunk of a split file starts its own partition, so one file
+      of a few ``openCost`` (4 MiB) becomes n − 1 full chunks and one
+      short one: a slot idles through most of the scan. At 2n the split
+      size halves, down to ``openCost``: the short chunk goes, no slot
+      gets more bytes than before, and an input under 4 MiB stays one
+      split. Spark plans splits from the session that created the
+      relation, so this holds only for a file read in the clone
+      (``_read_lines``).
     """
-    spark = df.sparkSession
     child = spark._jsparkSession.cloneSession()
     child.conf().set("spark.sql.caseSensitive", "true")
+    child.conf().set(
+        "spark.sql.files.minPartitionNum",
+        str(2 * spark.sparkContext.defaultParallelism),
+    )
+    return child
+
+
+def _read_lines(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.text(path)`` with its splits planned in ``_clone``:
+    the engine's NDJSON scans (``catalog``, the CLI) read through this.
+    A temp view made from the frame lands in the clone, out of the
+    caller's sight, so the public ``sources.ndjson.read_ndjson_lines``
+    stays a plain read."""
+    return DataFrame(_clone(spark).read().text(path), spark)
+
+
+def _collect_case_sensitive(df: DataFrame) -> list[Row]:
+    """``df.collect()`` with the analyzed plan re-run in ``_clone``, so the
+    aggregate merges case-sensitively; the scan keeps the splits of the
+    session that read it."""
+    spark = df.sparkSession
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        child, df._jdf.queryExecution().analyzed()
+        _clone(spark), df._jdf.queryExecution().analyzed()
     )
     return DataFrame(jdf, spark).collect()
 

@@ -172,13 +172,19 @@ def render_spark_ddl(schema: DataType, table: str, location: str) -> str:
     Columns render through ``render_compact_type``, so every name, nested
     or not, is sanitized and quoted and the DDL runs on a plain Spark
     build (no Hive SerDe classes needed); pair with a separate ``DROP
-    TABLE IF EXISTS`` statement. Spark and Hive column names are
-    case-insensitive, so keys that differ only in case (``a``/``A``) or
-    that sanitize to one name (``x.y``/``x-y``) fail CREATE with
-    ``COLUMN_ALREADY_EXISTS`` by design.
+    TABLE IF EXISTS`` statement.
+
+    Raises ``ValueError`` for a schema CREATE would reject, so a caller
+    that renders before it drops keeps its table: no columns (an empty
+    or all-invalid input), or two names at one struct level that are
+    one name to Spark and Hive, which compare case-insensitively after
+    sanitization (``a``/``A``, ``x.y``/``x-y``).
     """
     if not isinstance(schema, StructType):
         raise ValueError("top-level schema must be a STRUCT to create a table")
+    if not schema.fields:
+        raise ValueError(f"no columns to create table {table} with")
+    _check_unique_names(schema)
     cols = ",\n  ".join(
         f"{_quote(f.name)} {render_compact_type(f.dataType)}"
         for f in schema.fields
@@ -187,6 +193,25 @@ def render_spark_ddl(schema: DataType, table: str, location: str) -> str:
         f"CREATE TABLE {table} (\n  {cols}\n) USING JSON "
         f"LOCATION {_literal(location)}"
     )
+
+
+def _check_unique_names(dt: DataType) -> None:
+    """Raise ``ValueError`` at the first struct level holding two names
+    that ``_quote`` turns into one case-insensitive column name."""
+    if isinstance(dt, ArrayType):
+        _check_unique_names(dt.elementType)
+    elif isinstance(dt, StructType):
+        seen: dict[str, str] = {}
+        for f in dt.fields:
+            key = sanitize_identifiers(f.name).lower()
+            if key in seen:
+                raise ValueError(
+                    f"fields {seen[key]!r} and {f.name!r} both render as "
+                    f"column {_quote(f.name)}, and Spark compares column "
+                    "names case-insensitively"
+                )
+            seen[key] = f.name
+            _check_unique_names(f.dataType)
 
 
 def render_alter_ddl(old: DataType, new: DataType, table: str) -> list[str]:

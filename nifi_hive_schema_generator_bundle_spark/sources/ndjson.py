@@ -20,7 +20,11 @@ CORRUPT_COL = "_corrupt_record"
 
 
 def read_ndjson_lines(spark: SparkSession, path: str) -> DataFrame:
-    """One string column ``value`` per line — the routing/inference input."""
+    """One string column ``value`` per line: the plain public reader, a
+    frame in ``spark`` itself, so views made from it are the caller's.
+    The engine's own scans (``catalog``, the CLI) read through
+    ``operators.infer._read_lines`` instead, which plans the splits in a
+    session clone; a frame from there would hide its temp views."""
     return spark.read.text(path)
 
 

@@ -82,6 +82,7 @@ def test_infer_ddl_end_to_end(spark):
 
 
 def test_infer_and_register_executes(spark, tmp_path):
+    case_before = spark.conf.get("spark.sql.caseSensitive")
     res = infer_and_register(spark, FIXTURE, "prov_reg", str(tmp_path / "loc"))
     assert res["good_count"] == 5
     assert res["bad_count"] == 0
@@ -89,6 +90,88 @@ def test_infer_and_register_executes(spark, tmp_path):
     cols = spark.table("prov_reg").columns
     assert "eventOrdinal" in cols
     spark.sql("DROP TABLE prov_reg")
+    # the scan and the aggregate ran in a clone; the caller's conf is unwritten
+    assert spark.conf.get("spark.sql.files.minPartitionNum", None) is None
+    assert spark.conf.get("spark.sql.caseSensitive") == case_before
+
+
+def _items(seq) -> list:
+    """A Scala ``Seq`` over Py4J as a list."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _scan_split_bytes(df) -> list[int]:
+    """Bytes per input split of the one file scan in ``df``'s physical
+    plan, as Spark planned them for the session that read the file."""
+    nodes, scans = [df._jdf.queryExecution().sparkPlan()], []
+    while nodes:
+        node = nodes.pop()
+        nodes += _items(node.children())
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            scans.append(node)
+    (scan,) = scans
+    return [
+        sum(f.length() for f in part.files())
+        for part in scan.inputRDD().partitions()
+    ]
+
+
+def test_engine_scan_splits_evenly(spark, tmp_path, monkeypatch):
+    """A single file of a few 4 MiB open costs is read in even splits,
+    not P - 1 full chunks plus a short one, so no task slot idles through
+    the parse; counts and the registered schema are those of a plain
+    read."""
+    path = tmp_path / "wide.ndjson"
+    with open(path, "w", encoding="utf-8") as fh:
+        i = 0
+        while fh.tell() < 16 << 20:
+            fh.write(f'{{"id": {i}, "k{i % 5}": [{i}], "pad": "{"x" * 200}"}}\n')
+            if i % 1000 == 0:
+                fh.write("{not json\n")
+            i += 1
+    size, slots = os.path.getsize(path), spark.sparkContext.defaultParallelism
+    collect, seen = infer_mod._collect_case_sensitive, []
+
+    def capture(df):
+        seen.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(infer_mod, "_collect_case_sensitive", capture)
+    res = infer_and_register(spark, str(path), "split_t", str(tmp_path / "loc"))
+    try:
+        (df,) = seen
+        splits = _scan_split_bytes(df)
+        assert sum(splits) == size
+        assert max(splits) <= max(4 << 20, -(-size // slots)), splits
+        plain = route_and_infer(spark.read.text(str(path)))
+        assert (res["good_count"], res["bad_count"]) == (plain.good, plain.bad)
+        assert canon(spark.table("split_t").schema) == canon(plain.schema)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS split_t")
+
+
+def test_failed_reregistration_keeps_table(spark, tmp_path):
+    """A schema that cannot make a table raises before the DROP, so the
+    registered table survives: an all-invalid or empty input (no
+    columns) and a case pair (one column name to Spark)."""
+    good = tmp_path / "good.ndjson"
+    good.write_text('{"a": 1}\n')
+    loc = str(tmp_path / "loc")
+    infer_and_register(spark, str(good), "keep_t", loc)
+    try:
+        for name, text in [
+            ("bad", "{not json\n[1,\n"),
+            ("empty", ""),
+            ("case", '{"a": 1}\n{"A": 2}\n'),
+        ]:
+            src = tmp_path / f"{name}.ndjson"
+            src.write_text(text)
+            with pytest.raises(ValueError):
+                infer_and_register(spark, str(src), "keep_t", loc)
+            assert spark.catalog.tableExists("keep_t"), name
+            assert spark.table("keep_t").columns == ["a"], name
+    finally:
+        spark.sql("DROP TABLE IF EXISTS keep_t")
 
 
 def test_top_level_array_file_yields_error_definition(spark, tmp_path):
@@ -171,18 +254,14 @@ def _static_invokes(plan) -> list[str]:
     """``functionName()`` of every ``StaticInvoke`` in a Catalyst plan's
     expression trees, walked over Py4J (``try_parse_json`` is rewritten
     to one)."""
-
-    def items(seq):
-        return [seq.apply(i) for i in range(seq.size())]
-
     names, nodes = [], [plan]
     while nodes:
         node = nodes.pop()
-        nodes += items(node.children())
-        exprs = items(node.expressions())
+        nodes += _items(node.children())
+        exprs = _items(node.expressions())
         while exprs:
             e = exprs.pop()
-            exprs += items(e.children())
+            exprs += _items(e.children())
             if e.getClass().getSimpleName() == "StaticInvoke":
                 names.append(e.functionName())
     return names

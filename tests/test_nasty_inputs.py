@@ -122,7 +122,7 @@ def test_drift_report_on_garbage_json_column(spark, nasty):
 # keys from ``_keys`` in tests/test_lattice_properties.py plus a backtick
 # inside a name; case pairs (a/A) and names that sanitize onto each other
 # (x.y/x-y) are left out, since Spark and Hive column names are
-# case-insensitive and CREATE rejects them with COLUMN_ALREADY_EXISTS
+# case-insensitive and ``render_spark_ddl`` rejects them
 AWKWARD_KEYS = ["`", "``", "a`b", ":", ",", ">", "<", " ", "", "OBJECT<",
                 "ARRAY<", "a b", "x: y, z", "DECIMAL(38,0)"]
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.types import ArrayType, NullType, StringType, StructField, StructType
 
 from nifi_hive_schema_generator_bundle_spark.plans.lattice import schema_from_json_lines
@@ -97,6 +98,22 @@ def test_spark_ddl_executable_dialect():
     nested = render_spark_ddl(struct(**{"a`b": struct(**{"x.y z": S})}), "t", "/x")
     assert "`a``b` STRUCT<`x_y z`: STRING>" in nested
     assert ddl.startswith("CREATE TABLE t (") and ddl.endswith("USING JSON LOCATION '/x'")
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        struct(),
+        struct(a=S, A=S),
+        struct(**{"x.y": S, "x-y": S}),
+        struct(top=ArrayType(struct(a=S, A=S))),
+        struct(top=struct(inner=struct(**{"K.1": S, "k-1": S}))),
+    ],
+    ids=["no-columns", "case-pair", "sanitized-pair", "nested-case-pair", "nested-sanitized-pair"],
+)
+def test_spark_ddl_rejects_schemas_create_rejects(schema):
+    with pytest.raises(ValueError):
+        render_spark_ddl(schema, "t", "/x")
 
 
 def test_render_alter_ddl_add_and_change():
