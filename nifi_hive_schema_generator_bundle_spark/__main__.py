@@ -61,24 +61,14 @@ def cmd_infer(args) -> int:
 
 
 def cmd_route(args) -> int:
-    from pyspark.sql import functions as F
-
-    from .operators.infer import _read_lines
-    from .operators.routing import is_valid_json, split_valid
+    from .operators.infer import _observe, _read_lines
 
     spark = _session(args)
-    lines = _read_lines(spark, args.input)
-    if args.quarantine:
-        lines = lines.cache()
-        _, bad = split_valid(lines, "value")
-        bad.write.mode("overwrite").text(args.quarantine)
-    valid = is_valid_json("value").cast("long")
-    counts = lines.agg(
-        F.sum(valid).alias("v"), F.sum(F.lit(1) - valid).alias("i")
-    ).collect()[0]
-    if args.quarantine:
-        lines.unpersist()
-    print(f"valid={counts['v'] or 0} invalid={counts['i'] or 0}")
+    # one scan: the counts are observed on the quarantine (or a noop) write
+    good, bad, _ = _observe(
+        _read_lines(spark, args.input), "value", args.quarantine, "overwrite"
+    )
+    print(f"valid={good} invalid={bad}")
     return 0
 
 

@@ -1,11 +1,9 @@
 """Distributed schema inference (SURVEY §2 O5/O6/O7/O8).
 
-One implementation, one JVM aggregate: ``schema_of_variant_agg`` over
-``routing.parse_valid_json``, each line parsed once. A line is valid
-exactly when that parsed value is non-NULL, so the same value gives the
-routing counts. Spark merges the per-record variant schemas
-associatively (partial aggregates per partition, one tiny final merge),
-and the returned schema string is parsed into a raw lattice shape
+One implementation: ``schema_of_variant_agg`` over the parsed value of
+``routing.valid_json_sql``, each line parsed once. A line is valid exactly
+when that parsed value is non-NULL, so the same value gives the routing
+counts. The returned schema string is parsed into a raw lattice shape
 (``plans.lattice``), which driver consumers take as it is; the public
 functions convert once on return:
 
@@ -18,9 +16,16 @@ The map is exact because STRING is the lattice top for everything but
 bottom: Spark only widens scalars among themselves or gives up to VARIANT
 on an object/array/scalar mix, and the lattice sends both to STRING.
 
-Unkeyed (``route_and_infer``) and keyed (``infer_schema_by_key``)
-inference run the same ``groupBy(*keys).agg`` job, so a routed inference
-is one Spark job, and every key's fold starts from the empty struct.
+The fold is associative, so the unkeyed path (``route_and_infer``, the
+stream's micro-batch) needs no shuffle: it *observes* the three
+aggregates (``Dataset.observe``) on the one write the op runs — the
+invalid lines to a quarantine sink, or a ``noop`` write — which is one
+Spark job of one stage, one task per input split. The observed metrics
+are accumulated in that result stage, so each partition counts once
+under task retry or speculation. The keyed path (``infer_schema_by_key``)
+runs the same projection and aggregates as ``groupBy(key).agg``: a
+partial aggregate per partition and a shuffle of ``partitions × keys``
+tiny rows, never records. Every fold starts from the empty struct.
 Struct fields come out name-sorted; correctness tests compare
 order-insensitively (SURVEY §1.4 rule 6).
 
@@ -34,13 +39,13 @@ from __future__ import annotations
 import re
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
 # ``merge_types`` stays a module attribute: perfbench/spans.py wraps it.
 from ..plans.lattice import merge_raw, merge_types, type_from_dict  # noqa: F401
-from .routing import parse_valid_json
+from .routing import _sql_name, valid_json_sql
 
 __all__ = [
     "Inferred",
@@ -165,49 +170,78 @@ def _read_lines(spark: SparkSession, path: str) -> DataFrame:
     return DataFrame(_clone(spark).read().text(path), spark)
 
 
-def _collect_case_sensitive(df: DataFrame) -> list[Row]:
-    """``df.collect()`` with the analyzed plan re-run in ``_clone``, so the
-    aggregate merges case-sensitively; the scan keeps the splits of the
-    session that read it."""
+def _in_clone(df: DataFrame) -> DataFrame:
+    """``df`` with its analyzed plan re-planned in ``_clone``, so the fold
+    merges case-sensitively; the scan keeps the splits of the session
+    that read it. Anything run on the result runs in the clone; an
+    ``Observation`` must be attached to the result, since the clone's
+    listeners deliver it."""
     spark = df.sparkSession
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         _clone(spark), df._jdf.queryExecution().analyzed()
     )
-    return DataFrame(jdf, spark).collect()
+    return DataFrame(jdf, spark)
 
 
-def _infer(df: DataFrame, column: str, *keys: str) -> list[tuple]:
-    """``(key values, good, bad, raw shape)`` per group of ``keys`` in ONE
-    Spark job (scan → partial aggregate per partition → final merge); no
-    keys is one global group. Counts and shape come from one parsed value
-    per line. Every fold starts from the empty struct like
-    ``CreateHQL.scala:12``: top-level arrays demote to STRING (``"ERROR"``).
-    """
-    projected = df.select(
-        *(F.col(k).cast("string").alias(f"_k{i}") for i, k in enumerate(keys)),
-        parse_valid_json(F.col(column).cast("string")).alias("_v"),
+# The fold over ``_v``: valid count, line count, merged variant schema.
+_AGGS = ("count(_v) AS good", "count(1) AS n", "schema_of_variant_agg(_v) AS s")
+
+
+def _projected(
+    df: DataFrame, column: str, key: str | None = None, line: bool = False
+) -> DataFrame:
+    """``df`` as ``_v`` (the parsed value of ``column`` when valid, else
+    NULL), ``_k`` (``key`` as a string, if given) and ``_line``
+    (``column`` itself, if ``line``), re-planned in ``_clone``. Each
+    column is one SQL text, so building it costs one Py4J call, not one
+    per Column operator."""
+    c = _sql_name(column)
+    cols = [f"{valid_json_sql(f'CAST({c} AS STRING)')} AS _v"]
+    if key is not None:
+        cols.append(f"CAST({_sql_name(key)} AS STRING) AS _k")
+    if line:
+        cols.append(f"{c} AS _line")
+    return _in_clone(df.selectExpr(*cols))
+
+
+def _shape(text: str | None) -> Any:
+    """The raw shape of a ``schema_of_variant_agg`` string, folded from
+    the empty struct like ``CreateHQL.scala:12``: top-level arrays demote
+    to STRING (``"ERROR"``)."""
+    return merge_raw({}, parse_variant_schema(text))
+
+
+def _observe(
+    df: DataFrame, column: str, quarantine: str | None = None, mode: str = "append"
+) -> tuple[int, int, Any]:
+    """``(good, bad, raw shape)`` of ``column`` from ONE Spark job of one
+    stage: the fold is observed on the write of the invalid lines to
+    ``quarantine`` (in ``mode``), byte-identical, or on a ``noop`` write
+    without one."""
+    obs = Observation()
+    out = _projected(df, column, line=quarantine is not None).observe(
+        obs, *map(F.expr, _AGGS)
     )
-    rows = _collect_case_sensitive(
-        projected.groupBy(*projected.columns[:-1]).agg(
-            F.count("_v"), F.count(F.lit(1)), F.schema_of_variant_agg("_v")
-        )
-    )
-    return [
-        (tuple(key), good, total - good, merge_raw({}, parse_variant_schema(t)))
-        for *key, good, total, t in rows
-    ]
+    if quarantine is None:
+        out.write.format("noop").mode("overwrite").save()
+    else:
+        out.where("_v IS NULL").select("_line").write.mode(mode).text(quarantine)
+    m = obs.get
+    return m["good"], m["n"] - m["good"], _shape(m["s"])
 
 
 def _shapes_by_key(df: DataFrame, json_col: str, key_col: str) -> dict:
-    """Raw shape per key with a valid line; a NULL key is kept as ``None``."""
-    rows = _infer(df, json_col, key_col)
-    return {key: shape for (key,), good, _, shape in rows if good}
+    """Raw shape per key with a valid line; a NULL key is kept as ``None``.
+    One ``groupBy(key).agg`` job over the same projection and aggregates
+    as ``_observe``."""
+    rows = _projected(df, json_col, key_col).groupBy("_k").agg(*map(F.expr, _AGGS))
+    return {key: _shape(text) for key, good, _, text in rows.collect() if good}
 
 
 def route_and_infer(df: DataFrame, column: str = "value") -> Inferred:
     """Valid count, invalid count and the lattice schema of ``column`` in
-    ONE Spark job; no valid line gives the empty struct."""
-    ((_, good, bad, shape),) = _infer(df, column)
+    ONE Spark job of one stage; no valid line gives the empty struct."""
+    good, bad, shape = _observe(df, column)
     return Inferred(good, bad, type_from_dict(shape))
 
 
@@ -219,10 +253,10 @@ def infer_schema_df(df: DataFrame, column: str = "value") -> DataType:
 def infer_schema_by_key(
     df: DataFrame, json_col: str, key_col: str
 ) -> dict[str, DataType]:
-    """Reference-lattice inference per routing key: the same one-job
-    aggregate, grouped by ``key_col``. Each partition pre-aggregates one
-    partial schema per key, so the shuffle carries ``partitions × keys``
-    tiny rows, never records.
+    """Reference-lattice inference per routing key: the same projection
+    and aggregates, grouped by ``key_col`` in one job. Each partition
+    pre-aggregates one partial schema per key, so the shuffle carries
+    ``partitions × keys`` tiny rows, never records.
 
     A key with no valid line is absent; a NULL key is kept as ``None``.
     """

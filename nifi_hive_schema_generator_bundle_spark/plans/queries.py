@@ -197,12 +197,15 @@ def route_json_validity_lax(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokener) already stops after the first complete value."""
     from ..operators.routing import is_valid_json, is_valid_json_lax
 
-    events = load_table(spark, sf_dir, "events")
-    content = F.concat(F.col("props"), F.lit("\n!garbage"))
-    line2 = F.split_part(content, F.lit("\n"), F.lit(2))
-    return events.select(
-        is_valid_json_lax(content).cast("long").alias("lax"),
-        is_valid_json(line2).cast("long").alias("line2"),
+    events = load_table(spark, sf_dir, "events").select(
+        F.concat(F.col("props"), F.lit("\n!garbage")).alias("content")
+    )
+    lines = events.select(
+        "content", F.split_part("content", F.lit("\n"), F.lit(2)).alias("l2")
+    )
+    return lines.select(
+        is_valid_json_lax("content").cast("long").alias("lax"),
+        is_valid_json("l2").cast("long").alias("line2"),
     ).agg(
         F.sum("lax").alias("n_lax_valid"),
         F.sum("line2").alias("n_line2_valid"),

@@ -8,8 +8,9 @@ across batches as a raw lattice shape (``plans.lattice``) — a tiny type
 tree, not row state, so no stateful operator / watermark machinery is
 needed for parity. Each batch:
 
-1. one aggregate: valid/invalid counts plus the raw shape of the valid
-   records; invalid lines go to the quarantine sink when one is set
+1. one Spark job of one stage: valid/invalid counts plus the raw shape
+   of the valid records, observed on the append of the invalid lines to
+   the quarantine sink when one is set (a ``noop`` write otherwise)
 2. ``merge_raw`` into the accumulated shape (kept as merged, so a
    bottom later refined to a struct stays a struct)
 3. on drift — ``finalize_raw`` of the shape changed, a change the table
@@ -28,10 +29,10 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType
 
-# ``infer_schema_df`` and ``merge_types`` stay module attributes:
-# perfbench/spans.py wraps them.
-from ..operators.infer import _infer, infer_schema_df  # noqa: F401
-from ..operators.routing import split_valid
+# ``infer_schema_df``, ``split_valid`` and ``merge_types`` stay module
+# attributes: perfbench/spans.py wraps them.
+from ..operators.infer import _observe, infer_schema_df  # noqa: F401
+from ..operators.routing import split_valid  # noqa: F401
 from ..plans.lattice import finalize_raw, merge_raw, merge_types  # noqa: F401
 from ..plans.lattice import type_from_dict, type_to_dict
 from ..plans.render import render_alter_ddl, render_hive_ddl
@@ -66,11 +67,7 @@ class InferenceState:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches += 1
-        ((_, good, bad, shape),) = _infer(batch_df, "value")
-        if bad and self.quarantine_path is not None:
-            split_valid(batch_df, "value").failure.write.mode("append").text(
-                self.quarantine_path
-            )
+        good, bad, shape = _observe(batch_df, "value", self.quarantine_path)
         self.good_rows += good
         self.bad_rows += bad
         old, self._shape = self._shape, merge_raw(self._shape, shape)

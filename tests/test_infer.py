@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructType
 
 from nifi_hive_schema_generator_bundle_spark.catalog import infer_and_register, infer_ddl
@@ -130,13 +131,13 @@ def test_engine_scan_splits_evenly(spark, tmp_path, monkeypatch):
                 fh.write("{not json\n")
             i += 1
     size, slots = os.path.getsize(path), spark.sparkContext.defaultParallelism
-    collect, seen = infer_mod._collect_case_sensitive, []
+    in_clone, seen = infer_mod._in_clone, []
 
     def capture(df):
         seen.append(df)
-        return collect(df)
+        return in_clone(df)
 
-    monkeypatch.setattr(infer_mod, "_collect_case_sensitive", capture)
+    monkeypatch.setattr(infer_mod, "_in_clone", capture)
     res = infer_and_register(spark, str(path), "split_t", str(tmp_path / "loc"))
     try:
         (df,) = seen
@@ -268,20 +269,96 @@ def _static_invokes(plan) -> list[str]:
 
 
 def test_one_json_parse_per_row(spark, monkeypatch):
-    """Routing counts and schema share one parsed value: the optimized
-    plan of the unkeyed and the keyed path calls the JSON parser once.
-    Plan-only, no job runs; the check reads expression nodes, not plan
-    text."""
+    """Routing counts and schema share one parsed value: on the unkeyed
+    and the keyed path, the optimized plan of the projection the engine
+    re-plans in its clone, under the aggregates it folds that projection
+    with, calls the JSON parser once. Plan-only, no job runs; the check
+    reads expression nodes, not plan text."""
     plans = []
 
     def plan_only(df):
-        plans.append(_static_invokes(df._jdf.queryExecution().optimizedPlan()))
+        folded = df.agg(*map(F.expr, infer_mod._AGGS))
+        plans.append(_static_invokes(folded._jdf.queryExecution().optimizedPlan()))
         raise _Planned
 
-    monkeypatch.setattr(infer_mod, "_collect_case_sensitive", plan_only)
+    monkeypatch.setattr(infer_mod, "_in_clone", plan_only)
     df = spark.createDataFrame([("k", '{"a": 1}')], "k string, value string")
     with pytest.raises(_Planned):
         route_and_infer(df, "value")
     with pytest.raises(_Planned):
         infer_schema_by_key(df, "value", "k")
     assert [p.count("parseJson") for p in plans] == [1, 1], plans
+
+
+def _traced(spark, fn):
+    """``fn()`` under its own job group: its result, the number of jobs
+    and of stages run, and the node names of each SQL execution's final
+    physical plan (read from the status stores once every listener
+    event is delivered)."""
+    sc, sql = spark.sparkContext, spark._jsparkSession.sharedState().statusStore()
+    group = f"traced-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "traced")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    # the store keeps only the newest executions; ours are among the last
+    count = sql.executionsCount()
+    plans = [
+        [n.name() for n in _items(sql.planGraph(ex.executionId()).allNodes())]
+        for ex in _items(sql.executionsList(max(count - 20, 0), 20))
+        if any(ex.jobs().contains(j) for j in jobs)
+    ]
+    return result, len(jobs), stages, plans
+
+
+def test_unkeyed_inference_is_one_stage(spark):
+    """The unkeyed fold is observed on one write: one job of one stage,
+    no Exchange, and exact counts, also when the input already carries a
+    shuffle and when it is empty."""
+    lines = ['{"a": 1}', '{"a": [2], "b": {"c": null}}', "junk", "5", " [1]", ""]
+    df = spark.createDataFrame([(x,) for x in lines], "value string")
+    want = route_and_infer(df.coalesce(1))
+    assert (want.good, want.bad) == (3, 3)
+    res, jobs, stages, plans = _traced(spark, lambda: route_and_infer(df))
+    assert (jobs, stages) == (1, 1)
+    assert plans and not [n for p in plans for n in p if "Exchange" in n], plans
+    assert res == want
+    shuffled = route_and_infer(df.repartition(3))
+    assert (shuffled.good, shuffled.bad) == (3, 3)
+    assert canon(shuffled.schema) == canon(want.schema)
+    empty = spark.createDataFrame([], "value string")
+    assert route_and_infer(empty) == (0, 0, StructType([]))
+
+
+def test_quarantine_rides_the_inference_scan(spark, tmp_path, capsys):
+    """With a quarantine sink, the stream's micro-batch and the CLI
+    ``route`` run one job each: the counts and the schema are observed on
+    the write of the invalid lines, which land byte-identical."""
+    from nifi_hive_schema_generator_bundle_spark.__main__ import main
+    from nifi_hive_schema_generator_bundle_spark.streaming.infer_stream import (
+        InferenceState,
+    )
+
+    lines = ['{"a": 1}', " not json ", '{"b": [1]}', "[1,"]
+    src = tmp_path / "in.ndjson"
+    src.write_text("\n".join(lines) + "\n")
+    state = InferenceState("q_t", "/x", quarantine_path=str(tmp_path / "qs"))
+    batch = spark.read.text(str(src))
+    _, jobs, _, _ = _traced(spark, lambda: state.process_batch(batch, 0))
+    assert jobs == 1
+    assert (state.good_rows, state.bad_rows) == (2, 2)
+    assert sorted(state.schema.fieldNames()) == ["a", "b"]
+    qcli = tmp_path / "qc"
+    rc, jobs, _, _ = _traced(
+        spark, lambda: main(["route", str(src), "--quarantine", str(qcli)])
+    )
+    assert (rc, jobs) == (0, 1)
+    assert "valid=2 invalid=2" in capsys.readouterr().out
+    for sink in (tmp_path / "qs", qcli):
+        got = sorted(r.value for r in spark.read.text(str(sink)).collect())
+        assert got == [" not json ", "[1,"], sink
