@@ -4,7 +4,7 @@ The reference consumes NiFi FlowFile content — NDJSON by convention; here
 the equivalents are file-based DataFrame sources. Line framing is the text
 source's native behavior (no per-row split logic anywhere), and the JSON
 parse path offers both the permissive corrupt-record mode (O3 routing) and
-raw-line mode (feeding the exact-lattice inference).
+raw-line mode (feeding ``operators.infer``, which parses each line once).
 """
 
 from __future__ import annotations

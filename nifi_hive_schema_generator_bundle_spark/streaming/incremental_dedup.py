@@ -25,19 +25,16 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.textfns import normalize_ws
-from ..sources.formats import overwrite_partitions
 from ._store import (
-    check_batch_id,
     compact_store,
-    finish_pending_fold,
+    open_history,
     start_batch_stream,
-    write_counted,
+    write_dedup_batch,
 )
 
 __all__ = [
@@ -68,51 +65,29 @@ def dedup_batch_against_store(
     Reusable from any ``foreachBatch`` (batch pipelines can drive it in a
     loop with their own batch numbering).
     """
-    spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return 0
+    history = open_history(batch_df.sparkSession, store_dir, batch_id)
     fps = _fingerprints(batch_df, text_col)
     # within-batch first occurrence: min id per fingerprint
     firsts = fps.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-    batch_first = fps.join(firsts, ["__fp", id_col], "left_semi")
-    # complete any crashed compaction before binding the store's
-    # file listing (stale pre-cut partitions would shadow the fold)
-    finish_pending_fold(spark, store_dir)
-    try:
-        store = spark.read.parquet(store_dir)
-    except AnalysisException as e:
-        # ONLY a missing store means "first batch" — any other analysis
-        # error (wrong path, schema-less dir) must surface, not silently
-        # disable dedup
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        store = None
-    if store is not None:
-        check_batch_id(spark, store_dir, batch_id)
-        # strictly-earlier batches only: replays of THIS batch must not
-        # see their own previously-written fingerprints
-        history = store.filter(F.col("batch_id") < batch_id).select("__fp")
-        survivors = batch_first.join(history, "__fp", "left_anti")
-    else:
-        survivors = batch_first
-    # persist: the corpus write and the fingerprint write both consume
-    # survivors; the kept count rides the corpus write via observe (r9:
-    # the dedicated count job is gone — see _store.write_counted)
+    survivors = fps.join(firsts, ["__fp", id_col], "left_semi")
+    if history is not None:
+        survivors = survivors.join(
+            history[0].select("__fp"), "__fp", "left_anti"
+        )
+    # both writes consume survivors
     survivors = survivors.persist()
     try:
-        out = survivors.drop("__fp").withColumn(
-            "ingest_batch", F.lit(batch_id)
+        return write_dedup_batch(
+            batch_id,
+            survivors.drop("__fp"),
+            out_dir,
+            fmt,
+            {store_dir: survivors.select("__fp").distinct()},
         )
-        n = write_counted(out, out_dir, ["ingest_batch"], fmt=fmt)
-        new_fps = (
-            survivors.select("__fp")
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        overwrite_partitions(new_fps, store_dir, ["batch_id"], fmt="parquet")
     finally:
         survivors.unpersist()
-    return n
 
 
 def compact_fingerprint_store(

@@ -20,18 +20,12 @@ Jaccard estimator — against the signature store, (4) docs whose best
 historical match ≥ threshold are dropped, (5) true survivors append to
 the corpus and BOTH stores, partitioned by ``batch_id``.
 
-Replay safety is `_store.py`'s store contract, as in
-``incremental_dedup``: a replayed batch filters history to
-``batch_id < N`` (never sees its own half-written rows) and rewrites
-its own partitions, so retries converge to the same bytes.
-
-Scale shape: history never rescans text — the band join shuffles
-(band, bucket, id) triples and the verify join ships one 512 B signature
-per CANDIDATE, not per document. The degenerate-bucket cap drops
-hot band buckets (> ``max_bucket`` historical members) from candidate
-generation, the same explicit trade as the batch LSH operator. Store
-growth is linear in survivors; fold small per-batch partitions with
-``compact_near_dedup_store`` periodically.
+Steps (2)-(5) and the store fold are the shared dedup-batch steps of
+`_store.py`, which also carry the replay contract. History never
+rescans text: the band join shuffles (band, bucket, id) triples and the
+verify join ships one 512 B signature per CANDIDATE, not per document.
+Store growth is linear in survivors; fold small per-batch partitions
+with ``compact_near_dedup_store`` periodically.
 """
 
 from __future__ import annotations
@@ -49,13 +43,12 @@ from ..operators.dedup import (
     minhash_signatures,
     signature_agreement,
 )
-from ..sources.formats import overwrite_partitions
 from ._store import (
-    check_batch_id,
-    compact_store,
-    read_store,
+    band_history_lookup,
+    compact_set_stores,
+    open_history,
     start_batch_stream,
-    write_counted,
+    write_dedup_batch,
 )
 
 __all__ = [
@@ -83,27 +76,38 @@ def near_dedup_batch_against_store(
 ) -> int:
     """One micro-batch of the incremental near-dedup; returns survivors
     kept. Reusable from any ``foreachBatch`` or a batch loop with its
-    own monotonic batch numbering.
+    own monotonic batch numbering. ``k``, ``num_perm``, ``bands`` and
+    ``hash_fn`` make the band keys, so they stay FIXED for the life of
+    a store: it records them on first use and every later batch raises
+    on a mismatch (``_store.check_store_config``), because mismatched
+    keys would never collide with history again. ``threshold`` and
+    ``max_bucket`` may vary per batch.
 
     ``hash_fn="md5"`` switches signatures AND band keys to the
     engine-portable forms (the `minhash_lsh_pairs` contract), making the
     whole multi-batch run — within-batch CC dedup, store band join,
     signature-agreement verify — replayable by a SQL oracle
     (`doc_incremental_near_dedup` in plans/queries.py)."""
-    spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return 0
-
     bands_dir = f"{store_dir}/bands"
     sigs_dir = f"{store_dir}/sigs"
-    sig_store = read_store(spark, sigs_dir)
-    check_batch_id(spark, sigs_dir, batch_id)
+    history = open_history(
+        batch_df.sparkSession,
+        store_dir,
+        batch_id,
+        ("bands", "sigs"),
+        {
+            "k": int(k),
+            "num_perm": int(num_perm),
+            "bands": int(bands),
+            "hash_fn": hash_fn,
+        },
+    )
 
-    # (1) within-batch near-dedup, first (min-id) occurrence wins.
-    # Signatures are computed ONCE for the whole batch and shared with
-    # the LSH pair stage (sigs=) — the shingling + num_perm permutation
-    # scan is the expensive stage, and the earlier version paid it
-    # twice (once inside minhash_lsh_pairs, once for the store).
+    # (1) within-batch near-dedup, first (min-id) occurrence wins. The
+    # signatures are computed once and shared with the LSH pair stage
+    # (sigs=): the shingling + permutation scan is the expensive stage
     full_sig = minhash_signatures(
         batch_df, text_col, id_col, k=k, num_perm=num_perm, hash_fn=hash_fn
     ).persist()
@@ -121,121 +125,52 @@ def near_dedup_batch_against_store(
     )
     batch_kept = dedup_keep_min(batch_df, pairs, id_col)
 
-    # (2)+(3) candidates vs strictly-earlier history, verified on
-    # signature agreement — no text ever leaves the batch
-    portable = hash_fn == "md5"
+    # (2)+(3) candidates vs history, verified on signature agreement —
+    # no text ever leaves the batch
     sig = full_sig.join(
         batch_kept.select(F.col(id_col).alias("id")), "id", "semi"
     ).persist()
     my_bands = band_keys(
-        sig, bands=bands, num_perm=num_perm, portable=portable
+        sig, bands=bands, num_perm=num_perm, portable=hash_fn == "md5"
     ).select("id", "band", "bucket")
     survivors_ids = sig.select("id")
-    band_store = read_store(spark, bands_dir)
-    if band_store is not None and sig_store is not None:
-        hist_bands = band_store.filter(F.col("batch_id") < batch_id).select(
-            "band", "bucket", F.col("id").alias("hist_id")
-        )
-        hot = (
-            hist_bands.groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") > max_bucket)
-            .select("band", "bucket")
-        )
-        hist_bands = hist_bands.join(hot, ["band", "bucket"], "anti")
-        cand = (
-            my_bands.join(hist_bands, ["band", "bucket"])
-            .select("id", "hist_id")
-            .distinct()
-        )
-        hist_sigs = sig_store.filter(F.col("batch_id") < batch_id).select(
-            F.col("id").alias("hist_id"), F.col("sig").alias("hist_sig")
-        )
-        dup_ids = (
-            cand.join(sig, "id")
-            .join(hist_sigs, "hist_id")
-            .filter(
-                signature_agreement("sig", "hist_sig") >= F.lit(threshold)
-            )
-            .select("id")
-            .distinct()
+    if history is not None:
+        _, _, dup_ids = band_history_lookup(
+            *history, my_bands, sig, "sig", signature_agreement,
+            threshold, max_bucket,
         )
         survivors_ids = survivors_ids.join(dup_ids, "id", "anti")
 
+    # (4)+(5) corpus append + both stores
     survivors_ids = survivors_ids.persist()
     try:
-        # (4)+(5) corpus append + both stores, all partition-overwritten.
-        # r9 (VERDICT r8 #2): the three per-batch writes were the bulk
-        # of the store protocol's job floor — they now run CONCURRENTLY
-        # from a small driver thread pool (guide §2.6: independent jobs
-        # back-fill each other's stragglers; at sf0.1 each write is a
-        # handful of tiny tasks, so overlap collapses three job floors
-        # into ~one), and the kept count rides the signature write via
-        # Dataset.observe instead of its own job (_store.write_counted).
-        # Safety is unchanged: all three are idempotent dynamic
-        # partition overwrites of batch N's own partitions, their
-        # mutual ORDER was never part of the replay contract (a crash
-        # between any two leaves partials that the checkpoint replay
-        # rewrites byte-identically, and the monotonic guard tolerates
-        # batch_id == store max for exactly this reason), and the
-        # cached frames they share are computed once — Spark's
-        # BlockInfoManager serializes concurrent first readers of a
-        # cached block, so the history verify lineage does not
-        # re-execute per writer.
-        out = batch_kept.join(
-            survivors_ids.withColumnRenamed("id", id_col), id_col, "semi"
-        ).withColumn("ingest_batch", F.lit(batch_id))
-        kept_sigs = sig.join(survivors_ids, "id", "semi")
-        new_bands = (
-            band_keys(
-                kept_sigs, bands=bands, num_perm=num_perm, portable=portable
-            )
-            .select("id", "band", "bucket")
-            .withColumn("batch_id", F.lit(batch_id))
+        return write_dedup_batch(
+            batch_id,
+            batch_kept.join(
+                survivors_ids.withColumnRenamed("id", id_col), id_col, "semi"
+            ),
+            out_dir,
+            fmt,
+            {
+                bands_dir: my_bands.join(survivors_ids, "id", "semi"),
+                sigs_dir: sig.join(survivors_ids, "id", "semi"),
+            },
         )
-        new_sigs = kept_sigs.withColumn("batch_id", F.lit(batch_id))
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_out = pool.submit(
-                overwrite_partitions, out, out_dir, ["ingest_batch"], fmt=fmt
-            )
-            f_sigs = pool.submit(
-                write_counted, new_sigs, sigs_dir, ["batch_id"]
-            )
-            f_bands = pool.submit(
-                overwrite_partitions, new_bands, bands_dir, ["batch_id"]
-            )
-            f_out.result()
-            f_bands.result()
-            n = f_sigs.result()
     finally:
         sig.unpersist()
         full_sig.unpersist()
         survivors_ids.unpersist()
-    return n
 
 
 def compact_near_dedup_store(
     spark, store_dir: str, *, target_files: int = 4
 ) -> tuple[int, int]:
     """Fold BOTH sub-stores' per-batch partitions below the current
-    maximum into one (``_store.compact_store``; cadence 50-100 suffices
-    here per the round-6 30-batch sweep). Rows are carried verbatim:
-    each (id, band, bucket) / (id, sig) row is unique by construction,
-    so the fold is a rewrite, not an aggregate, and candidate
-    generation and verification read the same sets afterwards. Each
-    sub-store recovers from a crashed fold independently. Returns
+    maximum into one (``_store.compact_set_stores``; cadence 50-100
+    suffices here per the SCALE.md 30-batch sweep). Returns
     (band_rows, sig_rows) folded — (0, 0) means nothing was worth
     folding."""
-    def fold(rows: DataFrame) -> DataFrame:
-        return rows.repartition(target_files)  # set rewrite, not aggregate
-
-    return (
-        compact_store(spark, f"{store_dir}/bands", fold),
-        compact_store(spark, f"{store_dir}/sigs", fold),
-    )
+    return compact_set_stores(spark, store_dir, ("bands", "sigs"), target_files)
 
 
 def run_incremental_near_dedup(

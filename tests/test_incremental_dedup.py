@@ -108,3 +108,17 @@ def test_checkpoint_reset_against_existing_store_raises(spark, tmp_path):
         dedup_batch_against_store(
             _batch(spark, [(2, "b")]), 0, store_dir=store, out_dir=out
         )
+
+
+def test_empty_store_dir_is_first_batch(spark, tmp_path):
+    # a store_dir created ahead of the first write (or left empty by a
+    # crashed one) holds no data files yet: batch 0 has no history
+    store, out = tmp_path / "store", str(tmp_path / "out")
+    store.mkdir()
+    n = dedup_batch_against_store(
+        _batch(spark, [(1, "alpha"), (2, "beta")]),
+        0, store_dir=str(store), out_dir=out,
+    )
+    assert n == 2
+    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
+    assert kept == {1, 2}

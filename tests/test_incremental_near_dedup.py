@@ -131,3 +131,24 @@ def test_compact_near_dedup_store_preserves_history_semantics(spark, tmp_path):
     assert kept == [1, 2, 3, 5]
     # ...and compaction below the minimum partition count is a no-op
     assert compact_near_dedup_store(spark, str(tmp_path / "empty")) == (0, 0)
+
+
+def test_banding_config_pinned_per_store(spark, tmp_path):
+    """The band keys are the index: a batch with other banding params
+    would never collide with history again, so an exact duplicate of a
+    stored doc would be kept. The store records its geometry on first
+    use and refuses a mismatch."""
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    near_dedup_batch_against_store(
+        _batch(spark, [(1, BASE)]), 0, store_dir=store, out_dir=out
+    )
+    with pytest.raises(ValueError, match="fixed for the life"):
+        near_dedup_batch_against_store(
+            _batch(spark, [(2, BASE)]), 1,
+            store_dir=store, out_dir=out, bands=8,
+        )
+    # the original geometry is still accepted, and catches the duplicate
+    n = near_dedup_batch_against_store(
+        _batch(spark, [(2, BASE)]), 1, store_dir=store, out_dir=out
+    )
+    assert n == 0
